@@ -494,6 +494,9 @@ _OPS = st.lists(
         st.tuples(st.just("delete"), st.integers(0, 49)),
         st.tuples(st.just("delete_keys"), st.integers(0, 49)),
         st.tuples(st.just("merge"), st.integers(0, 49)),
+        st.tuples(st.just("compact"), st.just(0)),
+        st.tuples(st.just("compact_binpack"), st.just(0)),
+        st.tuples(st.just("zorder_rewrite"), st.integers(1, 3)),
     ),
     min_size=1,
     max_size=4,
@@ -504,20 +507,30 @@ _OPS = st.lists(
 @given(ops=_OPS)
 def test_signed_feed_replay_reconstructs_head_for_any_history(ops):
     """For ANY sequence of appends / windowed UPDATEs / predicate and
-    set-based DELETEs / MERGEs on a CDF-enabled table, replaying the
-    signed change feed over v0 must reproduce the head snapshot exactly
-    — the invariant every CDC consumer (MV, replica, index) relies on."""
+    set-based DELETEs / MERGEs / rewrites (OPTIMIZE, bin-pack, ZORDER)
+    on a CDF-enabled, bloom-tracked table, replaying the signed change
+    feed over v0 must reproduce the head snapshot exactly — the
+    invariant every CDC consumer (MV, replica, index) relies on — and
+    the head must equal a pure-Python ``{k: v}`` model of the ops."""
     import uuid
 
-    from argodb_mapreduce_spark.sources.versioned import delete_keys
+    from argodb_mapreduce_spark.sources.versioned import (
+        compact,
+        compact_binpack,
+        delete_keys,
+        zorder_rewrite,
+    )
 
     spark = spark_ref["spark"]
     p = os.path.join(tmp_ref["dir"], f"h{uuid.uuid4().hex[:8]}")
     df = spark.range(0, 50).select(
         F.col("id").alias("k"), (F.col("id") * 10).cast("long").alias("v")
     )
-    versioned_write(df, p)
+    # Bloom-tracked: every rewrite must carry the untouched segments'
+    # blooms forward and rebuild them for the new segments.
+    versioned_write(df, p, bloom_columns=["k"])
     enable_change_data_feed(p)
+    model = {k: k * 10 for k in range(50)}
     nxt = [50]
     for kind, arg in ops:
         if kind == "append":
@@ -529,20 +542,28 @@ def test_signed_feed_replay_reconstructs_head_for_any_history(ops):
                 p,
                 mode="append",
             )
+            model.update({k: k * 10 for k in range(a, a + 5 + arg)})
             nxt[0] = a + 5 + arg
         elif kind == "update":
             update_where(
                 spark, p, [("k", ">=", arg), ("k", "<", arg + 7)],
                 {"v": F.col("v") + 1},
             )
+            for k in model:
+                if arg <= k < arg + 7:
+                    model[k] += 1
         elif kind == "delete":
             delete_where(spark, p, [("k", ">=", arg), ("k", "<", arg + 3)])
+            for k in range(arg, arg + 3):
+                model.pop(k, None)
         elif kind == "delete_keys":
             delete_keys(
                 spark, p,
                 spark.createDataFrame([(arg,), (arg + 1,), (9999,)], ["k"]), "k",
             )
-        else:  # merge: update existing window + insert fresh keys
+            for k in (arg, arg + 1):
+                model.pop(k, None)
+        elif kind == "merge":  # update existing window + insert fresh keys
             a = nxt[0]
             src = spark.range(arg, arg + 4).select(
                 F.col("id").alias("k"), F.lit(-5).cast("long").alias("v")
@@ -552,8 +573,18 @@ def test_signed_feed_replay_reconstructs_head_for_any_history(ops):
                 )
             )
             merge_upsert(spark, p, src, "k")
+            model.update({k: -5 for k in range(arg, arg + 4)})
+            model.update({k: -7 for k in range(a, a + 3)})
             nxt[0] = a + 3
+        elif kind == "compact":
+            compact(spark, p)
+        elif kind == "compact_binpack":
+            compact_binpack(spark, p, target_bytes=1 << 30)  # all bins pack
+        else:
+            zorder_rewrite(spark, p, "k", "v", n_segments=arg)
     head_v = _read_manifest(p)[-1]["version"]
+    head = snapshot_read(spark, p, head_v).select("k", "v")
+    assert sorted(tuple(r) for r in head.collect()) == sorted(model.items())
     if head_v == 0:
         return  # every op no-opped (possible when deletes hit erased keys)
     feed = change_feed(spark, p, 0, head_v)
@@ -565,7 +596,6 @@ def test_signed_feed_replay_reconstructs_head_for_any_history(ops):
         F.col("_change_type").isin("delete", "update_preimage")
     ).select("k", "v")
     replayed = v0.select("k", "v").unionByName(adds).exceptAll(removes)
-    head = snapshot_read(spark, p, head_v).select("k", "v")
     assert replayed.exceptAll(head).count() == 0
     assert head.exceptAll(replayed).count() == 0
 
