@@ -93,11 +93,8 @@ def parse_filter(filter_str: str) -> tuple[str, str]:
 #: stages every fixture in an explicit untimed pre-pass, so the timed
 #: query bodies can only ever *read* pre-staged inputs — the
 #: staging-vs-computation boundary is enforced by code, not by builder
-#: discipline. ``_FIXTURES_FRESH`` memoizes (src, marker) pairs already
-#: verified fresh in this process so the timed region normally performs
-#: zero staleness checks at all (not even a stat).
+#: discipline.
 _TIMED_REGION = False
-_FIXTURES_FRESH: set[tuple[str, str]] = set()
 
 
 class FixtureBuildInTimedRegion(RuntimeError):
@@ -130,11 +127,9 @@ def fixture_stale(src: str, marker: str) -> bool:
     Callers treat a True return as "build now": inside a
     ``timed_region()`` that would mean staging work on the measurement
     clock, so it raises ``FixtureBuildInTimedRegion`` instead (r15
-    structural boundary). Fresh results are memoized per (src, marker)
-    so repeat checks inside the timed region cost nothing."""
-    key = (src, marker)
-    if key in _FIXTURES_FRESH:
-        return False
+    structural boundary). Nothing is memoized: a source regenerated in
+    the same process must still be seen, and a check costs two
+    ``stat`` calls."""
     if not os.path.exists(marker):
         stale = True
     else:
@@ -150,7 +145,6 @@ def fixture_stale(src: str, marker: str) -> bool:
                 "region; the untimed staging pre-pass must build it first"
             )
         return True
-    _FIXTURES_FRESH.add(key)
     return False
 
 

@@ -14,6 +14,17 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+#: AQE coalescing floor pinned on driver-created sessions: Spark's own
+#: default. An r15 x10-corpus A/B showed a global 1k floor is the wrong
+#: altitude — it un-serializes CPU-expanding joins (minhash verify
+#: 27 -> 17.8 s) but taxes byte-proportional stages
+#: (similarity_cosine_topk 4.9 -> 6.2 s). The byte-coalescing that
+#: narrows dedup_minhash_verified's verify stage at x10 is still open;
+#: the fix belongs in the plan (pair-count-derived stage width), not in
+#: a global floor. Experiments can change it at runtime with
+#: ``spark.conf.set``.
+_AQE_MIN_PARTITION_SIZE = "1m"
+
 
 def get_spark(app_name: str = "argodb_mapreduce_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
@@ -24,17 +35,6 @@ def get_spark(app_name: str = "argodb_mapreduce_spark", cpus: int | None = None)
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE coalescing floor, env-parameterised. Kept at Spark's 1m
-        # default: an r15 x10-corpus A/B showed a global 1k floor is
-        # the wrong altitude — it un-serializes CPU-expanding joins
-        # (minhash verify 27 -> 17.8 s) but taxes byte-proportional
-        # stages (similarity_cosine_topk 4.9 -> 6.2 s). The expansion
-        # pathology is fixed at the PLAN level in the one place it
-        # exists (dedup_minhash_verified's width-pinned verify join).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"),
-        )
         .config("spark.sql.session.timeZone", "UTC")
         # INT96 (the legacy default) carries NO parquet footer min/max,
         # which defeats both row-group skipping and the versioned store's
@@ -77,10 +77,9 @@ def tune_session(spark: SparkSession) -> SparkSession:
         pass
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
-        # AQE coalescing floor — see get_spark above (default = Spark's).
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"),
+            _AQE_MIN_PARTITION_SIZE,
         )
     except Exception:
         pass  # immutable in some deployments; AQE default-on in Spark 3.2+

@@ -24,6 +24,18 @@ container, so this module implements the same idea minimally:
 At 100 TB this is how all lake formats scale: the manifest read is
 O(versions), planning lists only pinned segments, and Catalyst prunes
 columns/rows inside them as usual.
+
+UPDATE, MERGE, OPTIMIZE (:func:`compact`), bin-pack and ZORDER mutate
+through one copy-on-write cycle. Each verb *selects* the segments it
+must rewrite (stats or bloom pruning, touched-file discovery, bin
+packing, or all of them), *reads their live rows* through the pending
+deletion vector (:func:`_read_live`) and *transforms* them; the rest
+is shared. :func:`_stage_segment` writes the result to a staging dir
+(plain, Hive-partitioned or re-encrypting, constraint-checked), and
+:func:`_commit_rewrite` harvests footer stats and blooms for the new
+segments, carries the kept segments' ledgers and deletion vector
+forward (:func:`_carry_forward`, which the DV-only DELETEs use too)
+and publishes the entry with an OCC-gated :func:`_commit_entry`.
 """
 
 from __future__ import annotations
@@ -1180,13 +1192,6 @@ def _to_logical_frame(df: DataFrame, cmap: dict) -> DataFrame:
         and c not in phys_to_log
     ]
     return df.drop(*dropped) if dropped else df
-
-
-def _retired_physicals(path: str) -> list[str]:
-    """Physical names of DROPPED columns — still present in old data
-    files, so no new logical column may reuse them (Delta avoids the
-    collision with field ids; this store forbids it)."""
-    return _read_properties(path).get("column_mapping_retired", [])
 
 
 def _extend_column_mapping(path: str, new_cols) -> dict[str, str]:
@@ -2358,9 +2363,7 @@ def snapshot_read(
     # columns. Uniform-schema versions keep the plain read — no extra
     # footer work on the common path (Delta reads schema from its log
     # for the same reason).
-    schemas = entry.get("schemas", {})
-    known = [json.dumps(schemas[s], sort_keys=True) for s in all_names if s in schemas]
-    evolved = len(set(known)) > 1
+    evolved = _schemas_diverge(entry, all_names)
     if not names:  # fully pruned: preserve the version's FULL schema
         # (mergeSchema over all segments when evolved — an empty frame
         # built from one pre-evolution segment would lack added columns
@@ -3505,15 +3508,166 @@ def _anti_join_dv(
     return probe.join(F.broadcast(dv), cond, "left_anti")
 
 
-def _apply_deletion_vector(spark: SparkSession, path: str, dv_name: str, df: DataFrame) -> DataFrame:
-    """DV anti-join for a DIRECT flat file scan (attaches ``_metadata``
-    itself — only resolvable on a non-union scan)."""
-    probe = df.select(
-        "*",
-        F.col("_metadata.file_path").alias("__fp"),
-        F.col("_metadata.row_index").alias("__ri"),
+# ---------------------------------------------------------------------------
+# The copy-on-write rewrite cycle (see the module docstring)
+# ---------------------------------------------------------------------------
+
+
+def _schemas_diverge(entry: dict, segs) -> bool:
+    """True when the schema ledger records more than one schema among
+    ``segs``: their read needs mergeSchema (older segments NULL-backfill
+    added columns); uniform segments keep the plain read."""
+    ledger = entry.get("schemas", {})
+    known = {json.dumps(ledger[s], sort_keys=True) for s in segs if s in ledger}
+    return len(known) > 1
+
+
+def _read_live(
+    spark: SparkSession, path: str, entry: dict, segs, keep_pos: bool = False,
+    encryption_key: str | None = None, predicates=(),
+) -> DataFrame:
+    """The LIVE rows of ``segs`` at ``entry``: a schema-evolution-aware
+    scan read THROUGH the entry's deletion vector, so tombstoned rows are
+    neither matched again nor resurrected by a rewrite. ``keep_pos``
+    keeps the ``__fp``/``__ri`` row identity on the result (DELETE
+    harvests matched positions from it)."""
+    dv_name = entry.get("dv")
+    df = _read_segment_dirs(
+        spark, path, segs, entry, evolved=_schemas_diverge(entry, segs),
+        with_pos=keep_pos or bool(dv_name), encryption_key=encryption_key,
+        predicates=predicates,
     )
-    return _anti_join_dv(spark, path, dv_name, probe).drop("__fp", "__ri")
+    if dv_name:
+        df = _anti_join_dv(spark, path, dv_name, df)
+        if not keep_pos:
+            df = df.drop("__fp", "__ri")
+    return df
+
+
+def _stage_segment(
+    spark: SparkSession, path: str, frame: DataFrame, latest: dict,
+    encryption_key: str | None = None, partition_by=(),
+    check_constraints: bool = False, cleanup=(),
+) -> str:
+    """Write ``frame`` (PHYSICAL names) to a fresh staging dir under the
+    table root and return it; :func:`_commit_rewrite` publishes it under
+    the commit lock (an unlocked final-name dir would be a crash orphan
+    to a concurrent :func:`versioned_write`, which rmtrees it).
+
+    An encrypted ``latest`` takes the re-encrypting keyed writer (fresh
+    AES-GCM data keys, the same encrypted-column set), a plaintext one
+    the native writer, Hive-partitioned by ``partition_by``.
+    ``check_constraints`` validates the table's CHECK constraints on the
+    read-back segment — or on the frame before a keyed write: staged
+    encrypted bytes cannot be re-read natively. On failure the staged
+    dir and the ``cleanup`` dirs are removed."""
+    import shutil
+
+    staged = _stage_dir(path)
+    try:
+        if latest.get("encrypted"):
+            if check_constraints:
+                _check_constraints_frame(spark, path, lambda: frame)
+            _write_segment_keyed(
+                frame, staged, encryption_key, enc_cols=latest.get("enc_columns")
+            )
+        else:
+            writer = frame.write.mode("errorifexists")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(staged)
+            if check_constraints:
+                _check_constraints(spark, path, staged)
+    except BaseException:
+        for d in (staged, *cleanup):
+            shutil.rmtree(d, ignore_errors=True)
+        raise
+    return staged
+
+
+def _carry_forward(entry: dict, latest: dict, carried) -> None:
+    """Copy ``latest``'s ledgers for the ``carried`` segments (kept by
+    name, neither read nor written) onto the derived ``entry``: stats,
+    schemas, blooms, partition layout, the deletion vector they still
+    need, and the encryption markers. Min/max and blooms that overstate
+    a segment's live rows keep pruning conservative, never wrong."""
+    entry["stats"] = {
+        s: v for s, v in latest.get("stats", {}).items() if s in carried
+    }
+    for key in ("schemas", "bloom"):
+        if latest.get(key):
+            entry[key] = {s: v for s, v in latest[key].items() if s in carried}
+    if pb := _carry_partition_by(latest, carried):
+        entry["partition_by"] = pb
+    if latest.get("dv") and carried:
+        entry["dv"] = latest["dv"]
+    _carry_encryption(entry, latest)
+
+
+def _commit_rewrite(
+    spark: SparkSession, path: str, latest: dict, carried, staged: dict,
+    fields: dict, partition_by=(), renames=None, metrics: bool = False,
+    plaintext_stats: bool = False,
+) -> int:
+    """Harvest, carry forward and commit a copy-on-write rewrite of
+    ``latest``; returns the new version.
+
+    ``staged`` maps each new segment name to ``(staged_dir, frame)``
+    (the frame's schema goes to the ledger); ``carried`` segments stay
+    by name; ``fields`` are the verb's own entry keys and ``renames``
+    its other staged dirs (a CDC sidecar). New segments get fresh footer
+    min/max (plus partition-column bounds when written with
+    ``partition_by``) and blooms for the tracked columns, so a rewrite
+    never turns data skipping off. Encrypted segments record neither —
+    the manifest would leak value ranges and membership — except, with
+    ``plaintext_stats``, a COLUMN-encrypted table's plaintext columns.
+    ``metrics`` records the write accounting (files, rows, bytes).
+
+    The commit is OCC-gated (:func:`_commit_entry`): the rewrite derived
+    from the version read, so a moved head (say a concurrent DELETE)
+    must abort instead of being silently undone. Any failure removes
+    every staged dir."""
+    import shutil
+
+    encrypted = bool(latest.get("encrypted"))
+    renames = {**(renames or {}), **{d: seg for seg, (d, _f) in staged.items()}}
+    try:
+        entry = {
+            "version": latest["version"] + 1,
+            "segments": [*carried, *staged],
+            **fields,
+        }
+        _carry_forward(entry, latest, carried)
+        bloom_cols = sorted({c for b in latest.get("bloom", {}).values() for c in b})
+        written = {"num_files": 0, "num_rows": 0, "bytes": 0}
+        for seg, (d, frame) in staged.items():
+            schema = {f.name: f.dataType.simpleString() for f in frame.schema.fields}
+            entry.setdefault("schemas", {})[seg] = schema
+            if partition_by:
+                entry.setdefault("partition_by", {})[seg] = list(partition_by)
+            if not encrypted:
+                stats, seg_metrics = _segment_stats_and_metrics(d)
+                stats.update(_partition_stats(d, partition_by, schema))
+            else:
+                enc_cols = plaintext_stats and latest.get("enc_columns")
+                stats = _segment_stats_plaintext(d, exclude=enc_cols) if enc_cols else None
+                seg_metrics = _segment_file_metrics_keyless(d) if metrics else {}
+            if stats is not None:
+                entry["stats"][seg] = stats
+            for k in written:
+                written[k] += seg_metrics.get(k, 0)
+            if bloom_cols and not encrypted:
+                entry.setdefault("bloom", {})[seg] = build_segment_bloom(
+                    spark, d, bloom_cols
+                )
+        if metrics:
+            entry["metrics"] = written
+        _commit_entry(path, latest["version"], entry, renames=renames)
+    except BaseException:
+        for d in renames:
+            shutil.rmtree(d, ignore_errors=True)
+        raise
+    return entry["version"]
 
 
 def versions(path: str) -> list[int]:
@@ -3673,66 +3827,22 @@ def compact(
         # the ~target_file_mb sizing contract would silently degrade to
         # input-file-count parallelism — pay one shuffle to widen.
         compacted = compacted.repartition(want)
-    # Stage, never materialize data-{version} pre-commit: an unlocked
-    # final-name dir is a crash orphan to a concurrent versioned_write
-    # (which would rmtree it); _commit_entry publishes under the lock.
-    staged = _stage_dir(path)
-    schema = {f.name: f.dataType.simpleString() for f in compacted.schema.fields}
-    if encrypted:
-        # Re-ENCRYPTING rewrite (r14): fresh AES-GCM data keys per file,
-        # plaintext footer; stats and blooms are intentionally absent
-        # (plaintext min/max in the manifest would leak value ranges —
-        # the same trade every write path makes for encrypted segments).
-        # COLUMN-encrypted tables keep their plaintext columns' stats:
-        # keyless-subset pruning must survive OPTIMIZE.
-        seg_metrics = _write_segment_keyed(
-            compacted, staged, encryption_key,
-            enc_cols=latest.get("enc_columns"),
-        )
-        stats = (
-            _segment_stats_plaintext(
-                staged, exclude=latest["enc_columns"]
-            )
-            if latest.get("enc_columns")
-            else {}
-        )
-    else:
-        writer = compacted.write.mode("errorifexists")
-        if keep_layout:
-            writer = writer.partitionBy(*keep_layout)
-        writer.parquet(staged)
-        stats, seg_metrics = _segment_stats_and_metrics(staged)
-        if keep_layout:
-            stats.update(_partition_stats(staged, keep_layout, schema))
-    entry = {
-        "version": version,
-        "segments": [segment],
-        "compacted_from": latest["version"],
-        # Delta's OPTIMIZE contract: the commit rearranges bytes, the
-        # LIVE rows are identical — CDF consumers skip it.
-        "data_change": False,
-        # The rewritten segment gets fresh footer stats — compaction
-        # must not silently turn off data skipping for the table.
-        "stats": {segment: stats} if stats else {},
-        "metrics": seg_metrics,
-        # One uniform rewritten segment: record its schema so later
-        # appends keep type enforcement (an absent ledger would skip it).
-        "schemas": {segment: schema},
-    }
-    if encrypted:
-        _carry_encryption(entry, latest)
-    if keep_layout:
-        entry["partition_by"] = {segment: list(keep_layout)}
-    # Rebuild blooms for whichever columns the table was tracking, so
-    # compaction keeps point-lookup skipping alive too (encrypted
-    # segments track none — the bloom would leak membership).
-    bloom_cols = sorted({c for b in latest.get("bloom", {}).values() for c in b})
-    if bloom_cols and not encrypted:
-        entry["bloom"] = {segment: build_segment_bloom(spark, staged, bloom_cols)}
-    # Compaction rewrote exactly the rows of the version it read: a
-    # moved head (e.g. a concurrent DELETE) would be silently undone if
-    # this committed — OCC-gate it.
-    _commit_entry(path, latest["version"], entry, renames={staged: segment})
+    staged = _stage_segment(
+        spark, path, compacted, latest, encryption_key, partition_by=keep_layout
+    )
+    # A re-encrypting rewrite of a COLUMN-encrypted table keeps its
+    # plaintext columns' stats: keyless-subset pruning must survive
+    # OPTIMIZE.
+    _commit_rewrite(
+        spark, path, latest, [], {segment: (staged, compacted)},
+        {
+            "compacted_from": latest["version"],
+            # Delta's OPTIMIZE contract: the commit rearranges bytes,
+            # the LIVE rows are identical — CDF consumers skip it.
+            "data_change": False,
+        },
+        partition_by=keep_layout, metrics=True, plaintext_stats=True,
+    )
     return version
 
 
@@ -3858,20 +3968,7 @@ def diff_keys(
     changed_b = [s for s in sb if s not in shared or s in touched]
 
     def _rows(entry, segs):
-        ledger = entry.get("schemas", {})
-        known = {
-            json.dumps(ledger[s], sort_keys=True) for s in segs if s in ledger
-        }
-        df = _read_segment_dirs(
-            spark, path, segs, entry, evolved=len(known) > 1,
-            with_pos=bool(entry.get("dv")),
-            encryption_key=encryption_key,
-        )
-        if entry.get("dv"):
-            df = _anti_join_dv(spark, path, entry["dv"], df).drop(
-                "__fp", "__ri"
-            )
-        return df
+        return _read_live(spark, path, entry, segs, encryption_key=encryption_key)
 
     def _keys(entry):
         return _rows(entry, entry["segments"]).select(key_col)
@@ -4901,21 +4998,16 @@ def delete_where(
     kept = [seg for seg in kept if seg not in full]
     frames = []
     if kept:
-        # Schema-evolution-aware scan (same ledger gate as snapshot_read);
-        # with_pos attaches row identity per branch, so DELETE works on
-        # flat AND Hive-partitioned segments identically.
-        ledger = latest.get("schemas", {})
-        known = {json.dumps(ledger[s], sort_keys=True) for s in kept if s in ledger}
-        scan = _read_segment_dirs(
-            spark, path, kept, latest, evolved=len(known) > 1, with_pos=True,
+        # keep_pos: row identity is attached per branch, so DELETE works
+        # on flat AND Hive-partitioned segments identically.
+        scan = _read_live(
+            spark, path, latest, kept, keep_pos=True,
             encryption_key=encryption_key,
             # Keyed DELETEs row-group-prune on the encrypted stats (the
             # manifest carries none); _apply_predicates below does the
             # exact row-level match on the pruned superset.
             predicates=predicates,
         )
-        if latest.get("dv"):
-            scan = _anti_join_dv(spark, path, latest["dv"], scan)
         matched = _apply_predicates(scan, predicates).select(
             F.col("__fp").alias("file_path"),
             F.col("__ri").alias("row_index"),
@@ -4972,13 +5064,13 @@ def delete_where(
     entry = {
         "version": version,
         "segments": surviving,
-        "stats": {
-            seg: v
-            for seg, v in latest.get("stats", {}).items()
-            if seg in surviving
-        },
         "deleted_where": [[c, o, _stat_encode(v)] for c, o, v in predicates],
     }
+    # Surviving segments keep their ledgers (mergeSchema gate, type
+    # enforcement, pruning, partition layout), the prior DV and the
+    # encryption markers — a keyed DELETE on an encrypted table must
+    # leave every keyless-read gate armed.
+    _carry_forward(entry, latest, surviving)
     if full:
         # Feed-readable marker: change_feed / the streaming CDF reader
         # recover the dropped segments' live rows as delete legs.
@@ -5007,32 +5099,6 @@ def delete_where(
         n_new_dv = n_total - n_prev
         entry["dv"] = dv_name
         renames = {dv_staged: dv_name}
-    elif latest.get("dv"):
-        # Pure drop with an existing DV: the sidecar is immutable and
-        # its surviving entries still apply — reference it, no rewrite.
-        entry["dv"] = latest["dv"]
-    # Surviving segments keep their schema ledger (mergeSchema gate and
-    # type enforcement), blooms (conservative overstatement is safe)
-    # and partition layout.
-    if latest.get("schemas"):
-        entry["schemas"] = {
-            seg: v for seg, v in latest["schemas"].items() if seg in surviving
-        }
-    if latest.get("bloom"):
-        entry["bloom"] = {
-            seg: v for seg, v in latest["bloom"].items() if seg in surviving
-        }
-    if latest.get("partition_by"):
-        pb = {
-            seg: v
-            for seg, v in latest["partition_by"].items()
-            if seg in surviving
-        }
-        if pb:
-            entry["partition_by"] = pb
-    # The marker forks with the segment list: a keyed DELETE on an
-    # encrypted table must leave every keyless-read gate armed.
-    _carry_encryption(entry, latest)
     # The DV was computed against the version read above: OCC-gate the
     # commit so a concurrent append/delete cannot be half-tombstoned.
     _commit_entry(path, latest["version"], entry, renames=renames)
@@ -5322,14 +5388,10 @@ def delete_keys(
             )
         if not segs:  # every segment provably key-free: no-op, no commit
             return latest["version"], 0
-        ledger = latest.get("schemas", {})
-        known = {json.dumps(ledger[s], sort_keys=True) for s in segs if s in ledger}
-        scan = _read_segment_dirs(
-            spark, path, segs, latest, evolved=len(known) > 1, with_pos=True,
+        scan = _read_live(
+            spark, path, latest, segs, keep_pos=True,
             encryption_key=encryption_key,
         )
-        if latest.get("dv"):
-            scan = _anti_join_dv(spark, path, latest["dv"], scan)
         if key_vals is not None:
             matched = scan.filter(
                 F.col(key_col).isin(key_vals) if key_vals else F.lit(False)
@@ -5362,22 +5424,15 @@ def delete_keys(
     entry = {
         "version": version,
         "segments": list(latest["segments"]),
-        "stats": dict(latest.get("stats", {})),
-        "dv": dv_name,
         # Feed-readable like deleted_where: segments unchanged + dv moved
         # is the transition class change_feed recovers deletes from.
         "deleted_where": [[key_col, "in", "<key-set>"]],
         "deleted_keys": key_col,
     }
-    if latest.get("schemas"):
-        entry["schemas"] = dict(latest["schemas"])
-    if latest.get("bloom"):
-        entry["bloom"] = dict(latest["bloom"])
-    if latest.get("partition_by"):
-        entry["partition_by"] = dict(latest["partition_by"])
-    # Keyed GDPR erase on an encrypted table: the DV commit keeps
-    # every keyless-read gate armed.
-    _carry_encryption(entry, latest)
+    # Every segment survives a DV commit; a keyed GDPR erase on an
+    # encrypted table keeps every keyless-read gate armed.
+    _carry_forward(entry, latest, latest["segments"])
+    entry["dv"] = dv_name
     _commit_entry(path, latest["version"], entry, renames={dv_staged: dv_name})
     return version, n_total - n_prev
 
@@ -6214,17 +6269,9 @@ def _synthesize_restore_legs(
     frames: list[DataFrame] = []
 
     def _live(entry: dict, segs) -> DataFrame:
-        segs = sorted(segs)
-        ledger = entry.get("schemas", {})
-        known = {json.dumps(ledger[s], sort_keys=True) for s in segs if s in ledger}
-        df = _read_segment_dirs(
-            spark, path, segs, entry, evolved=len(known) > 1,
-            with_pos=bool(entry.get("dv")),
-            encryption_key=encryption_key,
+        return _read_live(
+            spark, path, entry, sorted(segs), encryption_key=encryption_key
         )
-        if entry.get("dv"):
-            df = _anti_join_dv(spark, path, entry["dv"], df).drop("__fp", "__ri")
-        return df
 
     removed, added = prev_segs - cur_segs, cur_segs - prev_segs
     if removed:
@@ -6387,15 +6434,9 @@ def change_feed(
                     .count()
                 )
             if dv_hits:
-                ins = _read_segment_dirs(
-                    spark, path, [seg], cur, evolved=False, with_pos=True,
-                    encryption_key=encryption_key,
-                )
-                ins = (
-                    _anti_join_dv(spark, path, cur["dv"], ins)
-                    .drop("__fp", "__ri")
-                    .withColumn("_change_type", F.lit("insert"))
-                )
+                ins = _read_live(
+                    spark, path, cur, [seg], encryption_key=encryption_key
+                ).withColumn("_change_type", F.lit("insert"))
             else:
                 # Layout-aware segment read: a Hive-partitioned new
                 # segment recovers its partition columns with basePath
@@ -6416,21 +6457,9 @@ def change_feed(
                 s for s in prev["segments"] if s not in cur["segments"]
             ]
             if dropped:
-                ledger = prev.get("schemas", {})
-                known = {
-                    json.dumps(ledger[s], sort_keys=True)
-                    for s in dropped
-                    if s in ledger
-                }
-                gone = _read_segment_dirs(
-                    spark, path, dropped, prev, evolved=len(known) > 1,
-                    with_pos=bool(prev.get("dv")),
-                    encryption_key=encryption_key,
+                gone = _read_live(
+                    spark, path, prev, dropped, encryption_key=encryption_key
                 )
-                if prev.get("dv"):
-                    gone = _anti_join_dv(spark, path, prev["dv"], gone).drop(
-                        "__fp", "__ri"
-                    )
                 frames.append(gone.withColumn("_change_type", F.lit("delete")))
             if not cur.get("dv"):
                 continue  # pure drop: no positional delta to recover
@@ -7411,14 +7440,12 @@ def merge_upsert(
     2. *Rewrite*: touched segments' non-matching rows are kept, every
        source row is written (updating its match or inserting fresh) —
        one new segment replaces the touched ones.
-    3. *Commit*: a manifest entry lists untouched + rewritten segments,
-       with fresh stats (and blooms, if the table tracks them) for the
-       new segment. Old versions keep time-traveling.
+    3. *Commit*: the shared copy-on-write tail (:func:`_commit_rewrite`).
+       Old versions keep time-traveling.
 
     Upsert semantics: final = (target rows whose key ∉ source) ∪ source.
-    A pending deletion vector composes (r11): reads go through the DV,
-    rewritten segments materialize it, untouched segments carry it
-    forward — the Delta DV-aware COW MERGE; no pre-compaction needed.
+    A pending deletion vector composes (r11) — the Delta DV-aware COW
+    MERGE; no pre-compaction needed.
     Returns ``{"version", "segments_rewritten", "segments_total",
     "rows_upserted"}``.
 
@@ -7556,26 +7583,16 @@ def _merge_upsert_on(
     touched = sorted(touched_set)
     untouched = [s for s in segs if s not in touched]
     version = latest["version"] + 1
-    new_seg = f"data-{version}"
     renames: dict[str, str] = {}
-    cdc_name = None
+    fields = {"merged_from": latest["version"]}
     if touched:
         # Schema-evolution-aware touched read (same ledger gate as
         # snapshot_read / update_where): divergent segment schemas
         # NULL-backfill via mergeSchema instead of dropping columns.
-        ledger = latest.get("schemas", {})
-        known = {
-            json.dumps(ledger[s], sort_keys=True) for s in touched if s in ledger
-        }
-        kept_scan = _read_segment_dirs(
-            spark, path, touched, latest, evolved=len(known) > 1,
-            with_pos=bool(dv_name),
-            encryption_key=encryption_key,
+        evolved = _schemas_diverge(latest, touched)
+        kept_scan = _read_live(
+            spark, path, latest, touched, encryption_key=encryption_key
         )
-        if dv_name:
-            kept_scan = _anti_join_dv(spark, path, dv_name, kept_scan).drop(
-                "__fp", "__ri"
-            )
         if key_vals is not None:
             # left_anti on literals: NULL target keys match nothing and
             # are kept, exactly the anti-join's NULL semantics.
@@ -7596,7 +7613,7 @@ def _merge_upsert_on(
         # Strict column match on uniform tables (a mis-shaped source
         # must fail loud); NULL-backfill only when the table itself is
         # schema-divergent and the merged read added columns.
-        rewrite = kept.unionByName(source, allowMissingColumns=len(known) > 1)
+        rewrite = kept.unionByName(source, allowMissingColumns=evolved)
         # CHANGE DATA FEED sidecar (Delta CDF): matched target rows are
         # update_preimage, the source rows replacing them are
         # update_postimage, and source rows with no target match are
@@ -7638,8 +7655,8 @@ def _merge_upsert_on(
                 )
             staged_cdc, _n, _cdc_schema = _stage_cdc(path, [pre, post, ins])
             if staged_cdc:
-                cdc_name = f"cdc-{version}"
-                renames[staged_cdc] = cdc_name
+                fields["cdc"] = f"cdc-{version}"
+                renames[staged_cdc] = fields["cdc"]
                 # The committed rewrite is built from the sidecar's OWN
                 # post/insert rows read back (they are exactly the
                 # source's rows), so a non-deterministic source frame
@@ -7654,77 +7671,20 @@ def _merge_upsert_on(
                     .filter(F.col("_change_type") != "update_preimage")
                     .drop("_change_type")
                 )
-                rewrite = kept.unionByName(
-                    src_back, allowMissingColumns=len(known) > 1
-                )
+                rewrite = kept.unionByName(src_back, allowMissingColumns=evolved)
     else:
         rewrite = source
-    # Stage the rewrite; _commit_entry publishes the final name under
-    # the lock (a pre-commit data-{version} dir would look like a crash
-    # orphan to a concurrent versioned_write).
-    staged = _stage_dir(path)
-    try:
-        if encrypted:
-            # Keyed rewrite (r14): constraints check the frame (staged
-            # encrypted bytes cannot be re-read natively), then the
-            # re-encrypting Arrow writer lands fresh AES-GCM data keys.
-            _check_constraints_frame(spark, path, lambda: rewrite)
-            _write_segment_keyed(
-                rewrite, staged, encryption_key,
-                enc_cols=latest.get("enc_columns"),
-            )
-        else:
-            rewrite.write.mode("errorifexists").parquet(staged)
-            _check_constraints(spark, path, staged)
-    except BaseException:
-        import shutil
-
-        shutil.rmtree(staged, ignore_errors=True)
-        for d in renames:
-            shutil.rmtree(d, ignore_errors=True)
-        raise
-    stats = {s: v for s, v in latest.get("stats", {}).items() if s in untouched}
-    if not encrypted:
-        # Encrypted segments record no stats/blooms: plaintext min/max
-        # in the manifest would leak the protected value ranges.
-        stats[new_seg] = collect_segment_stats(staged)
-    entry = {
-        "version": version,
-        "segments": [*untouched, new_seg],
-        "stats": stats,
-        "merged_from": latest["version"],
-        **(
-            {"partition_by": pb}
-            if (pb := _carry_partition_by(latest, untouched))
-            else {}
-        ),
-        "schemas": {
-            **{
-                s: v
-                for s, v in latest.get("schemas", {}).items()
-                if s in untouched
-            },
-            new_seg: {f.name: f.dataType.simpleString() for f in rewrite.schema.fields},
-        },
-    }
-    # Untouched segments still need their tombstones; a fully-rewritten
-    # table materialized the DV and drops it.
-    if dv_name and untouched:
-        entry["dv"] = dv_name
-    bloom_cols = sorted({c for b in latest.get("bloom", {}).values() for c in b})
-    if bloom_cols and not encrypted:
-        entry["bloom"] = {
-            s: v for s, v in latest.get("bloom", {}).items() if s in untouched
-        }
-        entry["bloom"][new_seg] = build_segment_bloom(spark, staged, bloom_cols)
+    staged = _stage_segment(
+        spark, path, rewrite, latest, encryption_key,
+        check_constraints=True, cleanup=renames,
+    )
     # metadata.num_rows is a plaintext-footer field — keyless-safe even
     # on encrypted files (never descends to column-chunk metadata).
     n_upserted = _dir_num_rows(staged)
-    if cdc_name:
-        entry["cdc"] = cdc_name
-    _carry_encryption(entry, latest)
-    # The rewrite derives from the version read above — OCC-gate it.
-    _commit_entry(path, latest["version"], entry, renames={**renames, staged: new_seg})
+    _commit_rewrite(
+        spark, path, latest, untouched, {f"data-{version}": (staged, rewrite)},
+        fields, renames=renames,
+    )
     return {
         "version": version,
         "segments_rewritten": len(touched),
@@ -7848,7 +7808,6 @@ def zorder_rewrite(
     column and a random layout helps neither.
     """
     import shutil
-    import uuid
 
     from argodb_mapreduce_spark.operators.zorder import morton_code, scale_to_grid
 
@@ -7868,7 +7827,6 @@ def zorder_rewrite(
             scale_to_grid(F.col(col_y), F.col("ymn"), F.col("ymx")),
         ),
     ).drop("xmn", "xmx", "ymn", "ymx")
-    staged = os.path.join(path, f"_staged-{uuid.uuid4().hex}")
     # Column mapping: the morton computation ran on the logical view;
     # the rewritten bytes go back to physical names.
     dfz_phys = _to_physical_frame(
@@ -7877,55 +7835,34 @@ def zorder_rewrite(
         .drop("__z"),
         _column_map(path),
     )
-    dfz_phys.write.mode("errorifexists").parquet(staged)
+    staged = _stage_segment(spark, path, dfz_phys, latest)
     version = latest["version"] + 1
-    segments, stats, schemas, renames = [], {}, {}, {}
+    segments = {}
     try:
+        # Promote each written file to its own staged segment dir (a
+        # sibling of the write's, so vacuum still reaps a crash orphan).
         files = sorted(_glob.glob(os.path.join(staged, "part-*.parquet")))
-        seg_schema = {
-            f.name: f.dataType.simpleString() for f in dfz_phys.schema.fields
-        }
         for i, f in enumerate(files):
-            seg = f"data-{version}-z{i}"
-            # Stage each z-segment; final names publish under the lock
-            # in _commit_entry (a pre-commit final dir is a crash
-            # orphan to concurrent committers).
-            seg_staged = _stage_dir(path)
+            seg_staged = f"{staged}-z{i}"
+            segments[f"data-{version}-z{i}"] = (seg_staged, dfz_phys)
             os.makedirs(seg_staged)
             os.rename(f, os.path.join(seg_staged, os.path.basename(f)))
-            segments.append(seg)
-            renames[seg_staged] = seg
-            stats[seg] = collect_segment_stats(seg_staged)
-            schemas[seg] = seg_schema
-        entry = {
-            "version": version,
-            "segments": segments,
-            "stats": stats,
-            "schemas": schemas,
+    except BaseException:
+        for seg_staged, _f in segments.values():
+            shutil.rmtree(seg_staged, ignore_errors=True)
+        raise
+    finally:
+        shutil.rmtree(staged, ignore_errors=True)
+    _commit_rewrite(
+        spark, path, latest, [], segments,
+        {
             "zordered_from": latest["version"],
             # Z-order is a clustering rewrite — row set unchanged, CDF
             # consumers skip it (Delta: OPTIMIZE ZORDER BY is
             # dataChange=false).
             "data_change": False,
-        }
-        bloom_cols = sorted({c for b in latest.get("bloom", {}).values() for c in b})
-        if bloom_cols:
-            entry["bloom"] = {
-                renames[sd]: build_segment_bloom(spark, sd, bloom_cols)
-                for sd in renames
-            }
-        _commit_entry(path, latest["version"], entry, renames=renames)
-    except BaseException:
-        # A mid-loop failure (stats/bloom/commit) must not leak the
-        # per-segment _staged-* dirs: _commit_entry only cleans staged
-        # sources it was handed AND only on conflict/write failure, so
-        # anything still unpublished is removed here (compact_binpack
-        # follows the same discipline).
-        for seg_staged in renames:
-            shutil.rmtree(seg_staged, ignore_errors=True)
-        raise
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+        },
+    )
     return version
 
 
@@ -8036,15 +7973,13 @@ def update_where(
     2. *Rewrite*: surviving segments are read once; matching rows get
        the SET applied (``CASE WHEN`` per updated column), the rest are
        kept verbatim; one new segment replaces them.
-    3. *Commit*: OCC-gated manifest append (:func:`_commit_entry`) —
-       the rewrite derived from the version read, so a moved head
-       aborts instead of losing a concurrent writer's update. Old
-       versions keep time-traveling to the pre-update rows.
+    3. *Commit*: the shared OCC-gated copy-on-write tail
+       (:func:`_commit_rewrite`). Old versions keep time-traveling to
+       the pre-update rows.
 
-    A pending deletion vector composes (r11): the touched read goes
-    through the DV, the rewrite materializes it, untouched segments
-    carry it forward — same contract as MERGE. Returns ``{"version",
-    "rows_updated", "segments_rewritten", "segments_total"}``.
+    A pending deletion vector composes (r11), as for MERGE. Returns
+    ``{"version", "rows_updated", "segments_rewritten",
+    "segments_total"}``.
 
     At 100 TB: an UPDATE touching one date window rewrites only the
     segments whose min/max admit that window — proportional to matched
@@ -8055,8 +7990,6 @@ def update_where(
     entries = _read_manifest(path)
     latest = entries[-1]
     segs = latest["segments"]
-    dv_name = latest.get("dv")  # composes (r11): see merge_upsert
-    seg_stats = latest.get("stats", {})
     # Column mapping: predicates and set_exprs speak LOGICAL names.
     # Pruning consults physical stats (translated triples); the scan
     # lifts to a logical view right after the read, ALL row logic runs
@@ -8064,43 +7997,28 @@ def update_where(
     cmap = _column_map(path)
     touched = _touched_segments(latest, _physical_predicates(predicates, cmap))
     untouched = [s for s in segs if s not in touched]
-    if not touched:  # provably no matching row anywhere: no-op, no commit
-        return {
-            "version": latest["version"],
-            "rows_updated": 0,
-            "segments_rewritten": 0,
-            "segments_total": len(segs),
-        }
-    version = latest["version"] + 1
-    new_seg = f"data-{version}"
-    # Schema-evolution-aware touched read (same ledger gate as
-    # snapshot_read): divergent segment schemas NULL-backfill via
-    # mergeSchema; uniform-schema tables keep the plain read.
-    schemas_ledger = latest.get("schemas", {})
-    known = {
-        json.dumps(schemas_ledger[s], sort_keys=True)
-        for s in touched
-        if s in schemas_ledger
+    _no_op = {
+        "version": latest["version"],
+        "rows_updated": 0,
+        "segments_rewritten": 0,
+        "segments_total": len(segs),
     }
-    encrypted = bool(latest.get("encrypted"))
-    if encrypted and _cdf_enabled(path):
+    if not touched:  # provably no matching row anywhere: no-op, no commit
+        return _no_op
+    version = latest["version"] + 1
+    if latest.get("encrypted") and _cdf_enabled(path):
         raise ValueError(
             "UPDATE with enable_change_data_feed on an ENCRYPTED table "
             "would write a plaintext cdc sidecar (pre/postimages of the "
             "protected rows); drop the property — the change feed "
             "synthesizes keyed file-level legs for un-CDC UPDATEs"
         )
-    scan = _read_segment_dirs(
-        spark, path, touched, latest, evolved=len(known) > 1,
-        with_pos=bool(dv_name),
-        encryption_key=encryption_key,
+    # Tombstoned rows must neither be counted as updated nor resurrect
+    # into the rewrite: the touched read goes through the DV.
+    scan = _to_logical_frame(
+        _read_live(spark, path, latest, touched, encryption_key=encryption_key),
+        cmap,
     )
-    if dv_name:
-        # Tombstoned rows must neither be counted as updated nor
-        # resurrect into the rewrite: read through the DV, then drop
-        # the row identity before the rewrite is written.
-        scan = _anti_join_dv(spark, path, dv_name, scan).drop("__fp", "__ri")
-    scan = _to_logical_frame(scan, cmap)
     match = None
     for col, op, lit in predicates:
         c = F.col(col)
@@ -8114,12 +8032,6 @@ def update_where(
     # and on a CDF table a segments-replaced version with no sidecar
     # would permanently poison every feed spanning it; Delta likewise
     # records no commit actions for an empty UPDATE).
-    _no_op = {
-        "version": latest["version"],
-        "rows_updated": 0,
-        "segments_rewritten": 0,
-        "segments_total": len(segs),
-    }
     if not _cdf_enabled(path):
         n_updated = scan.filter(match).count()
         if not n_updated:
@@ -8134,7 +8046,13 @@ def update_where(
     # (current_timestamp(), rand()) cannot make the recorded feed
     # diverge from the table state a CDC consumer replicates.
     renames: dict[str, str] = {}
-    cdc_name = None
+    fields = {
+        "updated_from": latest["version"],
+        "updated_where": [
+            [c, o, _stat_encode(v)]
+            for c, o, v in _physical_predicates(predicates, cmap)
+        ],
+    }
     matched_rows = F.coalesce(match, F.lit(False))
     # Generated columns recompute on UPDATE (Delta's contract): a SET
     # touching a generated column's source (SET o_orderdate on a table
@@ -8171,8 +8089,8 @@ def update_where(
             # as the non-CDF count probe, one pass instead of two).
             return _no_op
         n_updated = _n // 2  # pre + post legs, one each per matched row
-        cdc_name = f"cdc-{version}"
-        renames[staged_cdc] = cdc_name
+        fields["cdc"] = f"cdc-{version}"
+        renames[staged_cdc] = fields["cdc"]
         # Explicit part-file list: an underscore-prefixed staged
         # root trips Spark's hidden-path heuristics.
         post_back = _to_logical_frame(
@@ -8210,66 +8128,16 @@ def update_where(
             )
             .drop("__upd")
         )
-    # Stage the rewrite (back in PHYSICAL names); the final name
-    # publishes under the commit lock.
+    # Stage the rewrite back in PHYSICAL names.
     rewrite = _to_physical_frame(rewrite, cmap)
-    staged = _stage_dir(path)
-    try:
-        if encrypted:
-            # Keyed rewrite (r14): constraints check the frame (staged
-            # encrypted bytes cannot be re-read natively), then the
-            # re-encrypting Arrow writer lands fresh AES-GCM data keys.
-            _check_constraints_frame(spark, path, lambda: rewrite)
-            _write_segment_keyed(
-                rewrite, staged, encryption_key,
-                enc_cols=latest.get("enc_columns"),
-            )
-        else:
-            rewrite.write.mode("errorifexists").parquet(staged)
-            _check_constraints(spark, path, staged)
-    except BaseException:
-        import shutil
-
-        shutil.rmtree(staged, ignore_errors=True)
-        for d in renames:
-            shutil.rmtree(d, ignore_errors=True)
-        raise
-    stats = {s: v for s, v in seg_stats.items() if s in untouched}
-    if not encrypted:
-        # Encrypted segments record no stats/blooms: plaintext min/max
-        # in the manifest would leak the protected value ranges.
-        stats[new_seg] = collect_segment_stats(staged)
-    entry = {
-        "version": version,
-        "segments": [*untouched, new_seg],
-        "stats": stats,
-        "updated_from": latest["version"],
-        "updated_where": [
-            [c, o, _stat_encode(v)]
-            for c, o, v in _physical_predicates(predicates, cmap)
-        ],
-        **(
-            {"partition_by": pb}
-            if (pb := _carry_partition_by(latest, untouched))
-            else {}
-        ),
-        "schemas": {
-            **{s: v for s, v in latest.get("schemas", {}).items() if s in untouched},
-            new_seg: {f.name: f.dataType.simpleString() for f in rewrite.schema.fields},
-        },
-    }
-    # Untouched segments still need their tombstones; the rewritten
-    # segment materialized its share (inert entries are harmless).
-    if dv_name and untouched:
-        entry["dv"] = dv_name
-    if cdc_name:
-        entry["cdc"] = cdc_name
-    bloom_cols = sorted({c for b in latest.get("bloom", {}).values() for c in b})
-    if bloom_cols and not encrypted:
-        entry["bloom"] = {s: v for s, v in latest.get("bloom", {}).items() if s in untouched}
-        entry["bloom"][new_seg] = build_segment_bloom(spark, staged, bloom_cols)
-    _carry_encryption(entry, latest)
-    _commit_entry(path, latest["version"], entry, renames={**renames, staged: new_seg})
+    staged = _stage_segment(
+        spark, path, rewrite, latest, encryption_key,
+        check_constraints=True, cleanup=renames,
+    )
+    _commit_rewrite(
+        spark, path, latest, untouched, {f"data-{version}": (staged, rewrite)},
+        fields, renames=renames,
+    )
     return {
         "version": version,
         "rows_updated": n_updated,
@@ -8956,11 +8824,7 @@ def compact_binpack(spark: SparkSession, path: str, target_bytes: int) -> dict:
     Greedy first-fit-decreasing over on-disk segment sizes (an O(files)
     metadata walk, no data read); bins holding a single segment carry
     forward unchanged (a one-segment rewrite is pure waste). A pending
-    deletion vector composes (r11): packed bins read through the DV
-    and materialize their share of tombstones; carried segments keep
-    theirs via the carried-forward DV (entries for packed files are
-    inert — same contract as MERGE/UPDATE). Commit is OCC-gated.
-    Returns ``{"version", "segments_before", "segments_after",
+    deletion vector composes (r11), as for MERGE/UPDATE. Returns ``{"version", "segments_before", "segments_after",
     "bins_rewritten", "bytes_rewritten"}`` (version unchanged if
     nothing needed packing).
 
@@ -8971,7 +8835,6 @@ def compact_binpack(spark: SparkSession, path: str, target_bytes: int) -> dict:
     throughout."""
     entries = _read_manifest(path)
     latest = entries[-1]
-    dv_name = latest.get("dv")  # composes (r11): see the docstring
     segs = latest["segments"]
     sizes = {s: _segment_bytes(path, s) for s in segs}
     small = sorted(
@@ -9000,72 +8863,27 @@ def compact_binpack(spark: SparkSession, path: str, target_bytes: int) -> dict:
     packed = {s for b in rewrite_bins for s in b}
     carried = [s for s in segs if s not in packed]
     version = latest["version"] + 1
-    schemas = latest.get("schemas", {})
-    new_segments, new_stats, new_schemas = [], {}, {}
-    bloom_cols = sorted({c for b in latest.get("bloom", {}).values() for c in b})
-    new_bloom = {}
-    renames = {}
-    try:
-        for i, b in enumerate(rewrite_bins):
-            seg = f"data-{version}-p{i}"
-            # mergeSchema only if the bin's members actually diverge.
-            known = {json.dumps(schemas[s], sort_keys=True) for s in b if s in schemas}
-            df = _read_segment_dirs(
-                spark, path, b, latest, evolved=len(known) > 1,
-                with_pos=bool(dv_name),
-            )
-            if dv_name:
-                df = _anti_join_dv(spark, path, dv_name, df).drop("__fp", "__ri")
-            # Stage each packed segment; final names publish under the
-            # commit lock in _commit_entry.
-            seg_staged = _stage_dir(path)
-            df.coalesce(1).write.mode("errorifexists").parquet(seg_staged)
-            new_segments.append(seg)
-            renames[seg_staged] = seg
-            new_stats[seg] = collect_segment_stats(seg_staged)
-            new_schemas[seg] = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-            if bloom_cols:
-                new_bloom[seg] = build_segment_bloom(spark, seg_staged, bloom_cols)
-        entry = {
-            "version": version,
-            "segments": [*carried, *new_segments],
-            "stats": {
-                **{s: v for s, v in latest.get("stats", {}).items() if s in carried},
-                **new_stats,
-            },
-            "schemas": {
-                **{s: v for s, v in schemas.items() if s in carried},
-                **new_schemas,
-            },
-            **(
-                {"partition_by": pb}
-                if (pb := _carry_partition_by(latest, carried))
-                else {}
-            ),
+    new_segments = {}
+    for i, b in enumerate(rewrite_bins):
+        # Each bin reads through the DV (mergeSchema only if its members
+        # diverge) into ONE file; a failed write also removes the bins
+        # staged before it.
+        df = _read_live(spark, path, latest, b)
+        staged = _stage_segment(
+            spark, path, df.coalesce(1), latest,
+            cleanup=[d for d, _f in new_segments.values()],
+        )
+        new_segments[f"data-{version}-p{i}"] = (staged, df)
+    _commit_rewrite(
+        spark, path, latest, carried, new_segments,
+        {
             "packed_from": latest["version"],
             # Bin-pack rearranges bytes; live rows identical (the bins
             # read through the DV and carried segments keep theirs) —
             # CDF consumers skip it, like compact().
             "data_change": False,
-        }
-        # Carried segments still need their tombstones (packed bins
-        # materialized theirs; inert entries are harmless).
-        if dv_name and carried:
-            entry["dv"] = dv_name
-        if bloom_cols:
-            entry["bloom"] = {
-                **{s: v for s, v in latest.get("bloom", {}).items() if s in carried},
-                **new_bloom,
-            }
-        _commit_entry(path, latest["version"], entry, renames=renames)
-    except BaseException:
-        import shutil
-
-        # _commit_entry cleans whatever it touched; staged dirs from a
-        # failure BEFORE the commit call are removed here.
-        for sd in renames:
-            shutil.rmtree(sd, ignore_errors=True)
-        raise
+        },
+    )
     return {
         "version": version,
         "segments_before": len(segs),
