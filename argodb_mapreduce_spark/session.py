@@ -14,14 +14,14 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-#: AQE coalescing floor pinned on driver-created sessions: Spark's own
-#: default. An r15 x10-corpus A/B showed a global 1k floor is the wrong
-#: altitude — it un-serializes CPU-expanding joins (minhash verify
-#: 27 -> 17.8 s) but taxes byte-proportional stages
-#: (similarity_cosine_topk 4.9 -> 6.2 s). The byte-coalescing that
-#: narrows dedup_minhash_verified's verify stage at x10 is still open;
-#: the fix belongs in the plan (pair-count-derived stage width), not in
-#: a global floor. Experiments can change it at runtime with
+#: AQE coalescing floor tune_session pins on externally created
+#: sessions: Spark's own default. An r15 x10-corpus A/B showed a global
+#: 1k floor is the wrong altitude — it un-serializes CPU-expanding
+#: joins (minhash verify 27 -> 17.8 s) but taxes byte-proportional
+#: stages (similarity_cosine_topk 4.9 -> 6.2 s). The byte-coalescing
+#: that narrows dedup_minhash_verified's verify stage at x10 is still
+#: open; the fix belongs in the plan (pair-count-derived stage width),
+#: not in a global floor. Experiments can change it at runtime with
 #: ``spark.conf.set``.
 _AQE_MIN_PARTITION_SIZE = "1m"
 
