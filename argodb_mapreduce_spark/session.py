@@ -26,9 +26,23 @@ from pyspark.sql import SparkSession
 _AQE_MIN_PARTITION_SIZE = "1m"
 
 
+def _session_defaults() -> tuple[int, str]:
+    """``(cores, driver memory)`` for a session: ``SPARK_GRAFT_CPUS`` and
+    ``SPARK_DRIVER_MEMORY`` when set, else the machine's — the cores
+    this process may run on, and half of physical RAM (at least 1g) for
+    the local-mode driver, whose heap also holds the executors."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    memory = os.environ.get("SPARK_DRIVER_MEMORY")
+    if not memory:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        memory = f"{max(1, ram // 2 // 2**30)}g"
+    return (int(cpus) if cpus else len(os.sched_getaffinity(0))), memory
+
+
 def get_spark(app_name: str = "argodb_mapreduce_spark", cpus: int | None = None) -> SparkSession:
+    default_cpus, driver_memory = _session_defaults()
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -41,7 +55,7 @@ def get_spark(app_name: str = "argodb_mapreduce_spark", cpus: int | None = None)
         # manifest stats; µs is the modern lake-format standard.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         # static conf: bucketed tables (sources/bucketing.py) live here
         .config(

@@ -36,6 +36,14 @@ is shared. :func:`_stage_segment` writes the result to a staging dir
 segments, carries the kept segments' ledgers and deletion vector
 forward (:func:`_carry_forward`, which the DV-only DELETEs use too)
 and publishes the entry with an OCC-gated :func:`_commit_entry`.
+
+On a table with the change data feed enabled, UPDATE and MERGE also
+publish a ``cdc-N`` sidecar of row-level changes and record it on the
+entry as ``cdc`` plus ``cdc_schema``: the sidecar's schema in the
+schema ledger's ``{column: simpleString}`` form. :func:`change_feed`
+reads the sidecar with that schema, as segment reads use the ledger,
+so neither pays Spark's footer schema-inference job; an entry written
+before ``cdc_schema`` was recorded falls back to inference.
 """
 
 from __future__ import annotations
@@ -1588,13 +1596,18 @@ def add_constraint(spark: SparkSession, path: str, name: str, expr: str) -> int:
     return len(cons)
 
 
-def _check_constraints(spark: SparkSession, path: str, seg_path: str) -> None:
+def _check_constraints(
+    spark: SparkSession, path: str, seg_path: str, schema
+) -> None:
     """Validate a just-written segment against the table's constraints;
     raise :class:`ConstraintViolation` (caller removes the staged bytes)
     with per-constraint violation counts. NULL expr results count as
     violations (CHECK must evaluate TRUE), matching the SQL standard's
-    treatment in Delta invariants."""
-    _check_constraints_frame(spark, path, lambda: spark.read.parquet(seg_path))
+    treatment in Delta invariants. ``schema`` is the written frame's:
+    the read-back needs no schema-inference job."""
+    _check_constraints_frame(
+        spark, path, lambda: spark.read.schema(schema).parquet(seg_path)
+    )
 
 
 def _check_constraints_frame(spark: SparkSession, path: str, frame_fn) -> None:
@@ -2026,12 +2039,12 @@ def versioned_write(
                 raise
             shutil.rmtree(staged)
             staged = restaged
-    new_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    new_schema = _ledger_form(df.schema)
     renamed = False
     try:
         # Heavy phase — everything that launches Spark jobs runs against
         # the staged bytes; the table is untouched if any of it fails.
-        _check_constraints(df.sparkSession, path, staged)
+        _check_constraints(df.sparkSession, path, staged, df.schema)
         staged_stats, staged_metrics = _segment_stats_and_metrics(staged)
         if partition_by:
             # Partition-column min/max come from dir names, not footers.
@@ -3405,14 +3418,18 @@ def _read_files_with_layout(
     # partition columns instead of recovering them).
     abs_path = os.path.abspath(path)
     groups: dict = {}
+    flat_owners = set()
     for fp in files:
-        owner = None
-        for seg in entry["segments"]:
-            if parts.get(seg) and local(fp).startswith(
-                os.path.join(abs_path, seg) + os.sep
-            ):
-                owner = seg
-                break
+        owner = next(
+            (
+                seg for seg in entry["segments"]
+                if local(fp).startswith(os.path.join(abs_path, seg) + os.sep)
+            ),
+            None,
+        )
+        if owner is None or not parts.get(owner):
+            flat_owners.add(owner)
+            owner = None
         groups.setdefault(owner, []).append(local(fp))
 
     def _pos(df: DataFrame) -> DataFrame:
@@ -3425,7 +3442,15 @@ def _read_files_with_layout(
     frames = []
     flat = groups.pop(None, [])
     if flat:
-        frames.append(_pos(spark.read.parquet(*flat)))
+        # The owning segments' ledger schema, when they share one, skips
+        # the footer schema-inference job; an unowned file or divergent
+        # schemas keep inference.
+        st = (
+            None if None in flat_owners
+            else _ledger_struct(entry, sorted(flat_owners))
+        )
+        reader = spark.read.schema(st) if st is not None else spark.read
+        frames.append(_pos(reader.parquet(*flat)))
     for seg in sorted(groups):
         # Absolute basePath: the grouped file paths are absolute, and
         # Spark requires basePath to prefix them.
@@ -3447,6 +3472,12 @@ def _apply_predicates(df: DataFrame, predicates) -> DataFrame:
     return df
 
 
+def _ledger_form(schema) -> dict:
+    """``{column: simpleString}`` — how the manifest records a written
+    schema (the ``schemas`` ledger, a CDC entry's ``cdc_schema``)."""
+    return {f.name: f.dataType.simpleString() for f in schema.fields}
+
+
 def _ledger_struct(entry: dict, segs):
     """StructType for a UNIFORM flat read of ``segs``, from the
     manifest's schema ledger — or ``None`` when any segment lacks a
@@ -3454,8 +3485,6 @@ def _ledger_struct(entry: dict, segs):
     inference / mergeSchema). Ledger types are ``simpleString`` forms
     recorded at write time, which round-trip through DDL parsing;
     unparseable forms return ``None`` rather than guessing."""
-    from pyspark.sql.types import StructType
-
     schemas = entry.get("schemas", {})
     known = [schemas[s] for s in segs if s in schemas]
     if len(known) != len(segs) or not known:
@@ -3463,7 +3492,17 @@ def _ledger_struct(entry: dict, segs):
     forms = {json.dumps(k, sort_keys=True) for k in known}
     if len(forms) != 1:
         return None
-    sch = known[0]
+    return _ddl_struct(known[0])
+
+
+def _ddl_struct(sch: dict | None):
+    """StructType for a ``{column: simpleString}`` ledger form (the
+    ``schemas`` ledger, a CDC entry's ``cdc_schema``), or ``None`` when
+    it is absent or does not parse — the caller then infers."""
+    from pyspark.sql.types import StructType
+
+    if not sch:
+        return None
     if any("`" in c for c in sch):
         return None  # cannot safely backquote
     try:
@@ -3577,7 +3616,7 @@ def _stage_segment(
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(staged)
             if check_constraints:
-                _check_constraints(spark, path, staged)
+                _check_constraints(spark, path, staged, frame.schema)
     except BaseException:
         for d in (staged, *cleanup):
             shutil.rmtree(d, ignore_errors=True)
@@ -3641,7 +3680,7 @@ def _commit_rewrite(
         bloom_cols = sorted({c for b in latest.get("bloom", {}).values() for c in b})
         written = {"num_files": 0, "num_rows": 0, "bytes": 0}
         for seg, (d, frame) in staged.items():
-            schema = {f.name: f.dataType.simpleString() for f in frame.schema.fields}
+            schema = _ledger_form(frame.schema)
             entry.setdefault("schemas", {})[seg] = schema
             if partition_by:
                 entry.setdefault("partition_by", {})[seg] = list(partition_by)
@@ -3817,16 +3856,27 @@ def compact(
         # the `want` tasks, so each partition dir gets ONE file while
         # distinct values spread across tasks.
         compacted = compacted.repartition(want, *keep_layout)
-    elif compacted.rdd.getNumPartitions() >= want:
-        # coalesce, not repartition: narrowing to `want` write tasks
-        # needs no shuffle of the scanned bytes.
-        compacted = compacted.coalesce(want)
     else:
-        # The scan has FEWER partitions than the byte-derived target
-        # (few very large input files): coalesce can only narrow, so
-        # the ~target_file_mb sizing contract would silently degrade to
-        # input-file-count parallelism — pay one shuffle to widen.
-        compacted = compacted.repartition(want)
+        # The snapshot read's scan width, counted on the same scan
+        # WITHOUT its DV anti-join: the broadcast join keeps the probe
+        # side's partitioning, and a bare scan's count comes from
+        # driver-side file planning, while ``.rdd`` of the joined plan
+        # would run the DV broadcast as a job just to count.
+        scan_parts = _read_segment_dirs(
+            spark, path, latest["segments"], latest,
+            _schemas_diverge(latest, latest["segments"]),
+            with_pos=bool(latest.get("dv")), encryption_key=encryption_key,
+        ).rdd.getNumPartitions()
+        # coalesce, not repartition: narrowing to `want` write tasks
+        # needs no shuffle of the scanned bytes. A scan with FEWER
+        # partitions than the byte-derived target (few very large input
+        # files) cannot narrow to it, and the ~target_file_mb sizing
+        # contract would silently degrade to input-file-count
+        # parallelism — pay one shuffle to widen.
+        compacted = (
+            compacted.coalesce(want) if scan_parts >= want
+            else compacted.repartition(want)
+        )
     staged = _stage_segment(
         spark, path, compacted, latest, encryption_key, partition_by=keep_layout
     )
@@ -6505,9 +6555,11 @@ def change_feed(
             # sidecar at write time (update_preimage / update_postimage
             # / insert legs, Delta's CDF row types), so the feed reads
             # O(changed rows) — never a diff of the rewritten segments.
-            frames.append(
-                spark.read.parquet(os.path.join(path, cur["cdc"]))
-            )
+            # The entry's ``cdc_schema`` skips the schema-inference job;
+            # entries written before it was recorded keep inference.
+            st = _ddl_struct(cur.get("cdc_schema"))
+            reader = spark.read.schema(st) if st is not None else spark.read
+            frames.append(reader.parquet(os.path.join(path, cur["cdc"])))
         else:
             # OVERWRITE / RESTORE (r13) and — r14, the last feed-killing
             # transition class — UPDATE/MERGE committed WITHOUT a CDC
@@ -7535,6 +7587,9 @@ def _merge_upsert_on(
     else:
         cand_segs = list(segs)
     touched_files = []
+    # Target keys that matched (under-cap path): the CDC legs' update/
+    # insert split, known from the same collect as the touched files.
+    tgt_vals = []
     if cand_segs:
         tgt = _read_segment_dirs(
             spark, path, cand_segs, latest, evolved=False, with_pos=True,
@@ -7547,11 +7602,19 @@ def _merge_upsert_on(
             hit = probe.filter(
                 F.col(key_col).isin(key_vals) if key_vals else F.lit(False)
             )
+            # metadata-collect: one row per matched key (<= cap) with
+            # the files holding it — Delta's touched-file discovery and
+            # the matched-key set in one job chain; rows never collected.
+            # Every live row of a touched segment whose key is in the
+            # source is a hit, so these keys are exactly the matched
+            # keys the rewrite's pre/post legs need.
+            by_key = hit.groupBy(key_col).agg(F.collect_set("fp")).collect()
+            touched_files = {fp for r in by_key for fp in r[1]}
+            tgt_vals = [r[0] for r in by_key]
         else:
             hit = probe.join(F.broadcast(keys), key_col, "inner")
-        # metadata-collect: O(matched files) distinct paths — Delta's
-        # touched-file discovery; rows are never collected.
-        touched_files = [r.fp for r in hit.select("fp").distinct().collect()]
+            # metadata-collect: O(matched files) distinct paths.
+            touched_files = [r.fp for r in hit.select("fp").distinct().collect()]
     # Map each touched file to its segment by DIRECTORY ANCESTRY (a
     # Hive-partitioned segment's files live under col=value/ subdirs;
     # its segment dir is an ancestor, not the dirname) — name-substring
@@ -7626,13 +7689,10 @@ def _merge_upsert_on(
                 matched = kept_scan.filter(
                     F.col(key_col).isin(key_vals) if key_vals else F.lit(False)
                 )
-                # metadata-collect: target-matched keys, a SUBSET of the
-                # cap-bounded collected key set — one bounded collect
-                # replaces the two broadcast builds the post/ins legs'
-                # semi/anti joins would pay.
-                tgt_vals = [
-                    r[0] for r in matched.select(key_col).distinct().collect()
-                ]
+                # The touched-file collect's matched keys (a SUBSET of
+                # the cap-bounded source keys) as literals replace the
+                # two broadcast builds the post/ins legs' semi/anti
+                # joins would pay.
                 post_pred = (
                     F.col(key_col).isin(tgt_vals) if tgt_vals else F.lit(False)
                 )
@@ -7656,6 +7716,7 @@ def _merge_upsert_on(
             staged_cdc, _n, _cdc_schema = _stage_cdc(path, [pre, post, ins])
             if staged_cdc:
                 fields["cdc"] = f"cdc-{version}"
+                fields["cdc_schema"] = _ledger_form(_cdc_schema)
                 renames[staged_cdc] = fields["cdc"]
                 # The committed rewrite is built from the sidecar's OWN
                 # post/insert rows read back (they are exactly the
@@ -8090,6 +8151,7 @@ def update_where(
             return _no_op
         n_updated = _n // 2  # pre + post legs, one each per matched row
         fields["cdc"] = f"cdc-{version}"
+        fields["cdc_schema"] = _ledger_form(_cdc_schema)
         renames[staged_cdc] = fields["cdc"]
         # Explicit part-file list: an underscore-prefixed staged
         # root trips Spark's hidden-path heuristics.

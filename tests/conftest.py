@@ -16,7 +16,7 @@ TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
 def spark():
     from argodb_mapreduce_spark.session import get_spark
 
-    spark = get_spark("argodb_mapreduce_spark-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark("argodb_mapreduce_spark-tests")
     yield spark
     spark.stop()
 
@@ -24,3 +24,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return TEST_SF_DIR
+
+
+def jobs_of(spark, fn):
+    """Run ``fn()`` under a fresh job group; return ``(result, jobs)``,
+    ``jobs`` being the Spark jobs it launched — the statusTracker
+    measure the benchmark's ``pass_jobs`` uses."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    # Job-start events reach the status store through the listener bus.
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,8 +18,12 @@ from pyspark.sql import functions as F
 from argodb_mapreduce_spark.sources.versioned import (
     _read_manifest,
     _read_properties,
+    _write_manifest,
+    add_constraint,
     change_feed,
     clone_table,
+    compact,
+    delete_keys,
     delete_where,
     enable_change_data_feed,
     merge_upsert,
@@ -28,6 +33,7 @@ from argodb_mapreduce_spark.sources.versioned import (
     vacuum,
     versioned_write,
 )
+from tests.conftest import jobs_of
 
 
 def _base(spark, tmp_path, n=60):
@@ -176,6 +182,97 @@ def test_feed_spans_append_update_delete_mix(spark, tmp_path):
     assert live.exceptAll(replayed).count() == 0
 
 
+def _rows(feed):
+    return sorted(tuple(r) for r in feed.collect())
+
+
+def test_change_feed_reads_older_entries_without_cdc_schema(spark, tmp_path):
+    """UPDATE and MERGE record their sidecar's schema on the commit entry
+    (``cdc_schema``, the ledger's ``{column: simpleString}`` form) and
+    the feed reads the sidecar with it; an older entry without the field
+    still reads, by inference, to the same rows and columns."""
+    p = _base(spark, tmp_path, n=40)
+    enable_change_data_feed(p)
+    update_where(spark, p, [("k", "<", 10)], {"v": F.col("v") + 1})  # v1
+    src = spark.range(35, 45).select(
+        F.col("id").alias("k"),
+        F.lit(7).cast("long").alias("g"),
+        F.lit(-1).cast("long").alias("v"),
+    )
+    merge_upsert(spark, p, src, "k")  # v2
+    entries = _read_manifest(p)
+    want_schema = {"k": "bigint", "g": "bigint", "v": "bigint", "_change_type": "string"}
+    assert [e.get("cdc_schema") for e in entries] == [None, want_schema, want_schema]
+    feed = change_feed(spark, p, 0, 2)
+    columns, rows = feed.schema, _rows(feed)
+    assert len(rows) == 10 + 10 + 5 + 5 + 5  # update pre/post, merge pre/post/insert
+    for e in entries:
+        e.pop("cdc_schema", None)
+    _write_manifest(p, entries)
+    assert all("cdc_schema" not in e for e in _read_manifest(p))
+    older = change_feed(spark, p, 0, 2)
+    assert older.schema == columns
+    assert _rows(older) == rows
+
+
+def test_dml_iteration_job_budget(spark, tmp_path):
+    """Spark-job budget of one DML iteration on a CDF table with a
+    pending deletion vector — the shape of the benchmark's ``lake_dml``
+    pass. Metadata the store already holds costs no job: MERGE takes
+    its touched files and matched keys from one collect, the change
+    feed reads CDC sidecars and DV-probed files with recorded schemas,
+    and OPTIMIZE sizes its write from the scan without running the DV
+    broadcast. A verb that starts launching a job more fails here."""
+    schema = "k long, g long, v long"
+
+    def rows(keys):
+        return spark.createDataFrame([(k, k % 3, k * 10) for k in keys], schema)
+
+    p = _base(spark, tmp_path, n=300)
+    enable_change_data_feed(p)
+    start = _read_manifest(p)[-1]["version"]
+    append_df = rows(range(300, 320))
+    delete_df = spark.createDataFrame([(5,), (17,), (33,)], "k long")
+    merge_keys = [*range(100, 110), *range(320, 330)]
+    merge_df = rows(merge_keys).withColumn("v", F.lit(-1).cast("long"))
+    window = [("k", ">=", 200), ("k", "<", 240)]
+    verbs = {
+        "append": lambda: versioned_write(append_df, p, mode="append"),
+        "delete_keys": lambda: delete_keys(spark, p, delete_df, "k"),
+        "update_where": lambda: update_where(spark, p, window, {"v": F.col("v") + 1}),
+        "merge_upsert": lambda: merge_upsert(spark, p, merge_df, "k"),
+    }
+    jobs = {verb: jobs_of(spark, run)[1] for verb, run in verbs.items()}
+    head = _read_manifest(p)[-1]["version"]
+    feed, jobs["change_feed"] = jobs_of(
+        spark,
+        lambda: _rows(change_feed(spark, p, start, head).select("_change_type", "k")),
+    )
+    _, jobs["compact"] = jobs_of(spark, lambda: compact(spark, p))
+    assert jobs == {
+        "append": 1,
+        "delete_keys": 4,
+        "update_where": 4,
+        "merge_upsert": 10,
+        "change_feed": 4,
+        "compact": 2,
+    }
+    # The budget holds with the results unchanged.
+    assert Counter(change for change, _k in feed) == {
+        "insert": 20 + 10,
+        "delete": 3,
+        "update_preimage": 40 + 10,
+        "update_postimage": 40 + 10,
+    }
+    model = {k: k * 10 for k in range(330)}
+    for k in (5, 17, 33):
+        del model[k]
+    model.update({k: model[k] + 1 for k in range(200, 240)})
+    model.update({k: -1 for k in merge_keys})
+    table = snapshot_read(spark, p).select("k", "v").collect()
+    assert sorted(tuple(r) for r in table) == sorted(model.items())
+
+
 def test_vacuum_reclaims_expired_sidecar_keeps_retained(spark, tmp_path):
     p = _base(spark, tmp_path)
     enable_change_data_feed(p)
@@ -205,6 +302,32 @@ def test_constraint_failure_cleans_staged_sidecar(spark, tmp_path):
     leftovers = [d for d in os.listdir(p) if d.startswith(("_staged-", "cdc-"))]
     assert leftovers == []
     assert "cdc" not in _read_manifest(p)[-1]
+
+
+def test_constraint_check_reads_back_without_inference(spark, tmp_path):
+    """The CHECK read-back of a staged UPDATE / MERGE segment uses the
+    written frame's schema: a constrained table pays the check's own
+    count jobs and no footer schema-inference job on top."""
+    src = spark.range(55, 65).select(
+        F.col("id").alias("k"),
+        F.lit(1).cast("long").alias("g"),
+        F.lit(5).cast("long").alias("v"),
+    )
+    jobs = {}
+    for name in ("plain", "constrained"):
+        p = _base(spark, tmp_path / name)
+        if name == "constrained":
+            add_constraint(spark, p, "v_nonneg", "v >= 0")
+        _, upd = jobs_of(
+            spark, lambda: update_where(spark, p, [("k", "<", 5)], {"v": F.col("v") + 1})
+        )
+        _, mrg = jobs_of(spark, lambda: merge_upsert(spark, p, src, "k"))
+        jobs[name] = (upd, mrg)
+        assert snapshot_read(spark, p).filter("v = 5").count() == 10
+    (upd, mrg), (c_upd, c_mrg) = jobs["plain"], jobs["constrained"]
+    # The check itself is one count per constraint: a map stage and a
+    # result stage, one job each.
+    assert (c_upd - upd, c_mrg - mrg) == (2, 2)
 
 
 def test_clone_inherits_properties_fresh_feed_history(spark, tmp_path):

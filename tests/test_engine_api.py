@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from argodb_mapreduce_spark.catalog import Engine, ScanError
@@ -68,3 +70,20 @@ def test_register_views_enables_plain_sql(spark, engine, sf_dir):
     ).collect()[0]["n"]
     li = engine.table("tpch.lineitem").count()
     assert got == li  # every lineitem row has its order
+
+
+def test_session_defaults_fit_the_host(monkeypatch):
+    """Without overrides the session factory sizes itself from this
+    machine — never more cores than the process may run on, never a
+    driver heap larger than physical RAM; the env overrides win."""
+    from argodb_mapreduce_spark.session import _session_defaults
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    cpus, memory = _session_defaults()
+    assert 1 <= cpus <= len(os.sched_getaffinity(0))
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert memory.endswith("g") and int(memory[:-1]) * 2**30 <= ram
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "2g")
+    assert _session_defaults() == (3, "2g")
