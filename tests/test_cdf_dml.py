@@ -634,7 +634,10 @@ def test_signed_feed_replay_reconstructs_head_for_any_history(ops):
     on a CDF-enabled, bloom-tracked table, replaying the signed change
     feed over v0 must reproduce the head snapshot exactly — the
     invariant every CDC consumer (MV, replica, index) relies on — and
-    the head must equal a pure-Python ``{k: v}`` model of the ops."""
+    the head must equal a pure-Python row model of the ops. The model is
+    a row list, not a ``{k: v}`` dict: a MERGE whose window runs past the
+    largest key repeats a fresh key in its source, and both unmatched
+    source rows are inserted."""
     import uuid
 
     from argodb_mapreduce_spark.sources.versioned import (
@@ -653,7 +656,7 @@ def test_signed_feed_replay_reconstructs_head_for_any_history(ops):
     # blooms forward and rebuild them for the new segments.
     versioned_write(df, p, bloom_columns=["k"])
     enable_change_data_feed(p)
-    model = {k: k * 10 for k in range(50)}
+    model = [(k, k * 10) for k in range(50)]
     nxt = [50]
     for kind, arg in ops:
         if kind == "append":
@@ -665,27 +668,23 @@ def test_signed_feed_replay_reconstructs_head_for_any_history(ops):
                 p,
                 mode="append",
             )
-            model.update({k: k * 10 for k in range(a, a + 5 + arg)})
+            model += [(k, k * 10) for k in range(a, a + 5 + arg)]
             nxt[0] = a + 5 + arg
         elif kind == "update":
             update_where(
                 spark, p, [("k", ">=", arg), ("k", "<", arg + 7)],
                 {"v": F.col("v") + 1},
             )
-            for k in model:
-                if arg <= k < arg + 7:
-                    model[k] += 1
+            model = [(k, v + 1 if arg <= k < arg + 7 else v) for k, v in model]
         elif kind == "delete":
             delete_where(spark, p, [("k", ">=", arg), ("k", "<", arg + 3)])
-            for k in range(arg, arg + 3):
-                model.pop(k, None)
+            model = [(k, v) for k, v in model if not arg <= k < arg + 3]
         elif kind == "delete_keys":
             delete_keys(
                 spark, p,
                 spark.createDataFrame([(arg,), (arg + 1,), (9999,)], ["k"]), "k",
             )
-            for k in (arg, arg + 1):
-                model.pop(k, None)
+            model = [(k, v) for k, v in model if k not in (arg, arg + 1)]
         elif kind == "merge":  # update existing window + insert fresh keys
             a = nxt[0]
             src = spark.range(arg, arg + 4).select(
@@ -696,8 +695,12 @@ def test_signed_feed_replay_reconstructs_head_for_any_history(ops):
                 )
             )
             merge_upsert(spark, p, src, "k")
-            model.update({k: -5 for k in range(arg, arg + 4)})
-            model.update({k: -7 for k in range(a, a + 3)})
+            src_rows = [(k, -5) for k in range(arg, arg + 4)]
+            src_rows += [(k, -7) for k in range(a, a + 3)]
+            present = {k for k, _v in model}
+            matched = {k: v for k, v in src_rows if k in present}
+            model = [(k, matched.get(k, v)) for k, v in model]
+            model += [(k, v) for k, v in src_rows if k not in present]
             nxt[0] = a + 3
         elif kind == "compact":
             compact(spark, p)
@@ -707,7 +710,7 @@ def test_signed_feed_replay_reconstructs_head_for_any_history(ops):
             zorder_rewrite(spark, p, "k", "v", n_segments=arg)
     head_v = _read_manifest(p)[-1]["version"]
     head = snapshot_read(spark, p, head_v).select("k", "v")
-    assert sorted(tuple(r) for r in head.collect()) == sorted(model.items())
+    assert sorted(tuple(r) for r in head.collect()) == sorted(model)
     if head_v == 0:
         return  # every op no-opped (possible when deletes hit erased keys)
     feed = change_feed(spark, p, 0, head_v)
