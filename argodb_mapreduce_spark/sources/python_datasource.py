@@ -66,10 +66,9 @@ def make_versioned_datasource():
     import os as _os
 
     # Captured on the DRIVER at registration time and shipped by value:
-    # the writer's commit worker prepends it to sys.path so the guarded
-    # repo imports (stats harvest, commit lock) work even when the
-    # worker's PYTHONPATH lacks the repo (same-machine local mode; a
-    # real cluster with a different layout still degrades gracefully).
+    # the writer's commit worker prepends it to sys.path so the repo
+    # imports (the versioned store's commit path) work even when the
+    # worker's PYTHONPATH lacks the repo (same-machine local mode).
     _REPO_ROOT = _os.path.dirname(
         _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
     )
@@ -78,7 +77,7 @@ def make_versioned_datasource():
         """Import the dependency-light log-structured manifest module
         with the _REPO_ROOT sys.path guard: plan/commit run in
         driver-side data-source WORKER processes whose PYTHONPATH may
-        lack the repo — same pattern as the commit-lock import. Defined
+        lack the repo — same pattern as the writer commit's import. Defined
         in this closure so the classes pickle it BY VALUE (a module-
         level reference would unpickle-by-import and fail on workers)."""
         import sys as _sys
@@ -1421,308 +1420,191 @@ def make_versioned_datasource():
             return self._write_flat(iterator, out_dir, tag)
 
         def commit(self, messages):
-            # Serialize with native writers when the repo package is
-            # importable (commit runs in the driver-side data-source
-            # worker; _REPO_ROOT was captured at registration so the
-            # import works there too): take the same per-table commit
-            # lock + fencing versioned_write uses, so a pyds write
-            # racing a native append can no longer double-allocate a
-            # version. Degrades to the unlocked legacy publish only if
-            # the import fails (foreign cluster layout).
+            # Commit runs in a driver-side data-source worker process;
+            # _REPO_ROOT was captured at registration so the package
+            # imports there too. Every manifest append goes through
+            # versioned._commit_entry — the same lock, fence, orphan
+            # clearing and ledger carry as the native writers.
+            import glob as _glob
+            import shutil as _shutil
             import sys as _sys
 
             if _REPO_ROOT not in _sys.path:
                 _sys.path.insert(0, _REPO_ROOT)
-            try:
-                from argodb_mapreduce_spark.sources.versioned import (
-                    _commit_lock as _vlock,
-                    _verify_lock as _vverify,
-                )
-            except Exception:  # noqa: BLE001 - lock is driver-env parity
-                self._publish(messages, lambda: None)
-                return
-            with _vlock(self.path) as tok:
-                self._publish(messages, lambda: _vverify(self.path, tok))
+            import pyarrow.parquet as _pq
+            from pyspark.sql.pandas.types import from_arrow_schema
 
-        def _publish(self, messages, verify):
-            import shutil as _shutil
+            from argodb_mapreduce_spark.sources import versioned as _v
 
-            _ml = _manifest_log()
-
-            entries = []
-            manifest = _os.path.join(self.path, "_snapshots.json")
-            if _os.path.exists(manifest):
-                entries = _ml.read_entries(self.path)
-            # Authoritative encryption-transition gate, under the lock:
-            # the plan-time copy can be raced (or skipped by the
-            # degraded no-lock path) — a mixed encrypted/plaintext
-            # version must be impossible to COMMIT, not just to plan.
-            _check_encryption_transition(
-                entries[-1] if entries else None,
-                self.encryption_key,
-                self.overwrite,
-                self.path,
-                self.enc_cols,
-            )
-            version = entries[-1]["version"] + 1 if entries else 0
-            segment = f"data-{version}"
             # Publish ONLY the files named by the winning task attempts'
             # commit messages (the reference DataSource commit protocol).
             # Retried/speculative attempts may have left extra parquet
             # files in staging; moving by-message instead of renaming the
             # whole dir keeps them out of the committed version.
             staging_dir = _os.path.join(self.path, self.staging)
-            segment_dir = _os.path.join(self.path, segment)
-            relpaths = []
-            for msg in messages:
-                if msg is None:
-                    continue
-                if getattr(msg, "relpaths", ()):
-                    relpaths.extend(msg.relpaths)
-                elif msg.filename is not None:
-                    relpaths.append(msg.filename)
-            # Fence BEFORE the first mutation (same order as
-            # versioned._commit_entry): a holder whose lock was
-            # stale-broken during a pause must abort HERE — the orphan
-            # rmtree below would otherwise destroy the successor's
-            # freshly committed same-name segment.
-            verify()
-            # Column mapping OCC (r13): re-check the plan-time snapshot
-            # under the lock and identity-extend for new columns — a
-            # concurrent RENAME/DROP between plan and publish must
-            # abort, or the staged bytes would land under a stale
-            # physical name that every logical read resolves wrongly.
-            if self.mapping_snapshot:
-                props_path = _os.path.join(self.path, "_properties.json")
-                props = {}
-                if _os.path.exists(props_path):
-                    with open(props_path) as f:
-                        props = _json.load(f)
-                cmap = dict(props.get("column_mapping", {}) or {})
-                retired = props.get("column_mapping_retired", []) or []
-                live_phys = set(cmap.values())
-                changed = False
-                for log, phys in self.mapping_snapshot.items():
-                    have = cmap.get(log)
-                    if have is None and log in self.new_mappings:
-                        if log in live_phys or log in retired:
-                            raise RuntimeError(
-                                f"concurrent DDL claimed the physical "
-                                f"name {log!r} between plan and commit; "
-                                "retry the write"
-                            )
-                        cmap[log] = log
-                        changed = True
-                    elif have != phys:
-                        raise RuntimeError(
-                            f"column mapping changed concurrently for "
-                            f"{log!r} (planned physical {phys!r}, now "
-                            f"{have!r}); retry the write"
-                        )
-                if changed:
-                    import tempfile as _tf
-
-                    props["column_mapping"] = cmap
-                    fd, tmp = _tf.mkstemp(
-                        dir=self.path, prefix="_properties", suffix=".tmp"
-                    )
-                    with _os.fdopen(fd, "w") as f:
-                        _json.dump(props, f, indent=1)
-                    _os.replace(tmp, props_path)
-            # Orphan recovery (the versioned_write_txn contract): a
-            # crash between a previous attempt's segment creation and
-            # its manifest publish leaves an unreferenced dir with the
-            # same computed name — clear it instead of failing forever.
-            referenced = {s for e in entries for s in e["segments"]}
-            if segment not in referenced and _os.path.isdir(segment_dir):
-                import shutil as _sh
-
-                _sh.rmtree(segment_dir)
-            _os.makedirs(segment_dir)
-            for rel in relpaths:
-                dst = _os.path.join(segment_dir, rel)
-                _os.makedirs(_os.path.dirname(dst), exist_ok=True)
-                _os.rename(_os.path.join(staging_dir, rel), dst)
-            _shutil.rmtree(staging_dir, ignore_errors=True)
-            prev = entries[-1]["segments"] if (entries and not self.overwrite) else []
-            # Manifest stats parity with versioned_write: harvest the new
-            # segment's min/max from its parquet footers so reads through
-            # snapshot_read(..., predicates=) can data-skip writer-made
-            # segments too. Guarded: if the repo package is unimportable
-            # in this commit context, stats are simply absent — pruning
-            # degrades to scan-everything, never to wrong answers.
-            stats = dict(entries[-1].get("stats", {})) if (entries and not self.overwrite) else {}
-            stats = {s: stats[s] for s in prev if s in stats}
-            # Encrypted segments record NO stats — by design, not just
-            # because the keyless harvest can't read them: plaintext
-            # min/max in the manifest would leak value ranges of
-            # encrypted columns. (Touching an encrypted column's chunk
-            # metadata without keys hard-ABORTS the process in
-            # parquet-cpp, so this gate is also a safety wall, never a
-            # swallowed exception.)
-            if not self.encryption_key or self.enc_cols:
-                try:
-                    from argodb_mapreduce_spark.sources.versioned import (
-                        _partition_stats as _ps,
-                    )
-                    from argodb_mapreduce_spark.sources.versioned import (
-                        _segment_stats_plaintext as _ssp,
-                    )
-                    from argodb_mapreduce_spark.sources.versioned import (
-                        collect_segment_stats as _css,
-                    )
-
-                    if self.enc_cols:
-                        # COLUMN-encrypted segment: harvest min/max for
-                        # the PLAINTEXT columns only — keyless-safe by
-                        # construction (_segment_stats_plaintext picks
-                        # indices from the plaintext footer schema
-                        # before touching any column-chunk metadata),
-                        # and no encrypted column's value range ever
-                        # reaches the manifest.
-                        stats[segment] = _ssp(
-                            segment_dir, exclude=self.enc_cols
-                        )
-                    else:
-                        stats[segment] = _css(segment_dir)
-                    if self.partition_by:
-                        # Partition-column min/max from the dir names, same
-                        # harvest the native partitioned write records.
-                        stats[segment].update(
-                            _ps(
-                                segment_dir,
-                                [c for c, _t in self.partition_by],
-                                dict(self.partition_by),
-                            )
-                        )
-                except Exception:  # noqa: BLE001 - stats are an optimization only
-                    pass
-            entry = {"version": version, "segments": [*prev, segment], "stats": stats}
-            if self.encryption_key:
-                # Marker every native read path gates on (fail loud,
-                # never a keyless scan attempt) and pyds reads use to
-                # demand the key — plus the master's HMAC fingerprint
-                # so a later append/read under a DIFFERENT key is
-                # rejected at plan time (a mixed-master version would
-                # be unreadable by any single key).
-                entry["encrypted"] = True
-                entry["key_fp"] = _key_fp_of(self.encryption_key)
-                if self.enc_cols:
-                    # COLUMN-level encryption: the protected set is
-                    # part of the version contract — keyless
-                    # plaintext-subset reads and the append-shape gate
-                    # both key off it.
-                    entry["enc_columns"] = list(self.enc_cols)
-            # Manifest parity with versioned_write: an append carries the
-            # previous deletion vector forward (its positions reference
-            # only reused segments; dropping it would resurrect deleted
-            # rows AND make a plain append look like a DV change to the
-            # stream source), records the per-segment schema ledger so
-            # later schema enforcement / mergeSchema gating keeps
-            # working, and stamps the commit wall-clock so AS OF
-            # TIMESTAMP resolution stays correct for pyds-written
-            # versions.
-            if entries and not self.overwrite:
-                schemas = dict(entries[-1].get("schemas", {}))
-                schemas = {s: schemas[s] for s in prev if s in schemas}
-                if entries[-1].get("dv"):
-                    entry["dv"] = entries[-1]["dv"]
-            else:
-                schemas = {}
+            staged = _v._stage_dir(self.path)
             try:
-                import glob as _glob
-
-                import pyarrow.parquet as _pq2
-                from pyspark.sql.pandas.types import from_arrow_schema as _fas
-
-                seg_files = sorted(
-                    _glob.glob(
-                        _os.path.join(segment_dir, "**", "*.parquet"), recursive=True
+                _os.makedirs(staged)
+                for msg in messages:
+                    if msg is None:
+                        continue
+                    rels = getattr(msg, "relpaths", ()) or (
+                        (msg.filename,) if msg.filename is not None else ()
                     )
+                    for rel in rels:
+                        dst = _os.path.join(staged, rel)
+                        _os.makedirs(_os.path.dirname(dst), exist_ok=True)
+                        _os.rename(_os.path.join(staging_dir, rel), dst)
+                _shutil.rmtree(staging_dir, ignore_errors=True)
+                part_cols = [c for c, _t in self.partition_by]
+                stats, metrics = _v._harvest_segment(
+                    staged,
+                    part_cols,
+                    dict(self.partition_by),
+                    bool(self.encryption_key),
+                    self.enc_cols,
                 )
-                if seg_files:
-                    st = _fas(_us_schema(_pq2.ParquetFile(seg_files[0]).schema_arrow))
+                # Schema ledger from the first footer (plaintext even on
+                # encrypted files); partition columns live in dir names,
+                # so their write-schema types complete it.
+                files = sorted(
+                    _glob.glob(_os.path.join(staged, "**", "*.parquet"), recursive=True)
+                )
+                ledger = None
+                if files:
+                    st = from_arrow_schema(_us_schema(_pq.ParquetFile(files[0]).schema_arrow))
                     ledger = {f.name: f.dataType.simpleString() for f in st.fields}
-                    # Partition columns live in dir names, not footers:
-                    # the ledger records them too (versioned_write's
-                    # ledger is the full frame schema).
-                    for c, t in self.partition_by:
-                        ledger[c] = t
-                    schemas[segment] = ledger
-            except Exception:  # noqa: BLE001 - ledger is enforcement metadata
-                pass
-            if schemas:
-                entry["schemas"] = schemas
-            if self.partition_by:
-                # Layout ledger: reused segments keep theirs, the new
-                # segment records its own — native reads, the pyds
-                # reader, DML, and OPTIMIZE all dispatch on this.
-                parts_ledger = (
-                    dict(entries[-1].get("partition_by", {}))
-                    if (entries and not self.overwrite)
-                    else {}
-                )
-                parts_ledger = {s: parts_ledger[s] for s in prev if s in parts_ledger}
-                parts_ledger[segment] = [c for c, _t in self.partition_by]
-                entry["partition_by"] = parts_ledger
-            elif entries and not self.overwrite and entries[-1].get("partition_by"):
-                carried = {
-                    s: v
-                    for s, v in entries[-1]["partition_by"].items()
-                    if s in prev
-                }
-                if carried:
-                    entry["partition_by"] = carried
-            import time as _time
+                    ledger.update(self.partition_by)
 
-            # KEK publish (r14 rotation): a key minted at plan time
-            # lands in the sidecar HERE — under the lock, AFTER every
-            # other abort point (transition gate, mapping OCC, stats,
-            # entry build), immediately before the manifest append — so
-            # an aborted commit cannot leave a sidecar that re-keys a
-            # table it never wrote. A concurrent writer that published
-            # a DIFFERENT KEK for the same master between our plan and
-            # commit aborts this write (our staged files are wrapped
-            # under OUR kek; publishing the manifest entry anyway would
-            # commit files no sidecar-resolved key reads). Sidecar
-            # first, manifest second: a crash between the two leaves an
-            # orphan sidecar for a still-unencrypted table — harmless
-            # (no committed encrypted entry references it), whereas the
-            # reverse order would commit KEK-wrapped files no sidecar
-            # can ever resolve.
-            if self.pending_kek is not None:
-                import json as _jn2
+                def build(entries):
+                    head = entries[-1] if entries else None
+                    # Authoritative encryption-transition gate: the
+                    # plan-time copy can be raced — a mixed
+                    # encrypted/plaintext version must be impossible to
+                    # COMMIT, not just to plan.
+                    _check_encryption_transition(
+                        head,
+                        self.encryption_key,
+                        self.overwrite,
+                        self.path,
+                        self.enc_cols,
+                    )
+                    base = head if (head and not self.overwrite) else {}
+                    if ledger:
+                        _v._check_append_types(base, ledger)
+                    self._commit_column_mapping()
+                    entry = _v._new_segment_entry(
+                        base,
+                        head["version"] + 1 if head else 0,
+                        ledger,
+                        stats,
+                        metrics,
+                        part_cols,
+                    )
+                    if self.encryption_key:
+                        # Marker every native read path gates on (fail
+                        # loud, never a keyless scan attempt) and pyds
+                        # reads use to demand the key — plus the master's
+                        # HMAC fingerprint so a later append/read under a
+                        # DIFFERENT key is rejected at plan time.
+                        entry["encrypted"] = True
+                        entry["key_fp"] = _key_fp_of(self.encryption_key)
+                        if self.enc_cols:
+                            # COLUMN-level encryption: the protected set
+                            # is part of the version contract — keyless
+                            # plaintext-subset reads and the append-shape
+                            # gate both key off it.
+                            entry["enc_columns"] = list(self.enc_cols)
+                    self._publish_kek()
+                    return entry, {staged: entry["segments"][-1]}
 
-                keys_path = _os.path.join(self.path, "_keys.json")
-                sc = {"keks": {}, "current_fp": None, "rotations": 0}
-                if _os.path.exists(keys_path):
-                    with open(keys_path) as f:
-                        sc = _jn2.load(f)
-                have = sc["keks"].get(self.pending_kek["fp"])
-                if have is not None:
-                    if have.get("kek_id") != self.pending_kek["kek_id"]:
+                _v._commit_entry(self.path, None, build)
+            except BaseException:
+                _shutil.rmtree(staged, ignore_errors=True)
+                raise
+
+        def _commit_column_mapping(self):
+            """Column mapping OCC (r13), under the commit lock: re-check
+            the plan-time snapshot and identity-extend for new columns —
+            a concurrent RENAME/DROP between plan and publish must abort,
+            or the staged bytes would land under a stale physical name
+            that every logical read resolves wrongly."""
+            from argodb_mapreduce_spark.sources import versioned as _v
+
+            if not self.mapping_snapshot:
+                return
+            props = _v._read_properties(self.path)
+            cmap = dict(props.get("column_mapping", {}) or {})
+            retired = props.get("column_mapping_retired", []) or []
+            live_phys = set(cmap.values())
+            changed = False
+            for log, phys in self.mapping_snapshot.items():
+                have = cmap.get(log)
+                if have is None and log in self.new_mappings:
+                    if log in live_phys or log in retired:
                         raise RuntimeError(
-                            "concurrent writer published a different "
-                            "key-encryption key for this master between "
-                            "plan and commit; retry the write"
+                            f"concurrent DDL claimed the physical "
+                            f"name {log!r} between plan and commit; "
+                            "retry the write"
                         )
-                else:
-                    sc["keks"][self.pending_kek["fp"]] = {
-                        "wrapped": self.pending_kek["wrapped"],
-                        "kek_id": self.pending_kek["kek_id"],
-                    }
-                sc["current_fp"] = self.pending_kek["fp"]
-                tmpk = keys_path + f".tmp-{_os.getpid()}"
-                with open(tmpk, "w") as f:
-                    _jn2.dump(sc, f)
-                _os.replace(tmpk, keys_path)
-            entry["ts"] = _time.time()
-            entries.append(entry)
-            verify()  # fencing: abort if our lock was stale-broken
-            # Log-structured commit: one per-commit JSON file lands
-            # atomically (+ amortized checkpoint) — same layout and
-            # cost model as versioned._append_manifest_entry.
-            _ml.append_entry(self.path, entries)
+                    cmap[log] = log
+                    changed = True
+                elif have != phys:
+                    raise RuntimeError(
+                        f"column mapping changed concurrently for "
+                        f"{log!r} (planned physical {phys!r}, now "
+                        f"{have!r}); retry the write"
+                    )
+            if changed:
+                import tempfile as _tf
+
+                props["column_mapping"] = cmap
+                fd, tmp = _tf.mkstemp(
+                    dir=self.path, prefix="_properties", suffix=".tmp"
+                )
+                with _os.fdopen(fd, "w") as f:
+                    _json.dump(props, f, indent=1)
+                _os.replace(tmp, _os.path.join(self.path, _v.PROPERTIES))
+
+        def _publish_kek(self):
+            """KEK publish (r14 rotation), the last step of the commit's
+            build callback: a key minted at plan time lands in the sidecar
+            under the lock, AFTER every check that can refuse the commit
+            and immediately before the manifest append — so an aborted commit
+            cannot leave a sidecar that re-keys a table it never wrote. A
+            concurrent writer that published a DIFFERENT KEK for the same
+            master between our plan and commit aborts this write (our
+            staged files are wrapped under OUR kek; publishing the
+            manifest entry anyway would commit files no sidecar-resolved
+            key reads). Sidecar first, manifest second: a crash between
+            the two leaves an orphan sidecar for a still-unencrypted
+            table — harmless (no committed encrypted entry references
+            it), whereas the reverse order would commit KEK-wrapped files
+            no sidecar can ever resolve."""
+            from argodb_mapreduce_spark.sources import versioned as _v
+
+            if self.pending_kek is None:
+                return
+            sc = _v._read_keys_sidecar(self.path) or {
+                "keks": {},
+                "current_fp": None,
+                "rotations": 0,
+            }
+            have = sc["keks"].get(self.pending_kek["fp"])
+            if have is not None:
+                if have.get("kek_id") != self.pending_kek["kek_id"]:
+                    raise RuntimeError(
+                        "concurrent writer published a different "
+                        "key-encryption key for this master between "
+                        "plan and commit; retry the write"
+                    )
+            else:
+                sc["keks"][self.pending_kek["fp"]] = {
+                    "wrapped": self.pending_kek["wrapped"],
+                    "kek_id": self.pending_kek["kek_id"],
+                }
+            sc["current_fp"] = self.pending_kek["fp"]
+            _v._write_keys_sidecar(self.path, sc)
 
         def abort(self, messages):
             import shutil as _shutil

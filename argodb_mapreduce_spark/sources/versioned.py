@@ -37,6 +37,15 @@ segments, carries the kept segments' ledgers and deletion vector
 forward (:func:`_carry_forward`, which the DV-only DELETEs use too)
 and publishes the entry with an OCC-gated :func:`_commit_entry`.
 
+:func:`_commit_entry` is the package's only manifest append. Native
+writes, rollback, key rotation and the pyds Arrow writer's commit pass
+it a build callback instead of an entry: it runs under the commit
+lock, after the fence, on the head actually committed on, and may
+refuse the commit. The shared pieces are :func:`_harvest_segment`
+(footer stats and metrics), :func:`_new_segment_entry` (an appended
+segment on top of the carried ledgers) and :func:`_check_append_types`
+(schema enforcement).
+
 On a table with the change data feed enabled, UPDATE and MERGE also
 publish a ``cdc-N`` sidecar of row-level changes and record it on the
 entry as ``cdc`` plus ``cdc_schema``: the sidecar's schema in the
@@ -122,21 +131,16 @@ def _coerce_literal(lit, stat_sample):
     return lit
 
 
-def collect_segment_stats(seg_path: str) -> dict[str, list]:
-    """Per-column [min, max] for one segment, from parquet footers only.
+def _segment_stats_and_metrics(seg_path: str) -> tuple[dict, dict]:
+    """(min/max stats, operationMetrics) in ONE footer pass — a
+    many-file segment (the small-file ingest shape) must not pay the
+    footer I/O twice per commit.
 
     Columns without usable footer stats (nested types, undecodable
     binary) are simply absent — absent stats disable pruning for that
     column, never correctness. Mirrors how Iceberg builds its manifest
     ``lower_bounds``/``upper_bounds`` from file metadata at commit time.
     """
-    return _segment_stats_and_metrics(seg_path)[0]
-
-
-def _segment_stats_and_metrics(seg_path: str) -> tuple[dict, dict]:
-    """(min/max stats, operationMetrics) in ONE footer pass — a
-    many-file segment (the small-file ingest shape) must not pay the
-    footer I/O twice per commit."""
     import pyarrow.parquet as pq
 
     lo: dict[str, object] = {}
@@ -306,6 +310,29 @@ def _partition_stats(seg_path: str, partition_by, types: dict[str, str]) -> dict
         if vals:
             out[col] = [_stat_encode(min(vals)), _stat_encode(max(vals))]
     return out
+
+
+def _harvest_segment(
+    seg_path: str, partition_by=(), types=None, encrypted=False, enc_cols=None
+) -> tuple[dict | None, dict]:
+    """(min/max stats or None, write metrics) for one just-written
+    segment, from footers and partition directory names only — the
+    harvest every commit of new segments shares.
+
+    An ``encrypted`` segment records no stats (the manifest would leak
+    value ranges) except, with ``enc_cols``, those of its plaintext
+    columns; its metrics come from the keyless file-level header, since
+    touching an encrypted column's chunk metadata without keys
+    hard-aborts parquet-cpp. ``types`` maps the ``partition_by`` columns
+    to their ledger types."""
+    if not encrypted:
+        stats, metrics = _segment_stats_and_metrics(seg_path)
+    else:
+        stats = _segment_stats_plaintext(seg_path, exclude=enc_cols) if enc_cols else None
+        metrics = _segment_file_metrics_keyless(seg_path)
+    if stats is not None and partition_by:
+        stats.update(_partition_stats(seg_path, partition_by, types))
+    return stats, metrics
 
 
 def _segment_partition_cols(entry: dict, segments=None) -> dict[str, list]:
@@ -655,14 +682,6 @@ def _read_manifest(path: str) -> list[dict]:
     return manifest_log.read_entries(path)
 
 
-def _append_manifest_entry(path: str, entries: list[dict]) -> None:
-    """Commit hot path: ``entries`` ends with the just-appended entry;
-    one O(entry) per-commit file lands atomically (+ an amortized
-    checkpoint every CHECKPOINT_INTERVAL commits). Commit cost no
-    longer grows with table history."""
-    manifest_log.append_entry(path, entries)
-
-
 def _write_manifest(path: str, entries: list[dict]) -> None:
     """Wholesale manifest replacement (vacuum, clone bootstrap,
     hand-built fixture histories) — O(history), maintenance-only."""
@@ -829,9 +848,11 @@ def _verify_lock(path: str, token: str) -> None:
 
 
 def _commit_entry(
-    path: str, base_version, entry: dict, cleanup_dirs=(), renames=None
-) -> None:
-    """Optimistic commit: append ``entry`` ONLY if the manifest head is
+    path: str, base_version, entry, cleanup_dirs=(), renames=None
+) -> dict:
+    """The table's only manifest append; returns the committed entry.
+
+    Optimistic commit: append ``entry`` ONLY if the manifest head is
     still ``base_version`` — otherwise remove the staged artifacts and
     raise :class:`ConcurrentWriteError`. Read-dependent commits (DELETE,
     MERGE, compaction) must go through this check: their output was
@@ -839,7 +860,16 @@ def _commit_entry(
     the Delta/Iceberg serializable check-and-retry contract. The
     check-then-append runs under :func:`_commit_lock`, so two commits
     racing the same base serialize: one wins, the other observes the
-    moved head and raises instead of clobbering.
+    moved head and raises instead of clobbering. ``base_version=None``
+    is a blind append: no head check, the entry rebases onto whatever
+    head the lock holder reads.
+
+    ``entry`` may instead be a build callback ``entry(entries) -> (entry,
+    renames)``, called under the lock after the fence with the current
+    manifest entries (``[]`` for a table with no manifest yet) — for
+    commits whose version, segment name or carried ledgers depend on
+    the head actually committed on. It may raise to refuse the commit;
+    the caller then owns the cleanup of whatever it staged.
 
     ``renames`` maps STAGED directory paths to final segment names,
     published by rename INSIDE the lock after the OCC check passes —
@@ -855,20 +885,28 @@ def _commit_entry(
 
     renames = dict(renames or {})
     with _commit_lock(path) as lock_token:
-        entries = _read_manifest(path)
-        if entries[-1]["version"] != base_version:
+        entries = (
+            _read_manifest(path)
+            if os.path.exists(os.path.join(path, MANIFEST))
+            else []
+        )
+        head = entries[-1]["version"] if entries else None
+        if base_version is not None and head != base_version:
             for d in cleanup_dirs:
                 shutil.rmtree(os.path.join(path, d), ignore_errors=True)
             for staged in renames:
                 shutil.rmtree(staged, ignore_errors=True)
             raise ConcurrentWriteError(
                 f"table advanced past v{base_version} (head is "
-                f"v{entries[-1]['version']}); re-read and retry"
+                f"v{head}); re-read and retry"
             )
         # Fence before the first mutation: a holder whose lock was
         # stale-broken during a pause must not publish over the
         # successor's commits.
         _verify_lock(path, lock_token)
+        if callable(entry):
+            entry, built = entry(entries)
+            renames.update(built)
         done = []
         try:
             for staged, final in renames.items():
@@ -882,7 +920,10 @@ def _commit_entry(
                 done.append(final_dir)
             entry.setdefault("ts", _now())
             entries.append(entry)
-            _append_manifest_entry(path, entries)
+            # One O(entry) per-commit file lands atomically (+ an
+            # amortized checkpoint), so commit cost does not grow with
+            # table history.
+            manifest_log.append_entry(path, entries)
         except BaseException:
             # Manifest write (or a rename) failed: nothing references
             # the published names — remove them so no orphan blocks the
@@ -892,6 +933,7 @@ def _commit_entry(
             for staged in renames:
                 shutil.rmtree(staged, ignore_errors=True)
             raise
+    return entry
 
 
 def _now() -> float:
@@ -1939,11 +1981,11 @@ def versioned_write(
     write, constraint validation, stats harvest, bloom build — runs
     against a STAGED directory; the COMMIT (manifest re-read, version
     choice, directory rename, manifest append) then runs atomically
-    under the table's :func:`_commit_lock`, so concurrent writers
-    serialize: a blind append REBASES onto a head moved during the
-    expensive phase instead of clobbering it, and two writers can
-    never pick the same version or delete each other's committed
-    segments. Pass ``expected_version`` when the write's content
+    in :func:`_commit_entry` under the table's commit lock, so
+    concurrent writers serialize: a blind append REBASES onto a head
+    moved during the expensive phase instead of clobbering it, and two
+    writers can never pick the same version or delete each other's
+    committed segments. Pass ``expected_version`` when the write's content
     depends on what was read: a moved head then removes the staged
     data and raises :class:`ConcurrentWriteError` instead of
     committing a lost update.
@@ -1956,7 +1998,6 @@ def versioned_write(
     stamp and the data commit are ONE atomic manifest write.
     """
     import shutil
-    import uuid
 
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
@@ -2001,7 +2042,7 @@ def versioned_write(
             raise ValueError("_prestaged does not compose with target_file_mb")
         staged = _prestaged
     else:
-        staged = os.path.join(path, f"_staged-{uuid.uuid4().hex}")
+        staged = _stage_dir(path)
         writer = df.write.mode("errorifexists")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -2016,14 +2057,11 @@ def versioned_write(
     # lands as one right-sized file instead of 1000 shards that poison
     # every later scan's task count.
     if target_file_mb:
-        import math
-        import shutil
-
         fs = _glob.glob(os.path.join(staged, "*.parquet"))
         total = sum(os.path.getsize(f) for f in fs)
         want = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
         if want < len(fs):
-            restaged = os.path.join(path, f"_staged-{uuid.uuid4().hex}")
+            restaged = _stage_dir(path)
             try:
                 # Read the explicit part-file list, not the staged ROOT:
                 # underscore-prefixed roots trip Spark's hidden-path
@@ -2040,204 +2078,99 @@ def versioned_write(
             shutil.rmtree(staged)
             staged = restaged
     new_schema = _ledger_form(df.schema)
-    renamed = False
+
+    def build(entries):
+        # Under the lock, on the head actually committed on.
+        head = entries[-1] if entries else None
+        if _txn is not None and entries:
+            last_batch = max(
+                (
+                    e["txn"]["batch_id"]
+                    for e in entries
+                    if e.get("txn", {}).get("app_id") == _txn["app_id"]
+                ),
+                default=-1,
+            )
+            if _txn["batch_id"] <= last_batch:
+                # Authoritative idempotency check: a concurrent
+                # replay committed this batch while we staged.
+                raise _TxnDuplicate(head["version"])
+        # Identity range guard (authoritative, under the lock): a
+        # concurrent writer that committed while we staged may have
+        # claimed ids at-or-past our allocation base — duplicate ids
+        # must abort retryably, never commit.
+        if _id_guards and head:
+            head_stats = head.get("stats", {})
+            for col, start in _id_guards.items():
+                mx = max(
+                    (
+                        _stat_decode(st[col][1])
+                        for st in head_stats.values()
+                        if col in st and st[col][1] is not None
+                    ),
+                    default=None,
+                )
+                if mx is not None and int(mx) >= start:
+                    raise ConcurrentWriteError(
+                        f"identity range conflict on {col!r}: allocated "
+                        f"from {start} but the head already holds "
+                        f"{int(mx)}; re-run the write"
+                    )
+                if mx is None and any(
+                    col in sch for sch in head.get("schemas", {}).values()
+                ):
+                    # Same fail-loud rule as _identity_base: a head that
+                    # HOLDS the column but records no max stat leaves
+                    # the guard blind — refuse to commit rather than
+                    # risk silent duplicate ids.
+                    raise ValueError(
+                        f"identity column {col!r} exists in the head "
+                        "schema but no segment records a max stat — "
+                        "range guard cannot verify uniqueness"
+                    )
+        # Encrypted head: a native append would carry encrypted segments
+        # forward into a version holding plaintext bytes — a mixed
+        # version no single read option can serve. Append through the
+        # pyds writer with the key (overwrite replaces the list, so it
+        # stays allowed).
+        if head and mode == "append" and head.get("encrypted"):
+            raise ValueError(
+                "the head version is parquet-modular-encrypted; "
+                "append through df.write.format('argodb_versioned')"
+                ".option('encryptionKey', ...) instead"
+            )
+        base = head if (head and mode == "append") else {}
+        _check_append_types(base, new_schema)
+        entry = _new_segment_entry(
+            base, head["version"] + 1 if head else 0, new_schema, stats,
+            metrics, partition_by,
+        )
+        segment = entry["segments"][-1]
+        if bloom is not None:
+            entry.setdefault("bloom", {})[segment] = bloom
+        if _txn is not None:
+            entry["txn"] = dict(_txn)
+        return entry, {staged: segment}
+
     try:
         # Heavy phase — everything that launches Spark jobs runs against
         # the staged bytes; the table is untouched if any of it fails.
         _check_constraints(df.sparkSession, path, staged, df.schema)
-        staged_stats, staged_metrics = _segment_stats_and_metrics(staged)
-        if partition_by:
-            # Partition-column min/max come from dir names, not footers.
-            staged_stats.update(
-                _partition_stats(staged, partition_by, new_schema)
-            )
+        stats, metrics = _harvest_segment(staged, partition_by, new_schema)
         if _prebuilt_bloom is not None:
-            staged_bloom = _prebuilt_bloom
+            bloom = _prebuilt_bloom
         else:
-            staged_bloom = (
+            bloom = (
                 build_segment_bloom(df.sparkSession, staged, bloom_columns)
                 if bloom_columns
                 else None
             )
-        # COMMIT point: take the table's commit lock, then re-read the
-        # manifest so concurrent appends that landed during the heavy
-        # phase are seen. EVERYTHING from the head read to the manifest
-        # append runs under the lock — a concurrent writer can no
-        # longer commit the same version between our head read and our
-        # rename (which previously rmtree'd its committed segment and
-        # clobbered its manifest entry).
-        with _commit_lock(path) as lock_token:
-            entries = (
-                _read_manifest(path)
-                if os.path.exists(os.path.join(path, MANIFEST))
-                else []
-            )
-            head = entries[-1]["version"] if entries else None
-            if _txn is not None and entries:
-                last_batch = max(
-                    (
-                        e["txn"]["batch_id"]
-                        for e in entries
-                        if e.get("txn", {}).get("app_id") == _txn["app_id"]
-                    ),
-                    default=-1,
-                )
-                if _txn["batch_id"] <= last_batch:
-                    # Authoritative idempotency check: a concurrent
-                    # replay committed this batch while we staged.
-                    raise _TxnDuplicate(head)
-            if expected_version is not None and head != expected_version:
-                raise ConcurrentWriteError(
-                    f"table advanced past v{expected_version} (head is v{head})"
-                )
-            # Identity range guard (authoritative, under the lock): a
-            # concurrent writer that committed while we staged may have
-            # claimed ids at-or-past our allocation base — duplicate
-            # ids must abort retryably, never commit.
-            if _id_guards and entries:
-                head_stats = entries[-1].get("stats", {})
-                for col, base in _id_guards.items():
-                    mx = max(
-                        (
-                            _stat_decode(st[col][1])
-                            for st in head_stats.values()
-                            if col in st and st[col][1] is not None
-                        ),
-                        default=None,
-                    )
-                    if mx is not None and int(mx) >= base:
-                        raise ConcurrentWriteError(
-                            f"identity range conflict on {col!r}: allocated "
-                            f"from {base} but the head already holds "
-                            f"{int(mx)}; re-run the write"
-                        )
-                    if mx is None and any(
-                        col in sch
-                        for sch in entries[-1].get("schemas", {}).values()
-                    ):
-                        # Same fail-loud rule as _identity_base: a head
-                        # that HOLDS the column but records no max stat
-                        # leaves the guard blind — refuse to commit
-                        # rather than risk silent duplicate ids.
-                        raise ValueError(
-                            f"identity column {col!r} exists in the head "
-                            "schema but no segment records a max stat — "
-                            "range guard cannot verify uniqueness"
-                        )
-            # Encrypted head: a native append would carry encrypted
-            # segments forward into a version holding plaintext bytes —
-            # a mixed version no single read option can serve. Append
-            # through the pyds writer with the key (overwrite replaces
-            # the list, so it stays allowed).
-            if entries and mode == "append" and entries[-1].get("encrypted"):
-                raise ValueError(
-                    "the head version is parquet-modular-encrypted; "
-                    "append through df.write.format('argodb_versioned')"
-                    ".option('encryptionKey', ...) instead"
-                )
-            # Schema enforcement against the head actually committed on
-            # (Delta-style): an append may ADD columns (readers
-            # NULL-backfill old segments) but a type conflict on a
-            # shared column is refused.
-            prev_schemas = (
-                dict(entries[-1].get("schemas", {}))
-                if (entries and mode == "append")
-                else {}
-            )
-            for seg_schema in prev_schemas.values():
-                conflicts = {
-                    c: (t, new_schema[c])
-                    for c, t in seg_schema.items()
-                    if c in new_schema and new_schema[c] != t
-                }
-                if conflicts:
-                    raise ValueError(
-                        f"schema enforcement: append changes column types "
-                        f"{conflicts}; evolution may only ADD columns"
-                    )
-            version = entries[-1]["version"] + 1 if entries else 0
-            segment = f"data-{version}"
-            segment_dir = os.path.join(path, segment)
-            # Crash orphan from a previous attempt (died between rename
-            # and manifest write): under the lock nothing can have
-            # committed version yet, so data-{version} is referenced by
-            # no entry and clearing it is safe.
-            # Fence before the first mutation (see _verify_lock).
-            _verify_lock(path, lock_token)
-            if os.path.isdir(segment_dir):
-                shutil.rmtree(segment_dir)
-            os.rename(staged, segment_dir)
-            renamed = True
-            try:
-                prev = entries[-1]["segments"] if (entries and mode == "append") else []
-                stats = (
-                    dict(entries[-1].get("stats", {}))
-                    if (entries and mode == "append")
-                    else {}
-                )
-                stats = {s: stats[s] for s in prev if s in stats}
-                stats[segment] = staged_stats
-                # Schema ledger: the per-segment record readers use to
-                # decide whether a mergeSchema read is needed.
-                schemas = {s: prev_schemas[s] for s in prev if s in prev_schemas}
-                schemas[segment] = new_schema
-                entry = {
-                    "version": version,
-                    "segments": [*prev, segment],
-                    "stats": stats,
-                    "schemas": schemas,
-                }
-                # Partition layout follows the schemas lifecycle: reused
-                # segments keep their recorded layout, the new segment
-                # records its own (flat segments have no entry).
-                prev_parts = (
-                    dict(entries[-1].get("partition_by", {}))
-                    if (entries and mode == "append")
-                    else {}
-                )
-                parts = {s: prev_parts[s] for s in prev if s in prev_parts}
-                if partition_by:
-                    parts[segment] = list(partition_by)
-                if parts:
-                    entry["partition_by"] = parts
-                # Write accounting (HISTORY's operationMetrics columns):
-                # what THIS commit added, from footer metadata only.
-                entry["metrics"] = staged_metrics
-                # Bloom filters follow the stats lifecycle: reused
-                # segments keep theirs, the new segment builds its own
-                # when requested.
-                bloom = (
-                    dict(entries[-1].get("bloom", {}))
-                    if (entries and mode == "append")
-                    else {}
-                )
-                bloom = {s: bloom[s] for s in prev if s in bloom}
-                if staged_bloom is not None:
-                    bloom[segment] = staged_bloom
-                if bloom:
-                    entry["bloom"] = bloom
-                # An append carries the previous deletion vector forward:
-                # its positions reference only the reused segments, and
-                # the new segment has no deleted rows. An overwrite
-                # starts clean.
-                if mode == "append" and entries and entries[-1].get("dv"):
-                    entry["dv"] = entries[-1]["dv"]
-                if _txn is not None:
-                    entry["txn"] = dict(_txn)
-                entry["ts"] = _now()
-                entries.append(entry)
-                _append_manifest_entry(path, entries)
-            except BaseException:
-                # Never leave an unreferenced data-N behind to block the
-                # next writer: the manifest write failed, so nothing
-                # references it.
-                shutil.rmtree(segment_dir, ignore_errors=True)
-                raise
+        # Commit point: a blind append rebases onto the head it finds
+        # under the lock; ``expected_version`` makes the commit OCC-gated.
+        return _commit_entry(path, expected_version, build)["version"]
     except BaseException:
-        if not renamed:
-            shutil.rmtree(staged, ignore_errors=True)
+        shutil.rmtree(staged, ignore_errors=True)
         raise
-    return version
 
 
 def versioned_write_txn(
@@ -2819,9 +2752,11 @@ def rotate_encryption_key(
     fp_old, fp_new = key_fingerprint(old_key_b64), key_fingerprint(new_key_b64)
     if fp_old == fp_new:
         raise ValueError("new encryption key equals the current one")
-    with _commit_lock(path) as lock_token:
-        entries = _read_manifest(path)
-        head = entries[-1]
+    rotations = 0
+
+    def build(entries):
+        nonlocal rotations
+        head = entries[-1] if entries else {}
         if not head.get("encrypted"):
             raise ValueError(
                 "rotate_encryption_key requires an encrypted head version"
@@ -2850,38 +2785,38 @@ def rotate_encryption_key(
         # KEK from anything this table stores.
         sidecar["keks"][fp_old] = {"kek_id": rec["kek_id"], "retired": True}
         sidecar["current_fp"] = fp_new
-        sidecar["rotations"] = int(sidecar.get("rotations", 0)) + 1
-        version = head["version"] + 1
+        rotations = sidecar["rotations"] = int(sidecar.get("rotations", 0)) + 1
         # Carry the head WHOLESALE minus per-write markers: the rotated
         # version must be byte-for-byte the same table (segments, DV,
         # cdc, stats/bloom, column-mapping renames, partition layout) —
         # only the key fingerprint changes. Excluding txn/app_id keeps
-        # writer idempotency scoped to the write that set them, and
+        # writer idempotency scoped to the write that set them,
         # excluding merged_from keeps CDF's restore detection off what
         # is a pure metadata commit (identical segments + DV → the feed
-        # correctly emits zero legs for this transition).
+        # correctly emits zero legs for this transition), and excluding
+        # metrics keeps HISTORY from reporting the head's write as the
+        # rotation's (a metadata-only commit writes nothing).
         entry = {
             k: v
             for k, v in head.items()
-            if k not in ("version", "ts", "txn", "app_id", "merged_from")
+            if k not in ("version", "ts", "txn", "app_id", "merged_from", "metrics")
         }
-        entry["version"] = version
+        entry["version"] = head["version"] + 1
         entry["encrypted"] = True
         entry["key_fp"] = fp_new
         entry["rotate_key"] = True
-        entry["ts"] = _now()
-        _verify_lock(path, lock_token)
         # Sidecar first, manifest second: a crash between the two
         # leaves the new fp authoritative in the sidecar while the head
         # still carries the old fp — reads with the NEW key pass the
         # sidecar-aware check (same kek_id), reads with the OLD key are
         # refused, which is rotation's contract either way.
         _write_keys_sidecar(path, sidecar)
-        entries.append(entry)
-        _append_manifest_entry(path, entries)
+        return entry, {}
+
+    version = _commit_entry(path, None, build)["version"]
     return {
         "version": version,
-        "rotations": sidecar["rotations"],
+        "rotations": rotations,
         "files_rewritten": 0,
     }
 
@@ -3643,6 +3578,44 @@ def _carry_forward(entry: dict, latest: dict, carried) -> None:
     _carry_encryption(entry, latest)
 
 
+def _check_append_types(head: dict, new_schema: dict) -> None:
+    """Schema enforcement against the head actually committed on
+    (Delta-style): an append may ADD columns (readers NULL-backfill old
+    segments) but a type conflict on a shared column is refused — the
+    merged read of such a version would fail."""
+    for seg_schema in head.get("schemas", {}).values():
+        conflicts = {
+            c: (t, new_schema[c])
+            for c, t in seg_schema.items()
+            if c in new_schema and new_schema[c] != t
+        }
+        if conflicts:
+            raise ValueError(
+                f"schema enforcement: append changes column types "
+                f"{conflicts}; evolution may only ADD columns"
+            )
+
+
+def _new_segment_entry(
+    base: dict, version: int, schema, stats, metrics, partition_by=()
+) -> dict:
+    """The entry for ``version``: ``base``'s segments with their ledgers
+    carried forward (``{}`` for an overwrite or a new table) plus the
+    new ``data-{version}`` segment's schema ledger, min/max ``stats``
+    (``None`` records none), partition layout and write ``metrics``."""
+    segment = f"data-{version}"
+    prev = base.get("segments", [])
+    entry = {"version": version, "segments": [*prev, segment], "metrics": metrics}
+    _carry_forward(entry, base, prev)
+    if stats is not None:
+        entry["stats"][segment] = stats
+    if schema:
+        entry.setdefault("schemas", {})[segment] = schema
+    if partition_by:
+        entry.setdefault("partition_by", {})[segment] = list(partition_by)
+    return entry
+
+
 def _commit_rewrite(
     spark: SparkSession, path: str, latest: dict, carried, staged: dict,
     fields: dict, partition_by=(), renames=None, metrics: bool = False,
@@ -3684,13 +3657,10 @@ def _commit_rewrite(
             entry.setdefault("schemas", {})[seg] = schema
             if partition_by:
                 entry.setdefault("partition_by", {})[seg] = list(partition_by)
-            if not encrypted:
-                stats, seg_metrics = _segment_stats_and_metrics(d)
-                stats.update(_partition_stats(d, partition_by, schema))
-            else:
-                enc_cols = plaintext_stats and latest.get("enc_columns")
-                stats = _segment_stats_plaintext(d, exclude=enc_cols) if enc_cols else None
-                seg_metrics = _segment_file_metrics_keyless(d) if metrics else {}
+            stats, seg_metrics = _harvest_segment(
+                d, partition_by, schema, encrypted,
+                plaintext_stats and latest.get("enc_columns"),
+            )
             if stats is not None:
                 entry["stats"][seg] = stats
             for k in written:
@@ -4325,44 +4295,24 @@ def rollback(path: str, to_version: int) -> int:
     Returns the new version number. Runs under the commit lock: a
     concurrent append between the manifest read and the republish
     would otherwise be erased (lost update)."""
-    with _commit_lock(path) as lock_token:
-        entries = _read_manifest(path)
+
+    def build(entries):
         by_version = {e["version"]: e for e in entries}
         if to_version not in by_version:
             raise ValueError(f"unknown version {to_version}; have {sorted(by_version)}")
-        version = entries[-1]["version"] + 1
-        entry = {
-            "version": version,
-            "segments": list(by_version[to_version]["segments"]),
-            # Restore the segment stats with the segment list: a
-            # rollback must keep the restored version data-skippable.
-            "stats": dict(by_version[to_version].get("stats", {})),
-        }
-        if by_version[to_version].get("bloom"):
-            entry["bloom"] = dict(by_version[to_version]["bloom"])
-        # Restore the schema ledger with the segment list: a rolled-back
-        # mixed-schema version must keep its mergeSchema gate and later
-        # appends must keep type enforcement.
-        if by_version[to_version].get("schemas"):
-            entry["schemas"] = dict(by_version[to_version]["schemas"])
-        # Restore the deletion vector too: rolling back past a DELETE must
-        # resurrect the deleted rows, and rolling back TO a deleted state
-        # must keep them deleted.
-        if by_version[to_version].get("dv"):
-            entry["dv"] = by_version[to_version]["dv"]
-        # Restore the partition-layout ledger with the segment list:
-        # rolled-back partitioned segments must keep basePath reads.
-        if by_version[to_version].get("partition_by"):
-            entry["partition_by"] = dict(by_version[to_version]["partition_by"])
-        # Restore the encryption marker too: a restored encrypted
-        # version must keep every keyless-read gate armed (and keyed
-        # pyds reads thread the key only when the head says encrypted).
-        _carry_encryption(entry, by_version[to_version])
-        entry["ts"] = _now()
-        entries.append(entry)
-        _verify_lock(path, lock_token)
-        _append_manifest_entry(path, entries)
-    return version
+        # Restore every ledger with the segment list — stats and blooms
+        # keep the restored version data-skippable, the schema ledger
+        # keeps its mergeSchema gate and later appends' type enforcement,
+        # the deletion vector keeps the target's deleted rows deleted
+        # (and resurrects rows deleted after it), the partition layout
+        # keeps basePath reads, and the encryption markers keep every
+        # keyless-read gate armed.
+        target = by_version[to_version]
+        entry = {"version": entries[-1]["version"] + 1, "segments": list(target["segments"])}
+        _carry_forward(entry, target, target["segments"])
+        return entry, {}
+
+    return _commit_entry(path, None, build)["version"]
 
 
 def _build_rollback_fixture(spark: SparkSession, sf_dir: str) -> str:

@@ -350,7 +350,9 @@ def test_pyds_writer_commit_manifest_parity(spark, sf_dir, tmp_path):
 
     out = str(tmp_path / "pyds_commit")
     o = load_table(spark, sf_dir, "orders")
-    versioned_write(o.filter(F.col("o_orderkey") % 2 == 0), out)
+    versioned_write(
+        o.filter(F.col("o_orderkey") % 2 == 0), out, bloom_columns=["o_custkey"]
+    )
     _, n_del = delete_where(spark, out, [("o_orderstatus", "=", "F")])
     extra = o.filter(F.col("o_orderkey") % 2 == 1)
     write_versioned(extra, out, mode="append")
@@ -358,10 +360,54 @@ def test_pyds_writer_commit_manifest_parity(spark, sf_dir, tmp_path):
     assert head.get("dv"), "append must carry the DV forward"
     assert head.get("ts") is not None
     assert any(seg in head.get("schemas", {}) for seg in head["segments"])
+    # The earlier segments keep their blooms, and the commit records
+    # what it wrote.
+    assert set(head["segments"][:-1]) <= set(head.get("bloom", {}))
+    assert head["metrics"]["num_rows"] == extra.count()
     # Deleted rows stay hidden through the pyds-written head.
     assert snapshot_read(spark, out).count() == o.count() - n_del
     # AS OF the head's ts resolves to the head, not past it.
     assert version_at_timestamp(out, head["ts"]) == head["version"]
+
+
+def test_pyds_type_conflict_append_is_refused(spark, tmp_path):
+    """A pyds append that changes a column's type is refused by the same
+    schema enforcement as versioned_write, so the head stays readable."""
+    import pytest as _pytest
+
+    from argodb_mapreduce_spark.sources.python_datasource import write_versioned
+
+    out = str(tmp_path / "pyds_types")
+    versioned_write(spark.range(5).withColumnRenamed("id", "k"), out)
+    bad = spark.range(5, 8).select(F.col("id").cast("string").alias("k"))
+    with _pytest.raises(Exception, match="schema enforcement"):
+        write_versioned(bad, out, mode="append")
+    assert sorted(r["k"] for r in snapshot_read(spark, out).collect()) == list(range(5))
+
+
+def test_key_rotation_records_no_write_metrics(spark, tmp_path):
+    """A rotation is a metadata-only commit: it must not carry the
+    head's write metrics (which pyds appends record) as its own."""
+    import base64
+
+    from argodb_mapreduce_spark.sources.python_datasource import (
+        FORMAT_NAME,
+        register_datasource,
+    )
+    from argodb_mapreduce_spark.sources.versioned import (
+        _read_manifest,
+        rotate_encryption_key,
+    )
+
+    register_datasource(spark)
+    key = base64.b64encode(bytes(range(32))).decode()
+    out = str(tmp_path / "pyds_rotate")
+    spark.range(5).withColumnRenamed("id", "k").write.format(FORMAT_NAME).option(
+        "encryptionKey", key
+    ).mode("append").save(out)
+    assert _read_manifest(out)[-1]["metrics"]["num_rows"] == 5
+    rotate_encryption_key(out, key, base64.b64encode(bytes(range(1, 33))).decode())
+    assert "metrics" not in _read_manifest(out)[-1]
 
 
 def test_stream_raises_on_vacuumed_offset(spark, sf_dir, tmp_path):

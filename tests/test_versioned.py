@@ -1686,3 +1686,44 @@ def test_delete_keys_feeds_change_feed_and_mv(spark, tmp_path):
         r.k for r in feed.filter(F.col("_change_type") == "delete").collect()
     )
     assert dels == [0, 1, 2]
+
+
+def test_manifest_appends_only_in_commit_entry():
+    """Every manifest append in the package goes through
+    versioned._commit_entry (one lock, fence and OCC path), and the pyds
+    writer takes no commit lock of its own."""
+    import ast
+    import pathlib
+
+    import argodb_mapreduce_spark
+
+    class Appends(ast.NodeVisitor):
+        def __init__(self):
+            self.scope, self.callers = ["<module>"], []
+
+        def visit_FunctionDef(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        def visit_Call(self, node):
+            name = getattr(node.func, "attr", getattr(node.func, "id", None))
+            if name in ("append_entry", "_append_manifest_entry"):
+                self.callers.append((self.file, self.scope[-1]))
+            self.generic_visit(node)
+
+    pkg = pathlib.Path(argodb_mapreduce_spark.__file__).parent
+    v = Appends()
+    for f in sorted(pkg.rglob("*.py")):
+        v.file = f.name
+        v.visit(ast.parse(f.read_text()))
+    assert v.callers == [("versioned.py", "_commit_entry")], v.callers
+
+    pyds = pkg / "sources" / "python_datasource.py"
+    names = set()
+    for node in ast.walk(ast.parse(pyds.read_text())):
+        if isinstance(node, ast.ImportFrom):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+    assert not names & {"_commit_lock", "_verify_lock"}
