@@ -24,7 +24,11 @@ snapshot renew / RO locks         manifest pinned in the reader object
 ``read`` yields Arrow RecordBatches (the columnar fast path — the
 analogue of the reference's ``ReadMode.BatchMode``, :292), not Python
 tuples. Classes are defined inside a factory function so cloudpickle
-ships them BY VALUE — executors cannot import this repo.
+ships them BY VALUE, together with the Spark-free ``table_meta`` and
+``manifest_log`` modules they call (both registered with
+``register_pickle_by_value``), so Python workers whose ``sys.path``
+lacks this package run them. Only the writer's commit imports the
+package itself, through the ``_REPO_ROOT`` guard.
 
 Scale: one partition per file gives the same parallelism contract as
 the reference's file-aligned splits; a 100 TB versioned table fans out
@@ -48,20 +52,26 @@ from __future__ import annotations
 
 import os
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
 from argodb_mapreduce_spark.functions.oracle_safe import sql_dsum as _sql_dsum
 from argodb_mapreduce_spark.registry import register
+from argodb_mapreduce_spark.sources import manifest_log, table_meta
+
+# The pickled DataSource classes call these two Spark-free modules.
+cloudpickle.register_pickle_by_value(manifest_log)
+cloudpickle.register_pickle_by_value(table_meta)
 
 FORMAT_NAME = "argodb_versioned"
 
 
 def make_versioned_datasource():
-    """Build the DataSource class. Everything needed executor-side is
-    defined in this closure (pickled by value) or imported from
-    packages the executors do have (pyspark, pyarrow, json, os)."""
+    """Build the DataSource class. Everything needed worker-side is
+    defined in this closure or in ``table_meta``/``manifest_log`` (all
+    pickled by value), or imported from packages the workers do have
+    (pyspark, pyarrow, json, os)."""
     import json as _json
     import os as _os
 
@@ -72,35 +82,6 @@ def make_versioned_datasource():
     _REPO_ROOT = _os.path.dirname(
         _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
     )
-
-    def _manifest_log():
-        """Import the dependency-light log-structured manifest module
-        with the _REPO_ROOT sys.path guard: plan/commit run in
-        driver-side data-source WORKER processes whose PYTHONPATH may
-        lack the repo — same pattern as the writer commit's import. Defined
-        in this closure so the classes pickle it BY VALUE (a module-
-        level reference would unpickle-by-import and fail on workers)."""
-        import sys as _sys
-
-        if _REPO_ROOT not in _sys.path:
-            _sys.path.insert(0, _REPO_ROOT)
-        from argodb_mapreduce_spark.sources import manifest_log as _m
-
-        return _m
-
-    def _column_mapping_of(path):
-        """(logical->physical map, retired physical names) from the
-        table-properties sidecar — standalone os/json read, no package
-        import (runs in the data-source worker). Empty = no mapping."""
-        p = _os.path.join(path, "_properties.json")
-        if not _os.path.exists(p):
-            return {}, []
-        with open(p) as f:
-            props = _json.load(f)
-        return (
-            props.get("column_mapping", {}) or {},
-            props.get("column_mapping_retired", []) or [],
-        )
 
     def _resolve_mapping_for_write(path, field_names):
         """Plan-time logical->physical resolution for the pyds WRITER —
@@ -116,7 +97,7 @@ def make_versioned_datasource():
         snapshot is re-checked at commit so a concurrent RENAME/DROP
         between plan and publish aborts instead of landing bytes under
         a stale physical name."""
-        cmap, retired = _column_mapping_of(path)
+        cmap, retired = table_meta.column_mapping(path)
         if not cmap and not retired:
             return {}, (), {}
         renames, new_logicals, snapshot = {}, [], {}
@@ -136,265 +117,6 @@ def make_versioned_datasource():
                 new_logicals.append(name)
                 snapshot[name] = name
         return renames, tuple(new_logicals), snapshot
-
-    def _crypto(master_b64):
-        """(CryptoFactory, KmsConnectionConfig) for parquet MODULAR
-        ENCRYPTION keyed by ONE caller-supplied master key — the
-        reference threads decryption keys through read options the same
-        way (ArgodbMapreduceInputFormat.java:295). parquet-cpp does the
-        real cryptography (AES-GCM data/metadata modules, fresh data
-        key per file); this local KMS only WRAPS those data keys:
-        mask = HMAC-SHA256(master, nonce), ct = DEK xor mask, plus an
-        HMAC tag so a WRONG key fails loud at unwrap instead of feeding
-        garbage to AES-GCM. Defined in-closure so executor pickles
-        carry it by value (vanilla sessions cannot import this repo on
-        Python workers)."""
-        import base64 as _b64
-
-        import pyarrow.parquet.encryption as _pe
-
-        master = _b64.b64decode(master_b64)
-        if len(master) < 16:
-            raise ValueError(
-                "encryptionKey must be base64 of at least 16 bytes"
-            )
-
-        class _HmacWrapKms(_pe.KmsClient):
-            def __init__(self, config):
-                super().__init__()
-
-            def wrap_key(self, key_bytes, master_key_identifier):
-                import hashlib as _hl
-                import hmac as _hm
-                import os as _osr
-
-                nonce = _osr.urandom(16)
-                mask = _hm.new(
-                    master,
-                    b"wrap|" + master_key_identifier.encode() + b"|" + nonce,
-                    _hl.sha256,
-                ).digest()
-                ct = bytes(a ^ b for a, b in zip(key_bytes, mask))
-                tag = _hm.new(
-                    master, b"tag|" + nonce + ct, _hl.sha256
-                ).digest()[:16]
-                return _b64.b64encode(nonce + ct + tag).decode()
-
-            def unwrap_key(self, wrapped_key, master_key_identifier):
-                import hashlib as _hl
-                import hmac as _hm
-
-                raw = _b64.b64decode(wrapped_key)
-                nonce, ct, tag = raw[:16], raw[16:-16], raw[-16:]
-                want = _hm.new(
-                    master, b"tag|" + nonce + ct, _hl.sha256
-                ).digest()[:16]
-                if not _hm.compare_digest(tag, want):
-                    raise ValueError(
-                        "encryption key mismatch: the supplied "
-                        "encryptionKey cannot unwrap this file's data key"
-                    )
-                mask = _hm.new(
-                    master,
-                    b"wrap|" + master_key_identifier.encode() + b"|" + nonce,
-                    _hl.sha256,
-                ).digest()
-                return bytes(a ^ b for a, b in zip(ct, mask))
-
-        return (
-            _pe.CryptoFactory(lambda config: _HmacWrapKms(config)),
-            _pe.KmsConnectionConfig(),
-        )
-
-    def _encryption_properties(master_b64, schema, enc_cols=None):
-        """Per-FILE encryption properties (never reused — each call
-        generates fresh data keys): every leaf column encrypted under
-        the footer key, PLAINTEXT footer so schema and row counts stay
-        keyless-readable (ledger harvest, describe_detail, time-travel
-        planning) while column chunk metadata — min/max stats included
-        — stays encrypted; the manifest records NO stats for encrypted
-        segments, so nothing about the data leaks (pruning is the
-        documented trade for confidentiality)."""
-        import io as _io
-
-        import pyarrow.parquet as _pq
-        import pyarrow.parquet.encryption as _pe
-
-        # Leaf paths (a nested column encrypts per leaf, e.g.
-        # emb.list.element) derived from an empty in-memory footer.
-        buf = _io.BytesIO()
-        with _pq.ParquetWriter(buf, schema):
-            pass
-        pqs = _pq.ParquetFile(_io.BytesIO(buf.getvalue())).schema
-        leaves = [pqs.column(i).path for i in range(len(pqs))]
-        if enc_cols is not None:
-            # COLUMN-level encryption (r14): only leaves under the
-            # listed top-level columns are encrypted; the rest stay
-            # plaintext, keyless-readable by projection.
-            want = set(enc_cols)
-            leaves = [p for p in leaves if p.split(".")[0] in want]
-            if not leaves:
-                raise ValueError(
-                    "encryptColumns matches no leaf column in the "
-                    "write schema"
-                )
-        cf, cfg = _crypto(master_b64)
-        return cf.file_encryption_properties(
-            cfg,
-            _pe.EncryptionConfiguration(
-                footer_key="k0",
-                plaintext_footer=True,
-                column_keys={"k0": leaves},
-            ),
-        )
-
-    def _decryption_properties(master_b64):
-        """(decryption properties, factory). The factory must stay
-        referenced while reads run — unwrap happens lazily through its
-        callback."""
-        cf, cfg = _crypto(master_b64)
-        return cf.file_decryption_properties(cfg), cf
-
-    def _head_entry(path):
-        """O(1) head manifest entry on the write-plan hot path —
-        delegates to manifest_log.head_entry so the log layout
-        (marker/dir/entry naming) has exactly one owner and a future
-        layout change cannot silently desynchronize this probe.
-        Raises FileNotFoundError for a fresh table."""
-        return _manifest_log().head_entry(path)
-
-    def _key_fp_of(master_b64):
-        """SELF-CONTAINED key fingerprint — wire-identical to
-        versioned.key_fingerprint (HMAC-SHA256(master, constant)[:16]),
-        re-derived locally because this runs inside DataSource
-        reader()/writer() methods that execute in Python WORKER
-        processes which cannot import this repo."""
-        import base64 as _b64
-        import hashlib as _hl
-        import hmac as _hm
-
-        return _hm.new(
-            _b64.b64decode(master_b64), b"argodb-key-fingerprint", _hl.sha256
-        ).hexdigest()[:16]
-
-    def _read_keys_json(path):
-        """The table's ``_keys.json`` rotation sidecar (r14), or None
-        for legacy direct-wrap tables. SELF-CONTAINED — wire-identical
-        to versioned._read_keys_sidecar."""
-        import json as _jn
-
-        p = _os.path.join(path, "_keys.json")
-        if not _os.path.exists(p):
-            return None
-        with open(p) as f:
-            return _jn.load(f)
-
-    def _kek_unwrap(master_b64, blob):
-        """Unwrap the table KEK with the master — the same HMAC
-        envelope the file-DEK KMS uses (key_id 'kek'); a wrong master
-        fails the tag check loudly."""
-        import base64 as _b64
-        import hashlib as _hl
-        import hmac as _hm
-
-        master = _b64.b64decode(master_b64)
-        raw = _b64.b64decode(blob)
-        nonce, ct, tag = raw[:16], raw[16:-16], raw[-16:]
-        want = _hm.new(master, b"tag|" + nonce + ct, _hl.sha256).digest()[:16]
-        if not _hm.compare_digest(tag, want):
-            raise ValueError(
-                "encryption key mismatch: the supplied encryptionKey "
-                "cannot unwrap this table's key-encryption key"
-            )
-        mask = _hm.new(
-            master, b"wrap|kek|" + nonce, _hl.sha256
-        ).digest()
-        return bytes(a ^ b for a, b in zip(ct, mask))
-
-    def _kek_wrap(master_b64, payload):
-        """Inverse of :func:`_kek_unwrap` — wire-identical to
-        versioned._hmac_wrap(master, 'kek', payload)."""
-        import base64 as _b64
-        import hashlib as _hl
-        import hmac as _hm
-        import os as _osr
-
-        master = _b64.b64decode(master_b64)
-        nonce = _osr.urandom(16)
-        mask = _hm.new(
-            master, b"wrap|kek|" + nonce, _hl.sha256
-        ).digest()
-        ct = bytes(a ^ b for a, b in zip(payload, mask))
-        tag = _hm.new(master, b"tag|" + nonce + ct, _hl.sha256).digest()[:16]
-        return _b64.b64encode(nonce + ct + tag).decode()
-
-    def _resolve_wrap_key(path, master_b64):
-        """Master key -> effective WRAP key (r14 rotation): with a key
-        sidecar, file DEKs are wrapped under a per-table KEK that the
-        master unwraps — so rotate_encryption_key re-wraps one 32-byte
-        secret and every historical file reads under the NEW master.
-        A rotated-out or unknown master fails here at plan time. Legacy
-        tables (no sidecar) keep the master as the wrap key."""
-        import base64 as _b64
-
-        sidecar = _read_keys_json(path)
-        if sidecar is None:
-            return master_b64
-        rec = (sidecar.get("keks") or {}).get(_key_fp_of(master_b64))
-        if rec is None:
-            raise ValueError(
-                "encryptionKey does not match any master key this "
-                "table's key sidecar knows (key-fingerprint lookup "
-                "failed)"
-            )
-        if rec.get("retired"):
-            raise ValueError(
-                "this master key was ROTATED OUT of the table; reads "
-                "and writes require the current master key"
-            )
-        return _b64.b64encode(_kek_unwrap(master_b64, rec["wrapped"])).decode()
-
-    def _check_key_fp(meta, enc_key, path=None):
-        """Plan-time wrong-key rejection for READS: when the manifest
-        recorded the master's fingerprint, a mismatched key fails here
-        with a clear error instead of N tasks later at HMAC unwrap.
-        Pre-fingerprint entries (no key_fp) skip — unwrap still fails
-        loud for them. With a rotation sidecar (r14) the sidecar is the
-        authority: the supplied master must be known and un-retired,
-        and must share the KEK lineage (kek_id) of the version being
-        read — so pre-rotation versions read under the post-rotation
-        master, while a different-lineage key is still rejected."""
-        if path is not None:
-            sidecar = _read_keys_json(path)
-            if sidecar:
-                rec = (sidecar.get("keks") or {}).get(_key_fp_of(enc_key))
-                if rec is None:
-                    raise ValueError(
-                        "encryptionKey does not match any master key "
-                        "this table's key sidecar knows (key-"
-                        "fingerprint lookup failed)"
-                    )
-                if rec.get("retired"):
-                    raise ValueError(
-                        "this master key was ROTATED OUT of the table; "
-                        "reads require the current master key"
-                    )
-                efp = meta.get("key_fp") if meta else None
-                erec = (sidecar.get("keks") or {}).get(efp) if efp else None
-                if erec and erec.get("kek_id") != rec.get("kek_id"):
-                    raise ValueError(
-                        "encryptionKey belongs to a different key "
-                        "lineage than the one this version was "
-                        "encrypted under"
-                    )
-                return
-        fp = meta.get("key_fp") if meta else None
-        if fp and _key_fp_of(enc_key) != fp:
-            raise ValueError(
-                "encryptionKey does not match the master key this "
-                "version is encrypted under (manifest key-"
-                "fingerprint mismatch)"
-            )
 
     def _check_encryption_transition(
         head, enc_key, overwrite, path, enc_cols=None
@@ -434,7 +156,7 @@ def make_versioned_datasource():
         # Pre-fingerprint entries (no key_fp) skip; unwrap still fails
         # loud for them.
         if not overwrite and head_enc and enc_key and head.get("key_fp"):
-            if _key_fp_of(enc_key) != head["key_fp"]:
+            if table_meta.key_fingerprint(enc_key) != head["key_fp"]:
                 # Sidecar lineage check before refusing: after a
                 # rotation CRASHED between its sidecar write and its
                 # manifest append, the head still carries the OLD
@@ -443,9 +165,9 @@ def make_versioned_datasource():
                 # so an append under the new master is safe and HEALS
                 # the head's fingerprint. A genuinely different master
                 # (different or no lineage) is still refused.
-                sidecar = _read_keys_json(path)
+                sidecar = table_meta.read_keys_sidecar(path)
                 ours = (sidecar or {}).get("keks", {}).get(
-                    _key_fp_of(enc_key)
+                    table_meta.key_fingerprint(enc_key)
                 )
                 theirs = (sidecar or {}).get("keks", {}).get(
                     head["key_fp"]
@@ -505,82 +227,6 @@ def make_versioned_datasource():
             self.positions = positions
             self.parts = parts
 
-    def _stat_decode_local(v):
-        # Parity twin of versioned._stat_decode, inlined so the pickled
-        # classes stay repo-import-free.
-        import datetime as _ldt
-
-        if isinstance(v, dict):
-            if v["t"] == "ts":
-                return _ldt.datetime.fromisoformat(v["v"])
-            if v["t"] == "date":
-                return _ldt.date.fromisoformat(v["v"])
-            raise ValueError(f"unknown stat tag {v['t']!r}")
-        return v
-
-    _HIVE_NULL_LOCAL = "__HIVE_DEFAULT_PARTITION__"
-
-    def _decode_branch(rel: str) -> dict:
-        """{col -> raw_or_None} from one Hive directory branch ('.' or
-        'a=1/b=x'): percent-decode, NULL sentinel -> None. The single
-        copy of the branch-decoding convention for this module."""
-        from urllib.parse import unquote as _unq
-
-        pairs = {}
-        if rel != ".":
-            for comp in rel.split(_os.sep):
-                if "=" in comp:
-                    c, v = comp.split("=", 1)
-                    v = _unq(v)
-                    pairs[c] = None if v == _HIVE_NULL_LOCAL else v
-        return pairs
-
-    def _decode_part_value(raw, type_str):
-        """Directory-name string -> typed Python value per the manifest
-        schema ledger (the reference record reader's partition-value
-        decode, ArgodbMapreduceRecordReader.java:172-198). None stays
-        None (NULL sentinel). Unknown types stay strings — Spark's own
-        partition discovery has the same string fallback."""
-        import datetime as _ldt
-
-        if raw is None:
-            return None
-        t = (type_str or "string").lower()
-        if t in ("tinyint", "smallint", "int", "bigint"):
-            return int(raw)
-        if t == "date":
-            return _ldt.date.fromisoformat(raw)
-        if t in ("double", "float"):
-            return float(raw)
-        if t == "boolean":
-            return raw.lower() == "true"
-        return raw
-
-    def _walk_partition_files(seg_dir: str, part_cols) -> list:
-        """[(file_path, ((col, raw_or_None), ...)), ...] for one
-        Hive-partitioned segment: partition values decoded from the
-        directory branch of each parquet file, NULL sentinel -> None."""
-        out = []
-        for root, _dirs, fs in sorted(_os.walk(seg_dir)):
-            pairs = _decode_branch(_os.path.relpath(root, seg_dir))
-            parts = tuple((c, pairs.get(c)) for c in part_cols)
-            for f in sorted(fs):
-                if f.endswith(".parquet"):
-                    out.append((_os.path.join(root, f), parts))
-        return sorted(out)
-
-    def _decoded_stats(raw):
-        """Manifest per-column [min,max] -> decoded Python values, or
-        None when the segment recorded no stats. ONE copy for the batch
-        resolver and the stream planner, so their prune semantics
-        cannot drift."""
-        if not raw:
-            return None
-        return {
-            c: [_stat_decode_local(mn), _stat_decode_local(mx)]
-            for c, (mn, mx) in raw.items()
-        }
-
     def _tighten_with_parts(stats, parts):
         """File-precise stats: each partition value becomes an exact
         [v, v] bound (NULL branches contribute none — conservative
@@ -588,13 +234,13 @@ def make_versioned_datasource():
         resolver and the stream planner."""
         out = dict(stats or {})
         for c, raw, t in parts:
-            tv = _decode_part_value(raw, t)
+            tv = table_meta.decode_part_value(raw, t)
             if tv is not None:
                 out[c] = [tv, tv]
         return out
 
     def _resolve_files(path: str, version: int | None):
-        """(ordered file list, {file -> decoded per-column [min,max]},
+        """(ordered file list, {file -> per-column manifest [min,max]},
         {file -> deleted row positions from the deletion vector},
         {file -> ((partition col, raw value), ...)},
         {partition col -> simpleString type from the schema ledger},
@@ -604,8 +250,8 @@ def make_versioned_datasource():
          schema() appends ledger columns the first file lacks}).
 
         Stats ride the manifest (harvested at write time from parquet
-        footers); they are decoded here at PLAN time so pushed-filter
-        pruning in ``partitions()`` is pure metadata — no file opened.
+        footers), so pushed-filter pruning in ``partitions()`` is pure
+        metadata — no file opened.
         For a Hive-partitioned segment (r10 layout, versioned.py
         partition_by) every parquet file is walked out of its
         ``col=value`` directory branch and the decoded value becomes
@@ -613,10 +259,10 @@ def make_versioned_datasource():
         on partition columns is file-precise) and a constant column
         appended at read() time — the reference's file-aligned splits +
         record-reader partition append, including the NULL sentinel."""
-        cmap, retired = _column_mapping_of(path)
+        cmap, retired = table_meta.column_mapping(path)
         renames = {ph: l for l, ph in cmap.items() if ph != l}
         mapping_active = bool(renames or retired)
-        entries = _manifest_log().read_entries(path)
+        entries = manifest_log.read_entries(path)
         by_version = {e["version"]: e for e in entries}
         if version is None or version < 0:
             version = entries[-1]["version"]
@@ -635,7 +281,7 @@ def make_versioned_datasource():
         files, file_stats, file_parts, part_types = [], {}, {}, {}
         for seg in entry["segments"]:
             seg_dir = _os.path.join(path, seg)
-            decoded = _decoded_stats(entry.get("stats", {}).get(seg))
+            stats = entry.get("stats", {}).get(seg) or None
             part_cols = entry.get("partition_by", {}).get(seg) or ()
             ledger = entry.get("schemas", {}).get(seg, {})
             for c in part_cols:
@@ -645,22 +291,20 @@ def make_versioned_datasource():
                     if f.endswith(".parquet"):
                         fp = _os.path.join(seg_dir, f)
                         files.append(fp)
-                        file_stats[fp] = decoded
+                        file_stats[fp] = stats
                 continue
-            for fp, parts in _walk_partition_files(seg_dir, part_cols):
+            for fp, parts in table_meta.walk_partition_files(seg_dir, part_cols):
                 files.append(fp)
                 file_parts[fp] = parts
                 pstats = _tighten_with_parts(
-                    decoded,
+                    stats,
                     [(c, v, part_types.get(c)) for c, v in parts],
                 )
                 file_stats[fp] = pstats or None
         # Merge-on-read parity with snapshot_read: the version's
         # deletion vector resolves to per-file tombstoned positions at
         # PLAN time (DVs are O(deleted rows), read with pyarrow).
-        dv_excluded: dict = {}
-        if entry.get("dv"):
-            dv_excluded = _dv_positions_local(path, entry["dv"])
+        dv_excluded = table_meta.dv_positions(path, entry.get("dv"))
         meta = {
             "evolved": evolved,
             "ledger": ledger_union,
@@ -676,74 +320,6 @@ def make_versioned_datasource():
             "enc_columns": entry.get("enc_columns"),
         }
         return files, file_stats, dv_excluded, file_parts, part_types, meta
-
-    def _local_path(fp: str) -> str:
-        """``_metadata.file_path`` -> plain filesystem path: strip the
-        scheme AND percent-decode (a partition value with a space is
-        %20-encoded in the metadata column but not on disk)."""
-        from urllib.parse import unquote as _unq
-
-        if ":" in fp:
-            fp = "/" + fp.split(":", 1)[-1].lstrip("/")
-        return _unq(fp)
-
-    def _dv_positions_local(path: str, dv_name: str) -> dict:
-        """{local_file_path -> sorted tuple of deleted row positions}."""
-        import glob as _glob
-
-        import pyarrow.parquet as pq
-
-        per_file: dict = {}
-        for f in sorted(_glob.glob(_os.path.join(path, dv_name, "*.parquet"))):
-            t = pq.read_table(f, columns=["file_path", "row_index"])
-            for fp, ri in zip(
-                t.column("file_path").to_pylist(), t.column("row_index").to_pylist()
-            ):
-                per_file.setdefault(_local_path(fp), set()).add(ri)
-        return {fp: tuple(sorted(s)) for fp, s in per_file.items()}
-
-    def _coerce_lit(lit, stat_sample):
-        """Make an option-passed literal (JSON: str/int/float) or a
-        datetime comparable with the decoded stat values — parity twin
-        of versioned._coerce_literal plus naive-UTC normalization."""
-        import datetime as _ldt
-
-        if isinstance(lit, _ldt.datetime) and lit.tzinfo is not None:
-            lit = lit.astimezone(_ldt.timezone.utc).replace(tzinfo=None)
-        if isinstance(stat_sample, _ldt.datetime) and isinstance(lit, str):
-            return _ldt.datetime.fromisoformat(lit)
-        if isinstance(stat_sample, _ldt.datetime) and type(lit) is _ldt.date:
-            return _ldt.datetime(lit.year, lit.month, lit.day)
-        if type(stat_sample) is _ldt.date and isinstance(lit, str):
-            return _ldt.date.fromisoformat(lit)
-        return lit
-
-    def _stats_may_match(stats, pushed) -> bool:
-        """Conservative segment-stat test, parity twin of
-        versioned._segment_may_match: True unless some pushed predicate
-        PROVABLY excludes every row. Missing stats / incomparable types
-        keep the file."""
-        if not stats:
-            return True
-        for col, op, lit in pushed:
-            if col not in stats:
-                continue
-            mn, mx = stats[col]
-            try:
-                lit = _coerce_lit(lit, mn)
-                if op == "=" and not (mn <= lit <= mx):
-                    return False
-                if op == "<" and not (mn < lit):
-                    return False
-                if op == "<=" and not (mn <= lit):
-                    return False
-                if op == ">" and not (mx > lit):
-                    return False
-                if op == ">=" and not (mx >= lit):
-                    return False
-            except (TypeError, ValueError):
-                continue  # incomparable/malformed literal: conservative keep
-        return True
 
     def _us_schema(schema):
         """Arrow schema with every ns timestamp demoted to µs. Spark's
@@ -797,31 +373,6 @@ def make_versioned_datasource():
                     .to_batches()[0]
                 )
             yield batch
-
-    def _select_row_groups(pf, pushed):
-        """ROW-GROUP skipping (one granularity below the manifest's
-        file-level stats, the reference's rowset-level skip): keep only
-        the row groups whose parquet column statistics may match the
-        pushed predicates, via the SAME conservative test the file
-        level uses. Returns (kept_indices, their_start_offsets) — the
-        offsets are GLOBAL row positions within the file, so deletion-
-        vector masking by (file, row_index) stays correct when groups
-        are skipped. O(row groups) footer metadata, no data read."""
-        md = pf.metadata
-        keep, offsets, off = [], [], 0
-        for i in range(md.num_row_groups):
-            rg = md.row_group(i)
-            stats = {}
-            for j in range(rg.num_columns):
-                c = rg.column(j)
-                s = c.statistics
-                if s is not None and s.has_min_max:
-                    stats[c.path_in_schema] = [s.min, s.max]
-            if _stats_may_match(stats or None, pushed):
-                keep.append(i)
-                offsets.append(off)
-            off += rg.num_rows
-        return keep, offsets
 
     def _split_top(s: str) -> list:
         """Split on commas at bracket depth 0. Tracks angle brackets
@@ -912,7 +463,7 @@ def make_versioned_datasource():
 
         arrays = {}
         for c, raw, type_str in parts or ():
-            tv = _decode_part_value(raw, type_str)
+            tv = table_meta.decode_part_value(raw, type_str)
             t = _arrow_type_of(type_str)
             name = renames.get(c, c) if renames else c
             arrays[name] = (
@@ -961,7 +512,7 @@ def make_versioned_datasource():
         n = batch.num_rows
         arrays = dict(zip(batch.schema.names, batch.columns))
         for c, raw, type_str in parts or ():
-            tv = _decode_part_value(raw, type_str)
+            tv = table_meta.decode_part_value(raw, type_str)
             t = _arrow_type_of(type_str)
             # Directory names carry PHYSICAL column names; a partition
             # column of an OLD layout may have been renamed since (the
@@ -1048,7 +599,7 @@ def make_versioned_datasource():
             files = [
                 f
                 for f in self.files
-                if _stats_may_match(self.file_stats.get(f), self.prune)
+                if table_meta.stats_may_match(self.file_stats.get(f), self.prune)
             ]
             return [
                 SegmentFilePartition(f, self.excluded.get(f, ()), self._split_parts(f))
@@ -1078,7 +629,7 @@ def make_versioned_datasource():
                 # _factory must outlive the read: data keys unwrap
                 # lazily through its KMS callback (generator frame
                 # keeps the local alive).
-                dec, _factory = _decryption_properties(self.encryption_key)
+                dec, _factory = table_meta.decryption_properties(self.encryption_key)
                 pf = pq.ParquetFile(partition.path, decryption_properties=dec)
             else:
                 pf = pq.ParquetFile(partition.path)
@@ -1129,7 +680,7 @@ def make_versioned_datasource():
                         yield off, b
                         off += b.num_rows
                     return
-                keep, offs = _select_row_groups(pf, self.prune)
+                keep, offs = table_meta.select_row_groups(pf, self.prune)
                 for i, goff in zip(keep, offs):
                     off = goff
                     for b in _cast_batches_to_us(
@@ -1180,7 +731,7 @@ def make_versioned_datasource():
         import datetime as _ldt
 
         if value is None:
-            return f"{col}={_HIVE_NULL_LOCAL}"
+            return f"{col}={table_meta.HIVE_NULL}"
         if isinstance(value, _ldt.date):
             s = value.isoformat()
         elif isinstance(value, bool):
@@ -1269,7 +820,7 @@ def make_versioned_datasource():
                             fpath,
                             batch.schema,
                             encryption_properties=(
-                                _encryption_properties(
+                                table_meta.encryption_properties(
                                     self.wrap_key,
                                     batch.schema,
                                     self.enc_cols,
@@ -1371,7 +922,7 @@ def make_versioned_datasource():
                                 _os.path.join(out_dir, rel),
                                 data.schema,
                                 encryption_properties=(
-                                    _encryption_properties(
+                                    table_meta.encryption_properties(
                                         self.wrap_key,
                                         data.schema,
                                         self.enc_cols,
@@ -1508,7 +1059,7 @@ def make_versioned_datasource():
                         # HMAC fingerprint so a later append/read under a
                         # DIFFERENT key is rejected at plan time.
                         entry["encrypted"] = True
-                        entry["key_fp"] = _key_fp_of(self.encryption_key)
+                        entry["key_fp"] = table_meta.key_fingerprint(self.encryption_key)
                         if self.enc_cols:
                             # COLUMN-level encryption: the protected set
                             # is part of the version contract — keyless
@@ -1529,11 +1080,9 @@ def make_versioned_datasource():
             a concurrent RENAME/DROP between plan and publish must abort,
             or the staged bytes would land under a stale physical name
             that every logical read resolves wrongly."""
-            from argodb_mapreduce_spark.sources import versioned as _v
-
             if not self.mapping_snapshot:
                 return
-            props = _v._read_properties(self.path)
+            props = table_meta.read_properties(self.path)
             cmap = dict(props.get("column_mapping", {}) or {})
             retired = props.get("column_mapping_retired", []) or []
             live_phys = set(cmap.values())
@@ -1556,15 +1105,10 @@ def make_versioned_datasource():
                         f"{have!r}); retry the write"
                     )
             if changed:
-                import tempfile as _tf
-
                 props["column_mapping"] = cmap
-                fd, tmp = _tf.mkstemp(
-                    dir=self.path, prefix="_properties", suffix=".tmp"
+                manifest_log._write_json_atomic(
+                    self.path, table_meta.PROPERTIES, props
                 )
-                with _os.fdopen(fd, "w") as f:
-                    _json.dump(props, f, indent=1)
-                _os.replace(tmp, _os.path.join(self.path, _v.PROPERTIES))
 
         def _publish_kek(self):
             """KEK publish (r14 rotation), the last step of the commit's
@@ -1585,7 +1129,7 @@ def make_versioned_datasource():
 
             if self.pending_kek is None:
                 return
-            sc = _v._read_keys_sidecar(self.path) or {
+            sc = table_meta.read_keys_sidecar(self.path) or {
                 "keks": {},
                 "current_fp": None,
                 "rotations": 0,
@@ -1626,6 +1170,9 @@ def make_versioned_datasource():
             self._prune = [
                 (c, o, v) for c, o, v in _json.loads(options.get("prune", "[]"))
             ]
+            # Unsupported ops fail here, as in snapshot_read — never a
+            # silently unpruned scan.
+            table_meta.check_ops(self._prune)
             # Manifest resolved ONCE, when the DataSource instance is
             # built at load()/plan time — the file set is pinned into
             # this instance, so concurrent versioned_write calls cannot
@@ -1775,11 +1322,12 @@ def make_versioned_datasource():
                     )
             wrap_key = None
             if self._enc_key:
-                _crypto(self._enc_key)  # fail loud on malformed keys at plan time
-                _check_key_fp(self._meta, self._enc_key, self._path)
+                # Malformed keys fail loud here, at plan time.
+                table_meta.crypto_factory(self._enc_key)
+                table_meta.check_key_fp(self._meta, self._enc_key, self._path)
                 # Rotation-aware (r14): read tasks decrypt with the
                 # table KEK when a key sidecar exists.
-                wrap_key = _resolve_wrap_key(self._path, self._enc_key)
+                wrap_key = table_meta.resolve_wrap_key(self._path, self._enc_key)
             # col_order/col_types engage the partition-append/reorder/
             # backfill path when this version has partitioned segments
             # OR divergent per-segment schemas (ADD-column evolution);
@@ -1824,7 +1372,7 @@ def make_versioned_datasource():
             first-ever encrypted commit. O(versions) manifest read,
             paid only on encrypted write paths that need it."""
             try:
-                entries = _manifest_log().read_entries(self._path)
+                entries = manifest_log.read_entries(self._path)
             except (FileNotFoundError, ValueError):
                 return False
             return any(e.get("encrypted") for e in entries)
@@ -1836,7 +1384,8 @@ def make_versioned_datasource():
             )
             enc_key = self._enc_key
             if enc_key:
-                _crypto(enc_key)  # malformed keys fail at plan time
+                # Malformed keys fail loud here, at plan time.
+                table_meta.crypto_factory(enc_key)
             # COLUMN-level encryption (r14): option('encryptColumns',
             # 'c1,c2') encrypts ONLY those columns; the rest stay
             # plaintext, keyless-readable by projection, with manifest
@@ -1881,7 +1430,7 @@ def make_versioned_datasource():
             # here must not become a gate bypass). FileNotFoundError =
             # genuinely fresh table; anything else propagates loud.
             try:
-                head = _head_entry(self._path)
+                head = manifest_log.head_entry(self._path)
             except FileNotFoundError:
                 head = None
             _check_encryption_transition(
@@ -1902,8 +1451,8 @@ def make_versioned_datasource():
                 import base64 as _b64
                 import uuid as _uuid2
 
-                sidecar = _read_keys_json(self._path)
-                fp = _key_fp_of(enc_key)
+                sidecar = table_meta.read_keys_sidecar(self._path)
+                fp = table_meta.key_fingerprint(enc_key)
                 rec = (sidecar or {}).get("keks", {}).get(fp)
                 if rec is not None:
                     if rec.get("retired"):
@@ -1913,7 +1462,7 @@ def make_versioned_datasource():
                             "key"
                         )
                     wrap_key = _b64.b64encode(
-                        _kek_unwrap(enc_key, rec["wrapped"])
+                        table_meta.hmac_unwrap(enc_key, "kek", rec["wrapped"])
                     ).decode()
                 elif (
                     sidecar is not None
@@ -1946,7 +1495,7 @@ def make_versioned_datasource():
                     kek = _osr.urandom(32)
                     pending_kek = {
                         "fp": fp,
-                        "wrapped": _kek_wrap(enc_key, kek),
+                        "wrapped": table_meta.hmac_wrap(enc_key, "kek", kek),
                         "kek_id": _uuid2.uuid4().hex[:16],
                     }
                     wrap_key = _b64.b64encode(kek).decode()
@@ -2018,13 +1567,14 @@ def make_versioned_datasource():
                 )
             wrap_key = None
             if self._enc_key:
-                _crypto(self._enc_key)  # malformed keys fail at plan time
-                _check_key_fp(self._meta, self._enc_key, self._path)
+                # Malformed keys fail loud here, at plan time.
+                table_meta.crypto_factory(self._enc_key)
+                table_meta.check_key_fp(self._meta, self._enc_key, self._path)
                 # Rotation-aware (r14): the stream decrypts with the
                 # table KEK; resolved once at plan (the KEK never
                 # changes across rotations, so a long-lived tail
                 # survives a mid-stream rotation).
-                wrap_key = _resolve_wrap_key(self._path, self._enc_key)
+                wrap_key = table_meta.resolve_wrap_key(self._path, self._enc_key)
             ignore_deletes = str(
                 self.options.get("ignoreDeletes", "false")
             ).lower() in ("true", "1")
@@ -2095,7 +1645,7 @@ def make_versioned_datasource():
                         # by the host timezone.
                         _dtv = _dtv.replace(tzinfo=_sdt.timezone.utc)
                     ts = _dtv.timestamp()
-                entries = _manifest_log().read_entries(self._path)
+                entries = manifest_log.read_entries(self._path)
                 eligible = [
                     e["version"]
                     for e in entries
@@ -2222,7 +1772,7 @@ def make_versioned_datasource():
             self._base_cols = base_cols
 
         def _entries(self):
-            return _manifest_log().read_entries(self._path)
+            return manifest_log.read_entries(self._path)
 
         def initialOffset(self):
             # Version N's changes are INCLUDED (offsets are exclusive
@@ -2256,31 +1806,14 @@ def make_versioned_datasource():
             MEMOIZED by name — sidecars are immutable, and one planning
             pass may consult the same DV from the dv-delta branch, the
             restore synthesizer, and the append-leg mask."""
-            import glob as _glob
-
-            import pyarrow.parquet as pq
-
-            cache = getattr(self, "_dv_pos_cache", None)
-            if cache is None:
-                cache = self._dv_pos_cache = {}
-            if dv_name in cache:
-                return cache[dv_name]
-            out = set()
-            if not dv_name:
-                return out
-            for f in sorted(
-                _glob.glob(_os.path.join(self._path, dv_name, "*.parquet"))
-            ):
-                t = pq.read_table(f, columns=["file_path", "row_index"])
-                for fp, ri in zip(
-                    t.column("file_path").to_pylist(),
-                    t.column("row_index").to_pylist(),
-                ):
-                    # Spark's _metadata.file_path carries a scheme and
-                    # percent-encoding; normalize to the on-disk path.
-                    out.add((_local_path(fp), ri))
-            cache[dv_name] = out
-            return out
+            cache = self.__dict__.setdefault("_dv_pos_cache", {})
+            if dv_name not in cache:
+                cache[dv_name] = {
+                    (fp, ri)
+                    for fp, ris in table_meta.dv_positions(self._path, dv_name).items()
+                    for ri in ris
+                }
+            return cache[dv_name]
 
         def partitions(self, start, end):
             entries = {e["version"]: e for e in self._entries()}
@@ -2391,11 +1924,7 @@ def make_versioned_datasource():
                                         fp,
                                         v,
                                         tuple(sorted(excl.get(fp, ()))),
-                                        parts=(
-                                            self._parts_of_file(prev_entry, fp)
-                                            if prev_entry
-                                            else ()
-                                        ),
+                                        parts=self._parts_of_file(prev_entry, fp),
                                     )
                                 )
                     elif not self._ignore_deletes:
@@ -2479,11 +2008,7 @@ def make_versioned_datasource():
                                         fp,
                                         v,
                                         tuple(sorted(excl.get(fp, ()))),
-                                        parts=(
-                                            self._parts_of_file(entry_of, fp)
-                                            if entry_of
-                                            else ()
-                                        ),
+                                        parts=self._parts_of_file(entry_of, fp),
                                     )
                                 )
                     shared_roots = tuple(
@@ -2508,11 +2033,7 @@ def make_versioned_datasource():
                                     fp,
                                     v,
                                     tuple(sorted(per[fp])),
-                                    parts=(
-                                        self._parts_of_file(entry_of, fp)
-                                        if entry_of
-                                        else ()
-                                    ),
+                                    parts=self._parts_of_file(entry_of, fp),
                                 )
                             )
                     prev = segs
@@ -2593,12 +2114,10 @@ def make_versioned_datasource():
                     seg_dir = _os.path.join(self._path, seg)
                     part_cols = entries[v].get("partition_by", {}).get(seg) or ()
                     ledger = entries[v].get("schemas", {}).get(seg, {})
-                    seg_stats = (
-                        _decoded_stats(entries[v].get("stats", {}).get(seg))
-                        if self._prune
-                        else None
-                    )
-                    if self._prune and not _stats_may_match(seg_stats, self._prune):
+                    seg_stats = entries[v].get("stats", {}).get(seg)
+                    if self._prune and not table_meta.stats_may_match(
+                        seg_stats, self._prune
+                    ):
                         continue  # whole new segment provably excluded
                     if part_cols:
                         # Partitioned append: walk the col=value branches
@@ -2612,7 +2131,7 @@ def make_versioned_datasource():
                                     for c, raw in pp
                                 ),
                             )
-                            for fp, pp in _walk_partition_files(seg_dir, part_cols)
+                            for fp, pp in table_meta.walk_partition_files(seg_dir, part_cols)
                         ]
                     else:
                         listed = [
@@ -2623,7 +2142,7 @@ def make_versioned_datasource():
                     for fp, pp in listed:
                         if self._prune and pp:
                             # File-precise partition-value skip.
-                            if not _stats_may_match(
+                            if not table_meta.stats_may_match(
                                 _tighten_with_parts(seg_stats, pp), self._prune
                             ):
                                 continue
@@ -2652,26 +2171,9 @@ def make_versioned_datasource():
             return parts
 
         def _parts_of_file(self, entry, fp):
-            """((col, raw, type), ...) for a DV-referenced file: resolve
-            its owning segment by directory ancestry, then decode the
-            partition branch between segment root and file (NULL
-            sentinel -> None). Flat segments return ()."""
-
-            for seg in entry["segments"]:
-                # DV file paths are absolute; the table path may be
-                # relative — compare on the absolute form.
-                seg_root = _os.path.join(_os.path.abspath(self._path), seg)
-                if not fp.startswith(seg_root + _os.sep):
-                    continue
-                part_cols = entry.get("partition_by", {}).get(seg) or ()
-                if not part_cols:
-                    return ()
-                ledger = entry.get("schemas", {}).get(seg, {})
-                pairs = _decode_branch(_os.path.relpath(_os.path.dirname(fp), seg_root))
-                return tuple(
-                    (c, pairs.get(c), ledger.get(c, "string")) for c in part_cols
-                )
-            return ()
+            """((col, raw, type), ...) for a DV-referenced file of
+            ``entry``; () for flat files or no entry."""
+            return table_meta.parts_of_file(self._path, entry, fp) if entry else ()
 
         def read(self, partition):
             if not isinstance(partition, CDFPartition):
@@ -2719,7 +2221,7 @@ def make_versioned_datasource():
                 return pa.RecordBatch.from_arrays(cols, names=names)
 
             if self._enc_key:
-                dec, _factory = _decryption_properties(self._enc_key)
+                dec, _factory = table_meta.decryption_properties(self._enc_key)
                 pf = pq.ParquetFile(partition.path, decryption_properties=dec)
             else:
                 dec = None
@@ -2791,14 +2293,14 @@ def make_versioned_datasource():
         # feeds the rate-clamp floor; offsets themselves live in the
         # query's checkpoint, nothing to GC here.
 
-    # Closure internals exposed for property tests (the classes pickle
-    # by value, so these can't live at module level).
+    # Helpers exposed for property tests: the writer's branch encoder
+    # and the schema parser live in this closure, the rest in table_meta.
     VersionedDataSource._test_hooks = {
         "branch_component": _branch_component,
-        "decode_branch": _decode_branch,
+        "decode_branch": table_meta.decode_branch,
         "arrow_type_full": _arrow_type_full,
-        "decode_part_value": _decode_part_value,
-        "select_row_groups": _select_row_groups,
+        "decode_part_value": table_meta.decode_part_value,
+        "select_row_groups": table_meta.select_row_groups,
     }
     return VersionedDataSource
 
@@ -3699,7 +3201,6 @@ def snapshot_encrypted_key_rotation(
 
     from argodb_mapreduce_spark.catalog import load_table, table_rowcount
     from argodb_mapreduce_spark.sources.versioned import (
-        _read_keys_sidecar,
         delete_keys,
         key_fingerprint,
         rotate_encryption_key,
@@ -3752,7 +3253,7 @@ def snapshot_encrypted_key_rotation(
         snapshot_read(spark, out, version=0, encryption_key=k3).count()
         == n_v0
     )
-    sidecar = _read_keys_sidecar(out)
+    sidecar = table_meta.read_keys_sidecar(out)
     scrubbed = (
         sidecar["current_fp"] == key_fingerprint(k3)
         and all(
@@ -4186,12 +3687,13 @@ def pyds_rowgroup_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pyarrow.parquet as _pq
 
-    from argodb_mapreduce_spark.sources.versioned import _read_manifest, _stat_decode
+    from argodb_mapreduce_spark.sources.versioned import _read_manifest
 
     out = _rowgroup_fixture(spark, sf_dir)
     # The predicate bound comes from the MANIFEST's own max-key stat —
     # pure metadata, no Spark job (the oracle mirrors it as MAX(...)).
-    k = _stat_decode(_read_manifest(out)[-1]["stats"]["data-0"]["o_orderkey"][1]) // 10
+    top = _read_manifest(out)[-1]["stats"]["data-0"]["o_orderkey"][1]
+    k = table_meta.stat_decode(top) // 10
     preds = [("o_orderkey", "<=", int(k))]
     df = read_versioned(spark, out, predicates=preds)
     # Observability: the same selection helper the executor runs.

@@ -65,13 +65,27 @@ import math
 import os
 import tempfile
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from argodb_mapreduce_spark.catalog import fixture_stale, load_table, table_path
-from argodb_mapreduce_spark.sources import manifest_log
+from argodb_mapreduce_spark.sources import manifest_log, table_meta
+from argodb_mapreduce_spark.sources.table_meta import (
+    KEYS_SIDECAR,
+    PROPERTIES,
+    coerce_literal,
+    key_fingerprint,
+    read_properties as _read_properties,
+    resolve_wrap_key,
+    stat_decode,
+)
 from argodb_mapreduce_spark.functions.oracle_safe import sql_dsum
 from argodb_mapreduce_spark.registry import register
+
+# Keyed read and write task closures call table_meta: pickled by value,
+# it runs on Python workers that cannot import this package.
+cloudpickle.register_pickle_by_value(table_meta)
 
 MANIFEST = "_snapshots.json"
 
@@ -108,27 +122,6 @@ def _stat_encode(v):
         except UnicodeDecodeError:
             return None
     return None
-
-
-def _stat_decode(v):
-    if isinstance(v, dict):
-        if v["t"] == "ts":
-            return _dt.datetime.fromisoformat(v["v"])
-        if v["t"] == "date":
-            return _dt.date.fromisoformat(v["v"])
-        raise ValueError(f"unknown stat tag {v['t']!r}")
-    return v
-
-
-def _coerce_literal(lit, stat_sample):
-    """Make a pruning literal comparable with decoded stat values."""
-    if isinstance(stat_sample, _dt.datetime) and isinstance(lit, str):
-        return _dt.datetime.fromisoformat(lit)
-    if isinstance(stat_sample, _dt.datetime) and type(lit) is _dt.date:
-        return _dt.datetime(lit.year, lit.month, lit.day)
-    if type(stat_sample) is _dt.date and isinstance(lit, str):
-        return _dt.date.fromisoformat(lit)
-    return lit
 
 
 def _segment_stats_and_metrics(seg_path: str) -> tuple[dict, dict]:
@@ -176,10 +169,10 @@ def _segment_stats_and_metrics(seg_path: str) -> tuple[dict, dict]:
                     lo.pop(name, None)
                     hi.pop(name, None)
                     continue
-                dmn, dmx = _stat_decode(mn), _stat_decode(mx)
-                if name not in lo or dmn < _stat_decode(lo[name]):
+                dmn, dmx = stat_decode(mn), stat_decode(mx)
+                if name not in lo or dmn < stat_decode(lo[name]):
                     lo[name] = mn
-                if name not in hi or dmx > _stat_decode(hi[name]):
+                if name not in hi or dmx > stat_decode(hi[name]):
                     hi[name] = mx
     return (
         {name: [lo[name], hi[name]] for name in lo},
@@ -262,18 +255,13 @@ def _segment_stats_plaintext(seg_path: str, exclude=()) -> dict[str, list]:
                     lo.pop(name, None)
                     hi.pop(name, None)
                     continue
-                dmn, dmx = _stat_decode(mn), _stat_decode(mx)
-                if name not in lo or dmn < _stat_decode(lo[name]):
+                dmn, dmx = stat_decode(mn), stat_decode(mx)
+                if name not in lo or dmn < stat_decode(lo[name]):
                     lo[name] = mn
-                if name not in hi or dmx > _stat_decode(hi[name]):
+                if name not in hi or dmx > stat_decode(hi[name]):
                     hi[name] = mx
     return {name: [lo[name], hi[name]] for name in lo}
 
-
-#: Spark/Hive's directory name for a NULL partition value — the same
-#: sentinel contract the reference's record reader appends partition
-#: values with (ArgodbMapreduceRecordReader.java:172-198).
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 #: Partition-column types whose directory-name form decodes losslessly
 #: for min/max stats. Other types still WORK (write/read/Spark partition
@@ -288,25 +276,17 @@ def _partition_stats(seg_path: str, partition_by, types: dict[str, str]) -> dict
     satisfied by NULL, so bounding only the non-null values keeps
     pruning conservative (the reference's NULL sentinel rows behave the
     same way under predicates)."""
-    from urllib.parse import unquote
-
     out: dict[str, list] = {}
     for depth, col in enumerate(partition_by):
         t = types.get(col)
         if t not in _PARTITION_STAT_TYPES:
             continue
         pattern = os.path.join(seg_path, *(["*"] * depth), f"{col}=*")
-        vals = []
-        for d in _glob.glob(pattern):
-            raw = unquote(os.path.basename(d).split("=", 1)[1])
-            if raw == _HIVE_NULL:
-                continue
-            if t == "date":
-                vals.append(_dt.date.fromisoformat(raw))
-            elif t == "string":
-                vals.append(raw)
-            else:
-                vals.append(int(raw))
+        raws = (
+            table_meta.decode_branch(os.path.basename(d))[col]
+            for d in _glob.glob(pattern)
+        )
+        vals = [table_meta.decode_part_value(r, t) for r in raws if r is not None]
         if vals:
             out[col] = [_stat_encode(min(vals)), _stat_encode(max(vals))]
     return out
@@ -591,35 +571,6 @@ def _bloom_might_contain(bloom: dict, value) -> bool:
     )
 
 
-#: Supported pruning operators: predicate (col, op, literal).
-_PRUNE_OPS = ("<", "<=", ">", ">=", "=")
-
-
-def _segment_may_match(stats: dict[str, list] | None, predicates) -> bool:
-    """Conservative overlap test: False ONLY when the segment's [min,max]
-    provably excludes every predicate. Missing stats => True (scan it)."""
-    if not stats:
-        return True
-    for col, op, lit in predicates:
-        if op not in _PRUNE_OPS:
-            raise ValueError(f"unsupported prune op {op!r}; use one of {_PRUNE_OPS}")
-        if col not in stats:
-            continue
-        mn, mx = _stat_decode(stats[col][0]), _stat_decode(stats[col][1])
-        lit = _coerce_literal(lit, mn)
-        if op == "<" and not (mn < lit):
-            return False
-        if op == "<=" and not (mn <= lit):
-            return False
-        if op == ">" and not (mx > lit):
-            return False
-        if op == ">=" and not (mx >= lit):
-            return False
-        if op == "=" and not (mn <= lit <= mx):
-            return False
-    return True
-
-
 def prune_report(
     path: str, version: int | None = None, predicates=()
 ) -> list[dict]:
@@ -649,7 +600,7 @@ def prune_report(
 
     report = []
     for s in entry["segments"]:
-        if not _segment_may_match(stats.get(s), predicates):
+        if not table_meta.stats_may_match(stats.get(s), predicates):
             report.append({"segment": s, "planned": False, "skipped_by": "minmax"})
         elif not _bloom_ok(s):
             report.append({"segment": s, "planned": False, "skipped_by": "bloom"})
@@ -964,15 +915,6 @@ def version_at_timestamp(path: str, ts: float) -> int:
 # ---------------------------------------------------------------------------
 
 CONSTRAINTS = "_constraints.json"
-PROPERTIES = "_properties.json"
-
-
-def _read_properties(path: str) -> dict:
-    p = os.path.join(path, PROPERTIES)
-    if not os.path.exists(p):
-        return {}
-    with open(p) as f:
-        return json.load(f)
 
 
 def set_table_property(path: str, key: str, value) -> dict:
@@ -985,11 +927,8 @@ def set_table_property(path: str, key: str, value) -> dict:
     with _commit_lock(path) as lock_token:
         props = _read_properties(path)
         props[key] = value
-        fd, tmp = tempfile.mkstemp(dir=path, prefix="_properties", suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(props, f, indent=1)
         _verify_lock(path, lock_token)
-        os.replace(tmp, os.path.join(path, PROPERTIES))
+        manifest_log._write_json_atomic(path, PROPERTIES, props)
     return props
 
 
@@ -1085,10 +1024,7 @@ def add_generated_column(spark: SparkSession, path: str, col: str, expr: str) ->
         cons[cname] = cexpr
         _verify_lock(path, lock_token)
         for fname, obj in ((PROPERTIES, props), (CONSTRAINTS, cons)):
-            fd, tmp = tempfile.mkstemp(dir=path, prefix=fname, suffix=".tmp")
-            with os.fdopen(fd, "w") as f:
-                json.dump(obj, f, indent=1)
-            os.replace(tmp, os.path.join(path, fname))
+            manifest_log._write_json_atomic(path, fname, obj)
 
 
 def _fill_generated(df: DataFrame, path: str) -> DataFrame:
@@ -1135,11 +1071,8 @@ def add_identity_column(path: str, col: str, start: int = 1) -> None:
             raise ValueError(f"identity column {col!r} already defined")
         ident[col] = {"start": int(start)}
         props["identity"] = ident
-        fd, tmp = tempfile.mkstemp(dir=path, prefix="_properties", suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(props, f, indent=1)
         _verify_lock(path, lock_token)
-        os.replace(tmp, os.path.join(path, PROPERTIES))
+        manifest_log._write_json_atomic(path, PROPERTIES, props)
 
 
 def _identity_base(path: str, col: str, spec: dict) -> int:
@@ -1156,7 +1089,7 @@ def _identity_base(path: str, col: str, spec: dict) -> int:
         head = _read_manifest(path)[-1]
         mx = max(
             (
-                _stat_decode(st[col][1])
+                stat_decode(st[col][1])
                 for st in head.get("stats", {}).values()
                 if col in st and st[col][1] is not None
             ),
@@ -1269,11 +1202,8 @@ def _extend_column_mapping(path: str, new_cols) -> dict[str, str]:
             changed = True
         if changed:
             props["column_mapping"] = cmap
-            fd, tmp = tempfile.mkstemp(dir=path, prefix="_properties", suffix=".tmp")
-            with os.fdopen(fd, "w") as f:
-                json.dump(props, f, indent=1)
             _verify_lock(path, lock_token)
-            os.replace(tmp, os.path.join(path, PROPERTIES))
+            manifest_log._write_json_atomic(path, PROPERTIES, props)
     return cmap
 
 
@@ -1324,11 +1254,8 @@ def enable_column_mapping(path: str) -> dict[str, str]:
         if not cmap:
             cmap = _head_identity_mapping(path)
             props["column_mapping"] = cmap
-            fd, tmp = tempfile.mkstemp(dir=path, prefix="_properties", suffix=".tmp")
-            with os.fdopen(fd, "w") as f:
-                json.dump(props, f, indent=1)
             _verify_lock(path, lock_token)
-            os.replace(tmp, os.path.join(path, PROPERTIES))
+            manifest_log._write_json_atomic(path, PROPERTIES, props)
     return cmap
 
 
@@ -1369,11 +1296,8 @@ def rename_column(path: str, old: str, new: str) -> dict[str, str]:
             )
         cmap[new] = cmap.pop(old)
         props["column_mapping"] = cmap
-        fd, tmp = tempfile.mkstemp(dir=path, prefix="_properties", suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(props, f, indent=1)
         _verify_lock(path, lock_token)
-        os.replace(tmp, os.path.join(path, PROPERTIES))
+        manifest_log._write_json_atomic(path, PROPERTIES, props)
     return cmap
 
 
@@ -1399,11 +1323,8 @@ def drop_column(path: str, col: str) -> dict[str, str]:
         if phys not in retired:
             retired.append(phys)
         props["column_mapping_retired"] = retired
-        fd, tmp = tempfile.mkstemp(dir=path, prefix="_properties", suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(props, f, indent=1)
         _verify_lock(path, lock_token)
-        os.replace(tmp, os.path.join(path, PROPERTIES))
+        manifest_log._write_json_atomic(path, PROPERTIES, props)
     return cmap
 
 
@@ -1630,11 +1551,8 @@ def add_constraint(spark: SparkSession, path: str, name: str, expr: str) -> int:
         if name in cons:
             raise ValueError(f"constraint {name!r} already exists: {cons[name]!r}")
         cons[name] = expr
-        fd, tmp = tempfile.mkstemp(dir=path, prefix="_constraints", suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(cons, f, indent=1)
         _verify_lock(path, lock_token)
-        os.replace(tmp, os.path.join(path, CONSTRAINTS))
+        manifest_log._write_json_atomic(path, CONSTRAINTS, cons)
     return len(cons)
 
 
@@ -2104,7 +2022,7 @@ def versioned_write(
             for col, start in _id_guards.items():
                 mx = max(
                     (
-                        _stat_decode(st[col][1])
+                        stat_decode(st[col][1])
                         for st in head_stats.values()
                         if col in st and st[col][1] is not None
                     ),
@@ -2484,134 +2402,6 @@ def _assert_not_encrypted(entry: dict) -> None:
         )
 
 
-def _make_crypto(master_b64: str):
-    """Parquet-modular-encryption kit for the KEYED read/write closures
-    (r14, VERDICT r13 #1): returns ``(decryption_properties_fn,
-    encryption_properties_fn)``. Wire-compatible with the pyds writer's
-    KMS (python_datasource.py `_crypto` — same HMAC-SHA256 wrap:
-    ``mask = HMAC(master, 'wrap|'+key_id+'|'+nonce)``, ``ct = DEK ^
-    mask``, 16-byte tag ``HMAC(master, 'tag|'+nonce+ct)``), so segments
-    written by either path read under the same master key. Both
-    returned callables are NESTED functions: task closures capturing
-    them ship BY VALUE (cloudpickle), because executors in vanilla
-    sessions cannot import this repo. parquet-cpp does the real
-    cryptography (AES-GCM modules, fresh data key per file); this KMS
-    only wraps data keys, and a WRONG master fails loud at unwrap."""
-    import base64 as _b64
-
-    master = _b64.b64decode(master_b64)
-    if len(master) < 16:
-        raise ValueError("encryption key must be base64 of at least 16 bytes")
-
-    def _factory_cfg():
-        import pyarrow.parquet.encryption as _pe
-
-        class _HmacWrapKms(_pe.KmsClient):
-            def __init__(self, config):
-                super().__init__()
-
-            def wrap_key(self, key_bytes, master_key_identifier):
-                import hashlib as _hl
-                import hmac as _hm
-                import os as _osr
-
-                nonce = _osr.urandom(16)
-                mask = _hm.new(
-                    master,
-                    b"wrap|" + master_key_identifier.encode() + b"|" + nonce,
-                    _hl.sha256,
-                ).digest()
-                ct = bytes(a ^ b for a, b in zip(key_bytes, mask))
-                tag = _hm.new(
-                    master, b"tag|" + nonce + ct, _hl.sha256
-                ).digest()[:16]
-                return _b64.b64encode(nonce + ct + tag).decode()
-
-            def unwrap_key(self, wrapped_key, master_key_identifier):
-                import hashlib as _hl
-                import hmac as _hm
-
-                raw = _b64.b64decode(wrapped_key)
-                nonce, ct, tag = raw[:16], raw[16:-16], raw[-16:]
-                want = _hm.new(
-                    master, b"tag|" + nonce + ct, _hl.sha256
-                ).digest()[:16]
-                if not _hm.compare_digest(tag, want):
-                    raise ValueError(
-                        "encryption key mismatch: the supplied key cannot "
-                        "unwrap this file's data key"
-                    )
-                mask = _hm.new(
-                    master,
-                    b"wrap|" + master_key_identifier.encode() + b"|" + nonce,
-                    _hl.sha256,
-                ).digest()
-                return bytes(a ^ b for a, b in zip(ct, mask))
-
-        return (
-            _pe.CryptoFactory(lambda config: _HmacWrapKms(config)),
-            _pe.KmsConnectionConfig(),
-        )
-
-    def decryption_properties():
-        """(props, factory) — keep the factory referenced while reads
-        run; unwrap happens lazily through its callback."""
-        cf, cfg = _factory_cfg()
-        return cf.file_decryption_properties(cfg), cf
-
-    def encryption_properties(pa_schema, enc_cols=None):
-        """Per-FILE properties (fresh data keys every call): all leaf
-        columns under the footer key, PLAINTEXT footer so schema and
-        row counts stay keyless-readable while column chunk metadata
-        (stats included) stays encrypted. With ``enc_cols`` (COLUMN-
-        level encryption, r14) only leaves under those top-level
-        columns are encrypted — the rest stay plaintext, keyless-
-        readable by projection."""
-        import io as _io
-
-        import pyarrow.parquet as _pq
-        import pyarrow.parquet.encryption as _pe
-
-        buf = _io.BytesIO()
-        with _pq.ParquetWriter(buf, pa_schema):
-            pass
-        pqs = _pq.ParquetFile(_io.BytesIO(buf.getvalue())).schema
-        leaves = [pqs.column(i).path for i in range(len(pqs))]
-        if enc_cols is not None:
-            want = set(enc_cols)
-            leaves = [p for p in leaves if p.split(".")[0] in want]
-            if not leaves:
-                raise ValueError(
-                    "encryptColumns matches no leaf column in the "
-                    "write schema"
-                )
-        cf, cfg = _factory_cfg()
-        return cf.file_encryption_properties(
-            cfg,
-            _pe.EncryptionConfiguration(
-                footer_key="k0",
-                plaintext_footer=True,
-                column_keys={"k0": leaves},
-            ),
-        )
-
-    return decryption_properties, encryption_properties
-
-
-def key_fingerprint(master_b64: str) -> str:
-    """Stable fingerprint of a master key for the manifest's
-    ``encrypted`` marker (ADVICE r13): HMAC-SHA256(master, constant)
-    prefix — reveals nothing about the key, but lets the writer reject
-    an append wrapped under a DIFFERENT master (which would commit a
-    version no single key can read)."""
-    import base64 as _b64
-    import hashlib as _hl
-    import hmac as _hm
-
-    master = _b64.b64decode(master_b64)
-    return _hm.new(master, b"argodb-key-fingerprint", _hl.sha256).hexdigest()[:16]
-
-
 def _carry_encryption(entry: dict, src: dict) -> None:
     """Copy the encryption markers (``encrypted`` + ``key_fp``) from a
     source manifest entry onto a derived one. Every commit that forks a
@@ -2630,102 +2420,10 @@ def _carry_encryption(entry: dict, src: dict) -> None:
             entry["enc_columns"] = list(src["enc_columns"])
 
 
-KEYS_SIDECAR = "_keys.json"
-
-
-def _hmac_wrap(master_b64: str, key_id: str, payload: bytes) -> str:
-    """Driver-side envelope wrap — BYTE-IDENTICAL wire format to the
-    executor KMS (``_make_crypto``/pyds ``_crypto``): ``mask =
-    HMAC-SHA256(master, 'wrap|'+key_id+'|'+nonce)``, ``ct = payload ^
-    mask``, 16-byte tag ``HMAC(master, 'tag|'+nonce+ct)``. Used for the
-    table KEK in the ``_keys.json`` sidecar, so key rotation re-wraps
-    ONE 32-byte secret instead of rewriting every file footer."""
-    import base64 as _b64
-    import hashlib as _hl
-    import hmac as _hm
-
-    master = _b64.b64decode(master_b64)
-    nonce = os.urandom(16)
-    mask = _hm.new(
-        master, b"wrap|" + key_id.encode() + b"|" + nonce, _hl.sha256
-    ).digest()
-    ct = bytes(a ^ b for a, b in zip(payload, mask))
-    tag = _hm.new(master, b"tag|" + nonce + ct, _hl.sha256).digest()[:16]
-    return _b64.b64encode(nonce + ct + tag).decode()
-
-
-def _hmac_unwrap(master_b64: str, key_id: str, blob: str) -> bytes:
-    """Inverse of :func:`_hmac_wrap`; a wrong master fails the HMAC tag
-    loudly instead of yielding a garbage KEK."""
-    import base64 as _b64
-    import hashlib as _hl
-    import hmac as _hm
-
-    master = _b64.b64decode(master_b64)
-    raw = _b64.b64decode(blob)
-    nonce, ct, tag = raw[:16], raw[16:-16], raw[-16:]
-    want = _hm.new(master, b"tag|" + nonce + ct, _hl.sha256).digest()[:16]
-    if not _hm.compare_digest(tag, want):
-        raise ValueError(
-            "encryption key mismatch: the supplied key cannot unwrap "
-            "this table's key-encryption key"
-        )
-    mask = _hm.new(
-        master, b"wrap|" + key_id.encode() + b"|" + nonce, _hl.sha256
-    ).digest()
-    return bytes(a ^ b for a, b in zip(ct, mask))
-
-
-def _read_keys_sidecar(path: str) -> dict | None:
-    """The table's key sidecar, or None for legacy direct-wrap tables
-    (whose file DEKs are wrapped by the master itself — readable
-    forever, but not rotatable without a rewrite)."""
-    p = os.path.join(path, KEYS_SIDECAR)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
 def _write_keys_sidecar(path: str, sidecar: dict) -> None:
     """Atomic publish (tmp + rename); callers serialize under the table
     commit lock."""
-    p = os.path.join(path, KEYS_SIDECAR)
-    tmp = p + f".tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(sidecar, f)
-    os.replace(tmp, p)
-
-
-def resolve_wrap_key(path: str, master_b64: str) -> str:
-    """Resolve the caller's MASTER key to the table's effective WRAP
-    key (r14 envelope encryption): tables with a ``_keys.json`` sidecar
-    wrap file data keys under a per-table KEK, itself wrapped by the
-    master — so :func:`rotate_encryption_key` is an O(1) metadata
-    re-wrap with ZERO file rewrites, the only rotation shape that
-    survives 100 TB. A master whose fingerprint the sidecar does not
-    know, or one rotated out, fails HERE at plan time. Legacy tables
-    (no sidecar) fall back to the master as the wrap key — exactly the
-    pre-r14 wire format, so nothing already written changes meaning."""
-    sidecar = _read_keys_sidecar(path)
-    if sidecar is None:
-        return master_b64
-    fp = key_fingerprint(master_b64)
-    rec = (sidecar.get("keks") or {}).get(fp)
-    if rec is None:
-        raise ValueError(
-            "encryptionKey does not match any master key this table's "
-            "key sidecar knows (key-fingerprint lookup failed)"
-        )
-    if rec.get("retired"):
-        raise ValueError(
-            "this master key was ROTATED OUT of the table "
-            f"(rotation #{sidecar.get('rotations', '?')}); reads and "
-            "writes require the current master key"
-        )
-    import base64 as _b64
-
-    return _b64.b64encode(_hmac_unwrap(master_b64, "kek", rec["wrapped"])).decode()
+    manifest_log._write_json_atomic(path, KEYS_SIDECAR, sidecar)
 
 
 def rotate_encryption_key(
@@ -2761,7 +2459,7 @@ def rotate_encryption_key(
             raise ValueError(
                 "rotate_encryption_key requires an encrypted head version"
             )
-        sidecar = _read_keys_sidecar(path)
+        sidecar = table_meta.read_keys_sidecar(path)
         if sidecar is None:
             raise ValueError(
                 "this table predates the key sidecar (file data keys "
@@ -2775,9 +2473,9 @@ def rotate_encryption_key(
                 "mismatch); only the current master can rotate"
             )
         rec = sidecar["keks"][fp_old]
-        kek = _hmac_unwrap(old_key_b64, "kek", rec["wrapped"])
+        kek = table_meta.hmac_unwrap(old_key_b64, "kek", rec["wrapped"])
         sidecar["keks"][fp_new] = {
-            "wrapped": _hmac_wrap(new_key_b64, "kek", kek),
+            "wrapped": table_meta.hmac_wrap(new_key_b64, "kek", kek),
             "kek_id": rec["kek_id"],
         }
         # Scrub the old wrap: keep only the kek_id (lineage bookkeeping
@@ -2821,91 +2519,28 @@ def rotate_encryption_key(
     }
 
 
-def _check_key_fingerprint(
-    entry: dict, encryption_key: str, path: str | None = None
-) -> None:
-    """Plan-time wrong-key rejection (ADVICE r13): when the manifest
-    recorded the master's fingerprint, a mismatching key fails HERE
-    with a clear error rather than N tasks later at HMAC unwrap.
-    Entries written before fingerprints existed (no ``key_fp``) skip
-    the check — unwrap still fails loud for them.
-
-    With a key SIDECAR (r14 rotation), the sidecar is the authority:
-    the supplied master must be a known, un-retired entry, and — when
-    the version being read recorded a fingerprint — both must resolve
-    to the SAME KEK lineage (``kek_id``), so a pre-rotation version
-    reads under the post-rotation master while a different-lineage key
-    (an overwrite under a fresh master) is still rejected up front."""
-    if path is not None:
-        sidecar = _read_keys_sidecar(path)
-        if sidecar:
-            fp_s = key_fingerprint(encryption_key)
-            rec = (sidecar.get("keks") or {}).get(fp_s)
-            if rec is None:
-                raise ValueError(
-                    "encryptionKey does not match any master key this "
-                    "table's key sidecar knows (key-fingerprint lookup "
-                    "failed)"
-                )
-            if rec.get("retired"):
-                raise ValueError(
-                    "this master key was ROTATED OUT of the table; "
-                    "reads require the current master key"
-                )
-            efp = entry.get("key_fp")
-            erec = (sidecar.get("keks") or {}).get(efp) if efp else None
-            if erec and erec.get("kek_id") != rec.get("kek_id"):
-                raise ValueError(
-                    "encryptionKey belongs to a different key lineage "
-                    "than the one this version was encrypted under"
-                )
-            return
-    fp = entry.get("key_fp")
-    if fp and key_fingerprint(encryption_key) != fp:
-        raise ValueError(
-            "encryptionKey does not match the master key this table's "
-            "head version is encrypted under (manifest key-fingerprint "
-            "mismatch)"
-        )
-
-
 def _keyed_seg_files(path: str, entry: dict, segs) -> list:
     """Driver-side file listing for a keyed read — [(abs_file_path,
     ((col, raw_or_None, type_str), ...)), ...]: flat segments list
     plainly; Hive-partitioned segments decode each file's ``col=value``
     branch (NULL sentinel → None) with types pinned to the schema
     ledger. O(files) filesystem metadata."""
-    from urllib.parse import unquote as _unq
-
     parts_of = _segment_partition_cols(entry, segs)
     ledger = entry.get("schemas", {})
     out = []
     for seg in segs:
         seg_dir = os.path.abspath(os.path.join(path, seg))
         cols = parts_of.get(seg)
-        types = ledger.get(seg, {})
         if not cols:
             for f in sorted(os.listdir(seg_dir)):
                 if f.endswith(".parquet"):
                     out.append((os.path.join(seg_dir, f), ()))
             continue
-        for root, _dirs, fs in sorted(os.walk(seg_dir)):
-            rel = os.path.relpath(root, seg_dir)
-            pairs = {}
-            if rel != ".":
-                for comp in rel.split(os.sep):
-                    if "=" in comp:
-                        c, v = comp.split("=", 1)
-                        v = _unq(v)
-                        pairs[c] = (
-                            None if v == "__HIVE_DEFAULT_PARTITION__" else v
-                        )
-            branch = tuple(
-                (c, pairs.get(c), types.get(c, "string")) for c in cols
+        types = ledger.get(seg, {})
+        for fp, pairs in table_meta.walk_partition_files(seg_dir, cols):
+            out.append(
+                (fp, tuple((c, v, types.get(c, "string")) for c, v in pairs))
             )
-            for f in sorted(fs):
-                if f.endswith(".parquet"):
-                    out.append((os.path.join(root, f), branch))
     return out
 
 
@@ -2960,14 +2595,14 @@ def _read_files_keyed(
     task — the same granularity Spark's own file-source planning uses
     on splittable-but-encrypted files."""
     if encryption_key:
-        _check_key_fingerprint(entry, encryption_key, path)
+        table_meta.check_key_fp(entry, encryption_key, path)
         # Rotation-aware (r14): the task closures wrap/unwrap with the
         # table KEK when a key sidecar exists, so files written before
         # a rotation decrypt under the CURRENT master.
         wrap_key = (
             resolve_wrap_key(path, encryption_key) if path else encryption_key
         )
-        dec_props_fn, _enc = _make_crypto(wrap_key)
+        table_meta.crypto_factory(wrap_key)  # malformed keys fail here
     else:
         # KEYLESS plaintext-SUBSET scan of a COLUMN-encrypted version
         # (r14): legal only when the projection avoids every encrypted
@@ -2981,7 +2616,7 @@ def _read_files_keyed(
                 "column-encrypted table and an explicit plaintext-only "
                 "column projection"
             )
-        dec_props_fn = None
+        wrap_key = None
         # Predicates on encrypted columns cannot be evaluated keyless —
         # drop them from row-group skipping (the caller refuses them at
         # the API layer; this keeps skipping a pure superset either way).
@@ -3013,9 +2648,9 @@ def _read_files_keyed(
     _preds = [tuple(p) for p in predicates]
 
     def run(batches):
-        # SELF-CONTAINED closure (vanilla-session executors cannot
-        # import this repo): decode-read-align per file.
-        import datetime as _dt
+        # Decode-read-align per file. The closure ships by value and
+        # calls table_meta, which is registered to pickle by value, so
+        # Python workers need not import this package.
         import json as _j
         from urllib.parse import quote as _q
 
@@ -3024,64 +2659,10 @@ def _read_files_keyed(
         import pyarrow.parquet as _pq
 
         dec, _factory = (
-            dec_props_fn() if dec_props_fn is not None else (None, None)
+            table_meta.decryption_properties(wrap_key)
+            if wrap_key is not None
+            else (None, None)
         )
-
-        def _typed(raw, t):
-            if raw is None:
-                return None
-            t = (t or "string").lower()
-            if t in ("tinyint", "smallint", "int", "bigint"):
-                return int(raw)
-            if t in ("double", "float"):
-                return float(raw)
-            if t == "date":
-                return _dt.date.fromisoformat(raw)
-            if t == "boolean":
-                return raw.lower() == "true"
-            return raw
-
-        def _coerce(lit, sample):
-            # Align the literal's type with the statistic's so the
-            # comparison is meaningful; mismatches keep the group.
-            if isinstance(sample, (int, float)) and isinstance(
-                lit, (int, float)
-            ):
-                return float(lit) if isinstance(sample, float) else lit
-            if isinstance(sample, _dt.date) and isinstance(lit, str):
-                return _dt.date.fromisoformat(lit)
-            return lit
-
-        def _rg_keep(md, rg, name_to_idx):
-            """ROW-GROUP SKIPPING WITH THE KEY (r14): per-row-group
-            column statistics are encrypted alongside the data, so a
-            keyed reader CAN consult them — restoring the data skipping
-            the manifest gives up on encrypted tables (no plaintext
-            stats there, by design). Conservative: any missing stat,
-            unknown column, or comparison error keeps the group."""
-            for col, op, lit in _preds:
-                i = name_to_idx.get(col)
-                if i is None:
-                    continue
-                try:
-                    st = md.row_group(rg).column(i).statistics
-                    if st is None or not st.has_min_max:
-                        continue
-                    mn, mx = st.min, st.max
-                    lit_c = _coerce(lit, mn)
-                    if op == "=" and not (mn <= lit_c <= mx):
-                        return False
-                    if op == "<" and not (mn < lit_c):
-                        return False
-                    if op == "<=" and not (mn <= lit_c):
-                        return False
-                    if op == ">" and not (mx > lit_c):
-                        return False
-                    if op == ">=" and not (mx >= lit_c):
-                        return False
-                except (TypeError, ValueError):
-                    continue
-            return True
 
         n_data = len(target) - (2 if _with_pos else 0)
         data_fields = [target.field(i) for i in range(n_data)]
@@ -3093,23 +2674,11 @@ def _read_files_keyed(
                 pf = _pq.ParquetFile(p, decryption_properties=dec)
                 fp_uri = "file:" + _q(p)
                 md = pf.metadata
-                starts = [0] * md.num_row_groups
-                for rg in range(1, md.num_row_groups):
-                    starts[rg] = (
-                        starts[rg - 1] + md.row_group(rg - 1).num_rows
-                    )
-                if _preds:
-                    name_to_idx = {
-                        md.schema.column(i).path: i
-                        for i in range(md.num_columns)
-                    }
-                    selected = [
-                        rg
-                        for rg in range(md.num_row_groups)
-                        if _rg_keep(md, rg, name_to_idx)
-                    ]
-                else:
-                    selected = list(range(md.num_row_groups))
+                # Row-group skipping with the key (r14): per-row-group
+                # statistics are encrypted alongside the data, so a
+                # keyed reader can consult them, restoring the skipping
+                # the manifest gives up on encrypted tables.
+                selected, starts = table_meta.select_row_groups(pf, _preds)
                 # Column PRUNING inside the scan: only the target's
                 # columns that physically exist in this file are
                 # decoded (keyed mode: less cipher+decode work; keyless
@@ -3122,8 +2691,7 @@ def _read_files_keyed(
                     for i in range(md.num_columns)
                 }
                 sel = [f.name for f in data_fields if f.name in file_tops]
-                for rg in selected:
-                    off = starts[rg]
+                for rg, off in zip(selected, starts):
                     if not sel:
                         # Every requested column is a partition constant
                         # or a ledger backfill — no byte of this file
@@ -3135,9 +2703,8 @@ def _read_files_keyed(
                         for f in data_fields:
                             if f.name in parts:
                                 raw, t = parts[f.name]
-                                arrays.append(
-                                    _pa.array([_typed(raw, t)] * n, type=f.type)
-                                )
+                                tv = table_meta.decode_part_value(raw, t)
+                                arrays.append(_pa.array([tv] * n, type=f.type))
                             else:
                                 arrays.append(_pa.nulls(n, f.type))
                         if _with_pos:
@@ -3164,9 +2731,8 @@ def _read_files_keyed(
                                     a = a.cast(f.type, safe=False)
                             elif f.name in parts:
                                 raw, t = parts[f.name]
-                                a = _pa.array(
-                                    [_typed(raw, t)] * n, type=f.type
-                                )
+                                tv = table_meta.decode_part_value(raw, t)
+                                a = _pa.array([tv] * n, type=f.type)
                             else:
                                 a = _pa.nulls(n, f.type)
                             arrays.append(a)
@@ -3206,9 +2772,8 @@ def _write_segment_keyed(
     # rewrites wrap fresh data keys under the table KEK, keeping every
     # post-rotation rewrite readable by the current master only.
     table_path_ = os.path.dirname(os.path.abspath(staged))
-    _dec, enc_props_fn = _make_crypto(
-        resolve_wrap_key(table_path_, encryption_key)
-    )
+    wrap_key = resolve_wrap_key(table_path_, encryption_key)
+    table_meta.crypto_factory(wrap_key)  # malformed keys fail here
     dest = os.path.abspath(staged)
     # Column-level encryption (r14): rewrites of a column-encrypted
     # table keep the SAME encrypted-column set — a full-table rewrite
@@ -3216,6 +2781,8 @@ def _write_segment_keyed(
     _enc_cols = tuple(enc_cols) if enc_cols else None
 
     def run(batches):
+        # Ships by value with table_meta (registered to pickle by
+        # value), so Python workers need not import this package.
         import os as _o
         import uuid as _u
 
@@ -3231,7 +2798,9 @@ def _write_segment_keyed(
                 writer = _pq.ParquetWriter(
                     fp,
                     b.schema,
-                    encryption_properties=enc_props_fn(b.schema, _enc_cols),
+                    encryption_properties=table_meta.encryption_properties(
+                        wrap_key, b.schema, _enc_cols
+                    ),
                 )
             writer.write_batch(b)
             n += b.num_rows
@@ -3298,49 +2867,13 @@ def _read_files_with_layout(
     They are decoded to plain filesystem paths for grouping and for the
     reader input; the probe's regenerated ``__fp`` is Spark-encoded
     again, so the position join against the DV stays exact."""
-    from urllib.parse import unquote as _unq
-
-    def local(fp: str) -> str:
-        fp = "/" + fp.split(":", 1)[-1].lstrip("/") if ":" in fp else fp
-        return _unq(fp)
-
+    local = [table_meta.local_path(fp) for fp in files]
     if entry.get("encrypted") and encryption_key:
-        # Keyed file-precise scan (r14): decode the URIs, recover each
-        # file's partition branch from its owning segment's ledger, and
-        # read through the keyed pyarrow path — same position synthesis
-        # (__fp/__ri), so the DV join downstream is byte-exact.
-        abs_root = os.path.abspath(path)
-        parts_of = entry.get("partition_by", {})
-        ledger = entry.get("schemas", {})
-        listed = []
-        for fp in files:
-            lp = local(fp)
-            branch = ()
-            for seg in entry["segments"]:
-                seg_root = os.path.join(abs_root, seg)
-                if not lp.startswith(seg_root + os.sep):
-                    continue
-                cols = parts_of.get(seg)
-                if cols:
-                    pairs = {}
-                    rel = os.path.relpath(os.path.dirname(lp), seg_root)
-                    if rel != ".":
-                        for comp in rel.split(os.sep):
-                            if "=" in comp:
-                                c, v = comp.split("=", 1)
-                                v = _unq(v)
-                                pairs[c] = (
-                                    None
-                                    if v == "__HIVE_DEFAULT_PARTITION__"
-                                    else v
-                                )
-                    types = ledger.get(seg, {})
-                    branch = tuple(
-                        (c, pairs.get(c), types.get(c, "string"))
-                        for c in cols
-                    )
-                break
-            listed.append((lp, branch))
+        # Keyed file-precise scan (r14): recover each file's partition
+        # branch from its owning segment's ledger and read through the
+        # keyed pyarrow path — same position synthesis (__fp/__ri), so
+        # the DV join downstream is byte-exact.
+        listed = [(lp, table_meta.parts_of_file(path, entry, lp)) for lp in local]
         return _read_files_keyed(
             spark, entry, listed, encryption_key, with_pos=True, path=path
         )
@@ -3354,18 +2887,18 @@ def _read_files_with_layout(
     abs_path = os.path.abspath(path)
     groups: dict = {}
     flat_owners = set()
-    for fp in files:
+    for lp in local:
         owner = next(
             (
                 seg for seg in entry["segments"]
-                if local(fp).startswith(os.path.join(abs_path, seg) + os.sep)
+                if lp.startswith(os.path.join(abs_path, seg) + os.sep)
             ),
             None,
         )
         if owner is None or not parts.get(owner):
             flat_owners.add(owner)
             owner = None
-        groups.setdefault(owner, []).append(local(fp))
+        groups.setdefault(owner, []).append(lp)
 
     def _pos(df: DataFrame) -> DataFrame:
         return df.select(
@@ -3973,13 +3506,9 @@ def diff_keys(
             )
         # metadata-collect: O(changed files) distinct DV'd paths — the
         # prune's own bound (annotated; never O(rows)).
-        from urllib.parse import unquote as _unq
-
         abs_root = os.path.abspath(path)
         for r in delta.select("file_path").distinct().collect():
-            fp = r[0]
-            fp = "/" + fp.split(":", 1)[-1].lstrip("/") if ":" in fp else fp
-            fp = _unq(fp)
+            fp = table_meta.local_path(r[0])
             for seg in shared:
                 if fp.startswith(os.path.join(abs_root, seg) + os.sep):
                     touched.add(seg)
@@ -4869,11 +4398,11 @@ def _segment_fully_matches(stats: dict | None, predicates) -> bool:
     for col, op, lit in predicates:
         if col not in stats:
             return False
-        mn, mx = _stat_decode(stats[col][0]), _stat_decode(stats[col][1])
+        mn, mx = stat_decode(stats[col][0]), stat_decode(stats[col][1])
         if mn is None or mx is None:
             return False
         try:
-            lit = _coerce_literal(lit, mn)
+            lit = coerce_literal(lit, mn)
             ok = {
                 "<": mx < lit,
                 "<=": mx <= lit,
@@ -4893,9 +4422,8 @@ def _segment_predicate_cols_null_free(
 ) -> bool:
     """NULL-freedom proof routed by column kind: data columns prove via
     parquet footer null counts; partition columns live in directory
-    names, where a NULL is exactly the ``__HIVE_DEFAULT_PARTITION__``
-    sentinel branch — no sentinel directory, no NULLs. Both proofs are
-    pure metadata."""
+    names, where a NULL is exactly the Hive NULL-sentinel branch — no
+    sentinel directory, no NULLs. Both proofs are pure metadata."""
     seg_dir = os.path.join(path, seg)
     pcols = set(latest.get("partition_by", {}).get(seg) or ())
     data_cols = [c for c in columns if c not in pcols]
@@ -4903,7 +4431,7 @@ def _segment_predicate_cols_null_free(
         return False
     for c in (c for c in columns if c in pcols):
         if _glob.glob(
-            os.path.join(seg_dir, "**", f"{c}={_HIVE_NULL}"), recursive=True
+            os.path.join(seg_dir, "**", f"{c}={table_meta.HIVE_NULL}"), recursive=True
         ):
             return False
     return True
@@ -5139,11 +4667,11 @@ def _segments_possibly_holding_keys(latest: dict, vals, key_col: str) -> list[st
         st = stats.get(s, {}).get(key_col)
         cand = list(vals)
         if st is not None:
-            mn, mx = _stat_decode(st[0]), _stat_decode(st[1])
+            mn, mx = stat_decode(st[0]), stat_decode(st[1])
             if mn is not None and mx is not None:
                 try:
                     cand = [
-                        v for v in vals if mn <= _coerce_literal(v, mn) <= mx
+                        v for v in vals if mn <= coerce_literal(v, mn) <= mx
                     ]
                 except TypeError:
                     cand = list(vals)  # incomparable types: can't prove absence
@@ -5178,8 +4706,8 @@ def _segments_possibly_holding_keys_distributed(
     rows, kept_unconditionally = [], []
     for s in latest["segments"]:
         st = stats.get(s, {}).get(key_col)
-        mn = _stat_decode(st[0]) if st else None
-        mx = _stat_decode(st[1]) if st else None
+        mn = stat_decode(st[0]) if st else None
+        mx = stat_decode(st[1]) if st else None
         if mn is None or mx is None:
             kept_unconditionally.append(s)  # unprovable: scan it
         else:
@@ -5289,7 +4817,7 @@ def _touched_segments(latest: dict, predicates) -> list[str]:
     return [
         s
         for s in latest["segments"]
-        if _segment_may_match(latest.get("stats", {}).get(s), predicates)
+        if table_meta.stats_may_match(latest.get("stats", {}).get(s), predicates)
     ]
 
 
@@ -6140,7 +5668,7 @@ def snapshot_bloom_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats_only_kept = [
         s
         for s in entry["segments"]
-        if _segment_may_match(entry.get("stats", {}).get(s), preds)
+        if table_meta.stats_may_match(entry.get("stats", {}).get(s), preds)
     ]
     df = snapshot_read(spark, out, predicates=preds)
     return df.agg(
@@ -6284,15 +5812,9 @@ def _synthesize_restore_legs(
         )
     shared = prev_segs & cur_segs
     if shared and prev.get("dv") != cur.get("dv"):
-        from urllib.parse import unquote as _unq
-
         roots = tuple(
             os.path.join(os.path.abspath(path), s) + os.sep for s in shared
         )
-
-        def _local(fp: str) -> str:
-            fp = "/" + fp.split(":", 1)[-1].lstrip("/") if ":" in fp else fp
-            return _unq(fp)
 
         def _dv(entry: dict):
             if not entry.get("dv"):
@@ -6326,7 +5848,7 @@ def _synthesize_restore_legs(
                     r.file_path
                     for r in delta.select("file_path").distinct().collect()
                 )
-                if _local(fp).startswith(roots)
+                if table_meta.local_path(fp).startswith(roots)
             ]
             if not files:
                 continue
@@ -6975,7 +6497,7 @@ def sink_identity_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur = snapshot_read(spark, out)
     # The second commit's min id, from the LEDGER (its segment's own
     # min/max stats) — pure metadata, no job.
-    second_min = _stat_decode(
+    second_min = stat_decode(
         _read_manifest(out)[-1]["stats"]["data-1"]["row_id"][0]
     )
     return cur.agg(
@@ -7571,11 +7093,10 @@ def _merge_upsert_on(
     # matching breaks on a shallow clone's absolute-path borrowed
     # segments, silently skipping the rewrite and duplicating matched
     # keys.
-    def _local(uri: str) -> str:
-        return "/" + uri.split(":", 1)[-1].lstrip("/") if ":" in uri else uri
-
     seg_dirs = {s: os.path.realpath(os.path.join(path, s)) for s in segs}
-    touched_paths = {os.path.realpath(_local(f)) for f in touched_files}
+    touched_paths = {
+        os.path.realpath(table_meta.local_path(f)) for f in touched_files
+    }
     touched_set, unmatched = set(), set()
     for fp in touched_paths:
         owners = [s for s, d in seg_dirs.items() if fp.startswith(d + os.sep)]
@@ -7977,7 +7498,7 @@ def update_where(
 
     The Delta UPDATE algorithm over this manifest:
 
-    1. *Prune*: manifest min/max (``_segment_may_match``) drops every
+    1. *Prune*: manifest min/max (``table_meta.stats_may_match``) drops every
        segment that provably contains no matching row — those carry
        forward with their stats, blooms, and schema entries untouched,
        without a read or a write.
@@ -8408,7 +7929,7 @@ def clone_table(src_path: str, dst_path: str, version: int | None = None) -> int
     # rotating the source afterwards does NOT retire the clone's copy
     # (exactly the segment-reference semantics: the clone is pinned to
     # the fork point; a production deployment rotates both).
-    _src_sidecar = _read_keys_sidecar(src_path)
+    _src_sidecar = table_meta.read_keys_sidecar(src_path)
     if _src_sidecar is not None and entry.get("encrypted"):
         _write_keys_sidecar(dst_path, _src_sidecar)
     _write_manifest(dst_path, [entry])
