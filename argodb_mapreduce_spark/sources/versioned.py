@@ -74,11 +74,11 @@ from argodb_mapreduce_spark.sources import manifest_log, table_meta
 from argodb_mapreduce_spark.sources.table_meta import (
     KEYS_SIDECAR,
     PROPERTIES,
-    coerce_literal,
+    coerce_literal as _coerce_literal,
     key_fingerprint,
     read_properties as _read_properties,
     resolve_wrap_key,
-    stat_decode,
+    stat_decode as _stat_decode,
 )
 from argodb_mapreduce_spark.functions.oracle_safe import sql_dsum
 from argodb_mapreduce_spark.registry import register
@@ -169,10 +169,10 @@ def _segment_stats_and_metrics(seg_path: str) -> tuple[dict, dict]:
                     lo.pop(name, None)
                     hi.pop(name, None)
                     continue
-                dmn, dmx = stat_decode(mn), stat_decode(mx)
-                if name not in lo or dmn < stat_decode(lo[name]):
+                dmn, dmx = _stat_decode(mn), _stat_decode(mx)
+                if name not in lo or dmn < _stat_decode(lo[name]):
                     lo[name] = mn
-                if name not in hi or dmx > stat_decode(hi[name]):
+                if name not in hi or dmx > _stat_decode(hi[name]):
                     hi[name] = mx
     return (
         {name: [lo[name], hi[name]] for name in lo},
@@ -255,10 +255,10 @@ def _segment_stats_plaintext(seg_path: str, exclude=()) -> dict[str, list]:
                     lo.pop(name, None)
                     hi.pop(name, None)
                     continue
-                dmn, dmx = stat_decode(mn), stat_decode(mx)
-                if name not in lo or dmn < stat_decode(lo[name]):
+                dmn, dmx = _stat_decode(mn), _stat_decode(mx)
+                if name not in lo or dmn < _stat_decode(lo[name]):
                     lo[name] = mn
-                if name not in hi or dmx > stat_decode(hi[name]):
+                if name not in hi or dmx > _stat_decode(hi[name]):
                     hi[name] = mx
     return {name: [lo[name], hi[name]] for name in lo}
 
@@ -1089,7 +1089,7 @@ def _identity_base(path: str, col: str, spec: dict) -> int:
         head = _read_manifest(path)[-1]
         mx = max(
             (
-                stat_decode(st[col][1])
+                _stat_decode(st[col][1])
                 for st in head.get("stats", {}).values()
                 if col in st and st[col][1] is not None
             ),
@@ -2022,7 +2022,7 @@ def versioned_write(
             for col, start in _id_guards.items():
                 mx = max(
                     (
-                        stat_decode(st[col][1])
+                        _stat_decode(st[col][1])
                         for st in head_stats.values()
                         if col in st and st[col][1] is not None
                     ),
@@ -4398,11 +4398,11 @@ def _segment_fully_matches(stats: dict | None, predicates) -> bool:
     for col, op, lit in predicates:
         if col not in stats:
             return False
-        mn, mx = stat_decode(stats[col][0]), stat_decode(stats[col][1])
+        mn, mx = _stat_decode(stats[col][0]), _stat_decode(stats[col][1])
         if mn is None or mx is None:
             return False
         try:
-            lit = coerce_literal(lit, mn)
+            lit = _coerce_literal(lit, mn)
             ok = {
                 "<": mx < lit,
                 "<=": mx <= lit,
@@ -4667,11 +4667,11 @@ def _segments_possibly_holding_keys(latest: dict, vals, key_col: str) -> list[st
         st = stats.get(s, {}).get(key_col)
         cand = list(vals)
         if st is not None:
-            mn, mx = stat_decode(st[0]), stat_decode(st[1])
+            mn, mx = _stat_decode(st[0]), _stat_decode(st[1])
             if mn is not None and mx is not None:
                 try:
                     cand = [
-                        v for v in vals if mn <= coerce_literal(v, mn) <= mx
+                        v for v in vals if mn <= _coerce_literal(v, mn) <= mx
                     ]
                 except TypeError:
                     cand = list(vals)  # incomparable types: can't prove absence
@@ -4706,8 +4706,8 @@ def _segments_possibly_holding_keys_distributed(
     rows, kept_unconditionally = [], []
     for s in latest["segments"]:
         st = stats.get(s, {}).get(key_col)
-        mn = stat_decode(st[0]) if st else None
-        mx = stat_decode(st[1]) if st else None
+        mn = _stat_decode(st[0]) if st else None
+        mx = _stat_decode(st[1]) if st else None
         if mn is None or mx is None:
             kept_unconditionally.append(s)  # unprovable: scan it
         else:
@@ -6497,7 +6497,7 @@ def sink_identity_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur = snapshot_read(spark, out)
     # The second commit's min id, from the LEDGER (its segment's own
     # min/max stats) — pure metadata, no job.
-    second_min = stat_decode(
+    second_min = _stat_decode(
         _read_manifest(out)[-1]["stats"]["data-1"]["row_id"][0]
     )
     return cur.agg(

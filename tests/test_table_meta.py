@@ -32,9 +32,9 @@ _DELETED = {
     "_read_keys_json", "_kek_wrap", "_kek_unwrap", "_resolve_wrap_key",
     "_check_key_fp",
     # versioned.py copies, including the keyed-read closure's own
-    "_make_crypto", "_typed", "_coerce", "_rg_keep", "_stat_decode",
-    "_coerce_literal", "_segment_may_match", "_HIVE_NULL", "_hmac_wrap",
-    "_hmac_unwrap", "_read_keys_sidecar", "_check_key_fingerprint",
+    "_make_crypto", "_typed", "_coerce", "_rg_keep", "_segment_may_match",
+    "_HIVE_NULL", "_hmac_wrap", "_hmac_unwrap", "_read_keys_sidecar",
+    "_check_key_fingerprint",
     # inline path-localizers
     "local", "_local",
 }
