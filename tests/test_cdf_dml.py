@@ -724,6 +724,23 @@ def test_signed_feed_replay_reconstructs_head_for_any_history(ops):
     replayed = v0.select("k", "v").unionByName(adds).exceptAll(removes)
     assert replayed.exceptAll(head).count() == 0
     assert head.exceptAll(replayed).count() == 0
+    # The streaming CDF reader plans the same span to the same change
+    # rows: its partitions over (0, head_v], read without a query.
+    from argodb_mapreduce_spark.sources.python_datasource import (
+        make_versioned_datasource,
+    )
+
+    ds = make_versioned_datasource()({"path": p, "readChangeFeed": "true"})
+    reader = ds.streamReader(ds.schema())
+    streamed = Counter()
+    for part in reader.partitions({"version": 0}, {"version": head_v}):
+        for batch in reader.read(part):
+            cols = batch.to_pydict()
+            streamed.update(zip(cols["k"], cols["v"], cols["_change_type"]))
+    batch_rows = Counter(
+        tuple(r) for r in feed.select("k", "v", "_change_type").collect()
+    )
+    assert streamed == batch_rows
 
 
 # session-scoped bridges: hypothesis can't take pytest fixtures directly
