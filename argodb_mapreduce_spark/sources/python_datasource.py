@@ -212,19 +212,19 @@ def make_versioned_datasource():
             self.parts = parts
 
     class CDFPartition(InputPartition):
-        """One change-feed unit: an appended file (kind='insert'), the
-        deleted positions of one file from a DV delta (kind='delete',
-        positions = sorted row indices), a dropped/removed file's live
-        rows (kind='drop', positions = masked-out prior tombstones), a
-        restore-readded file's live rows (kind='add', positions =
-        masked-out current tombstones), or un-tombstoned positions a
-        restore resurrected (kind='revive')."""
+        """One change leg of :func:`table_meta.change_legs`: a CDC
+        sidecar file (kind='cdc'), an added file's rows ('insert', or
+        'add' with its tombstones masked out), a removed file's live
+        rows ('drop'), or the rows at ``positions`` of a DV delta
+        ('delete', 'revive'). Whole-file legs read through
+        VersionedReader.read, which masks ``excluded``."""
 
-        def __init__(self, kind: str, path: str, version: int, positions=None, parts=()):
+        def __init__(self, version: int, kind: str, path: str, positions, parts):
             self.kind = kind
             self.path = path
             self.version = version
             self.positions = positions
+            self.excluded = positions if kind in ("add", "drop") else ()
             self.parts = parts
 
     def _tighten_with_parts(stats, parts):
@@ -262,13 +262,7 @@ def make_versioned_datasource():
         cmap, retired = table_meta.column_mapping(path)
         renames = {ph: l for l, ph in cmap.items() if ph != l}
         mapping_active = bool(renames or retired)
-        entries = manifest_log.read_entries(path)
-        by_version = {e["version"]: e for e in entries}
-        if version is None or version < 0:
-            version = entries[-1]["version"]
-        if version not in by_version:
-            raise ValueError(f"unknown version {version}; have {sorted(by_version)}")
-        entry = by_version[version]
+        entry = table_meta.entry_at(manifest_log.read_entries(path), version)
         seg_ledgers = entry.get("schemas", {})
         ledger_union: dict = {}
         for seg in entry["segments"]:
@@ -280,27 +274,14 @@ def make_versioned_datasource():
         )
         files, file_stats, file_parts, part_types = [], {}, {}, {}
         for seg in entry["segments"]:
-            seg_dir = _os.path.join(path, seg)
             stats = entry.get("stats", {}).get(seg) or None
-            part_cols = entry.get("partition_by", {}).get(seg) or ()
-            ledger = entry.get("schemas", {}).get(seg, {})
-            for c in part_cols:
-                part_types.setdefault(c, ledger.get(c, "string"))
-            if not part_cols:
-                for f in sorted(_os.listdir(seg_dir)):
-                    if f.endswith(".parquet"):
-                        fp = _os.path.join(seg_dir, f)
-                        files.append(fp)
-                        file_stats[fp] = stats
-                continue
-            for fp, parts in table_meta.walk_partition_files(seg_dir, part_cols):
+            for fp, parts in table_meta.segment_files(path, entry, seg):
                 files.append(fp)
-                file_parts[fp] = parts
-                pstats = _tighten_with_parts(
-                    stats,
-                    [(c, v, part_types.get(c)) for c, v in parts],
-                )
-                file_stats[fp] = pstats or None
+                file_stats[fp] = _tighten_with_parts(stats, parts) or None
+                if parts:
+                    file_parts[fp] = tuple((c, raw) for c, raw, _t in parts)
+                for c, _raw, t in parts:
+                    part_types.setdefault(c, t)
         # Merge-on-read parity with snapshot_read: the version's
         # deletion vector resolves to per-file tombstoned positions at
         # PLAN time (DVs are O(deleted rows), read with pyarrow).
@@ -533,6 +514,20 @@ def make_versioned_datasource():
                 arrays[name] = pa.nulls(n, col_types[name])
         return pa.RecordBatch.from_arrays(
             [arrays[name] for name in col_order], names=list(col_order)
+        )
+
+    def _with_change_cols(batch, change_type, version):
+        """``batch`` plus the stream's change columns: ``_change_type``
+        (one string for every row, or an Arrow array per row) and
+        ``_commit_version``."""
+        import pyarrow as pa
+
+        n = batch.num_rows
+        if isinstance(change_type, str):
+            change_type = pa.array([change_type] * n, type=pa.string())
+        return pa.RecordBatch.from_arrays(
+            [*batch.columns, change_type, pa.array([version] * n, type=pa.int64())],
+            names=[*batch.schema.names, "_change_type", "_commit_version"],
         )
 
     class VersionedReader(DataSourceReader):
@@ -1682,20 +1677,21 @@ def make_versioned_datasource():
         contract). Offsets are manifest version numbers, so progress is
         exactly-once against the same manifest the batch reader pins.
 
-        Append-only discipline: a version that REMOVES segments
-        (overwrite, rollback, vacuum-rewritten history) is a non-append
-        change and fails loud on a plain tail — the same default
-        Delta's streaming source applies — because silently re-reading
-        or skipping rewritten data corrupts downstream aggregates;
-        under ``readChangeFeed`` the same transition SYNTHESIZES
-        file-level delete/insert legs instead (r13, Delta RESTORE's
-        CDF granularity), so a subscriber that consumes changes
-        survives an overwrite or RESTORE. A DELETION-VECTOR commit
-        likewise fails by default (a subscriber that only tails
+        ``partitions`` plans with :func:`table_meta.change_legs`, the
+        planner the batch ``versioned.change_feed`` uses, and applies
+        a policy to its transition classes. Under ``readChangeFeed``
+        every leg is a partition, so a subscriber that consumes changes
+        survives UPDATE, MERGE, DELETE, overwrite and RESTORE. A plain
+        tail streams only added files. A version that removes segments
+        (overwrite, rollback, UPDATE/MERGE) is a non-append change and
+        fails loud — the same default Delta's streaming source applies —
+        because silently re-reading or skipping rewritten data corrupts
+        downstream aggregates. A retention drop or a DELETION-VECTOR
+        change likewise fails by default (a subscriber that only tails
         inserts would silently diverge from the table); passing
-        ``option("ignoreDeletes", "true")`` opts into skipping DV-only
-        commits and keeps tailing appends — exactly Delta's
-        ``ignoreDeletes`` contract.
+        ``option("ignoreDeletes", "true")`` opts into skipping them and
+        keeps tailing appends — exactly Delta's ``ignoreDeletes``
+        contract.
 
         Scale: partitions(start, end) lists only the DELTA segments'
         files (one partition per file, the batch reader's split
@@ -1800,23 +1796,9 @@ def make_versioned_datasource():
             # also recovers the floor on a replayed uncommitted batch.
             self._last_end = end["version"]
 
-        def _dv_positions(self, dv_name):
-            """(file_path, row_index) set of one DV sidecar, read with
-            pyarrow at PLAN time (DVs are O(deleted rows), tiny).
-            MEMOIZED by name — sidecars are immutable, and one planning
-            pass may consult the same DV from the dv-delta branch, the
-            restore synthesizer, and the append-leg mask."""
-            cache = self.__dict__.setdefault("_dv_pos_cache", {})
-            if dv_name not in cache:
-                cache[dv_name] = {
-                    (fp, ri)
-                    for fp, ris in table_meta.dv_positions(self._path, dv_name).items()
-                    for ri in ris
-                }
-            return cache[dv_name]
-
         def partitions(self, start, end):
-            entries = {e["version"]: e for e in self._entries()}
+            entries = self._entries()
+            versions = {e["version"] for e in entries}
             lo, hi = start["version"], end["version"]
             if hi < lo:
                 # Reachable two ways, both option misuse: fail-stop
@@ -1837,8 +1819,8 @@ def make_versioned_datasource():
                 )
             if self._last_end is None or hi > self._last_end:
                 self._last_end = hi  # authoritative floor for the rate clamp
-            if lo >= 0 and lo not in entries:
-                oldest = min(entries)
+            if lo >= 0 and lo not in versions:
+                oldest = min(versions)
                 if self._start_version is not None and lo == self._start_version - 1:
                     # Not a checkpoint problem: the option points below
                     # the retained horizon. Version N's delta is
@@ -1859,435 +1841,118 @@ def make_versioned_datasource():
                     "already-consumed data — reset the checkpoint or raise "
                     "vacuum retention"
                 )
-            prev = set(entries[lo]["segments"]) if lo in entries else set()
-            prev_dv = entries[lo].get("dv") if lo in entries else None
-            prev_entry = entries.get(lo)
-            parts = []
-            for v in sorted(v for v in entries if lo < v <= hi):
-                segs = set(entries[v]["segments"])
-                if entries[v].get("data_change") is False:
-                    # Maintenance rewrite (compact / bin-pack / z-order):
-                    # bytes moved, live rows identical — contribute ZERO
-                    # partitions and advance the diff base, Delta's
-                    # OPTIMIZE-under-CDF skip. Applies to the plain
-                    # append-tail stream too: re-emitting a compacted
-                    # segment would duplicate every row it absorbed.
-                    prev = segs
-                    prev_dv = entries[v].get("dv")
-                    prev_entry = entries[v]
-                    continue
-                removed = prev - segs
-                if removed and entries[v].get("cdc") and self._cdf:
-                    # UPDATE/MERGE with a CDC sidecar (CDF-enabled
-                    # table): the change rows live ENTIRELY in the
-                    # cdc-{v} dir the commit wrote — update_preimage /
-                    # update_postimage / insert legs with the row's own
-                    # _change_type column. The rewritten segment must
-                    # NOT be re-emitted (its rows are mostly unchanged
-                    # carry-over), and the commit never ADDS deletion-
-                    # vector entries (it materializes or carries them),
-                    # so the sidecar is the whole delta: O(changed
-                    # rows), the same contract as the batch change_feed.
-                    cdc_dir = _os.path.join(self._path, entries[v]["cdc"])
-                    for f in sorted(_os.listdir(cdc_dir)):
-                        if f.endswith(".parquet"):
-                            parts.append(
-                                CDFPartition("cdc", _os.path.join(cdc_dir, f), v)
-                            )
-                    prev = segs
-                    prev_dv = entries[v].get("dv")
-                    prev_entry = entries[v]
-                    continue
-                if removed and entries[v].get("deleted_where"):
-                    # RETENTION DROP (r12): DELETE removed whole
-                    # segments from the manifest. CDF emits each
-                    # dropped file's LIVE rows (previous DV masked out)
-                    # as delete legs; ignoreDeletes skips the commit;
-                    # a plain tail still fails loud.
-                    if self._cdf:
-                        import glob as _glob2
-
-                        excl = {}
-                        for fp, ri in self._dv_positions(prev_dv):
-                            excl.setdefault(fp, []).append(ri)
-                        for seg in sorted(removed):
-                            seg_dir = _os.path.join(self._path, seg)
-                            for fp in sorted(
-                                _glob2.glob(
-                                    _os.path.join(seg_dir, "**", "*.parquet"),
-                                    recursive=True,
-                                )
-                            ):
-                                parts.append(
-                                    CDFPartition(
-                                        "drop",
-                                        fp,
-                                        v,
-                                        tuple(sorted(excl.get(fp, ()))),
-                                        parts=self._parts_of_file(prev_entry, fp),
-                                    )
-                                )
-                    elif not self._ignore_deletes:
-                        raise ValueError(
-                            f"retention DROP at version {v} (segments "
-                            f"removed: {sorted(removed)}); pass "
-                            "option('ignoreDeletes', 'true') to skip "
-                            "delete commits deliberately, or "
-                            "option('readChangeFeed', 'true') to consume "
-                            "the dropped rows as change rows"
-                        )
-                    # fall through: a drop commit may ALSO carry a new
-                    # DV (partial segments) — the dv-delta block below
-                    # handles it; carried-by-reference DVs are equal and
-                    # contribute nothing. No new segments can appear.
-                    removed = set()
-                if (
-                    # Removed segments, OR a SUPERSET restore (r14): a
-                    # rollback past a retention delete onto a DV-carrying
-                    # version re-ADDS segments with removed == ∅ but a
-                    # changed DV. Without synthesis those re-added files
-                    # would fall through to the plain append block as
-                    # whole-file insert legs UNMASKED by the restored
-                    # version's DV, while the dv-delta block emits the
-                    # same positions as delete legs — with the
-                    # deletes-first replay order the replica re-inserts
-                    # tombstoned rows. The synthesizer's 'add' leg masks
-                    # by the current DV, matching the batch path.
-                    (
-                        removed
-                        or ((segs - prev) and entries[v].get("dv") != prev_dv)
-                    )
-                    and self._cdf
-                ):
-                    # OVERWRITE / RESTORE under readChangeFeed (r13):
-                    # synthesize file-level legs from the segment diff —
-                    # Delta RESTORE's CDF granularity — so the one
-                    # remaining maintenance action that killed a live
-                    # CDC subscriber no longer does. Removed segments'
-                    # files emit their live rows (prev DV masked) as
-                    # delete legs; added segments' files their live rows
-                    # (the restored version's DV masked) as insert legs;
-                    # segments on BOTH sides contribute only their DV
-                    # delta — new tombstones as positional deletes,
-                    # un-tombstoned positions (resurrection) as
-                    # positional inserts. As of r14 UPDATE/MERGE
-                    # committed WITHOUT a CDC sidecar synthesizes the
-                    # same legs from its rewritten-segment diff
-                    # (unchanged rows in rewritten files emit a net-zero
-                    # drop+add pair under keyed replay; updated rows
-                    # emit (-old, +new)) — the sidecar branch above
-                    # stays the O(changed rows) fast path when CDF was
-                    # enabled before the DML.
-                    import glob as _glob3
-
-                    prev_pos = self._dv_positions(prev_dv)
-                    cur_pos = self._dv_positions(entries[v].get("dv"))
-
-                    def _by_file(positions):
-                        d: dict = {}
-                        for fp, ri in positions:
-                            d.setdefault(fp, []).append(ri)
-                        return d
-
-                    prev_by, cur_by = _by_file(prev_pos), _by_file(cur_pos)
-                    for kind, seg_set, entry_of, excl in (
-                        ("drop", removed, prev_entry, prev_by),
-                        ("add", segs - prev, entries[v], cur_by),
-                    ):
-                        for seg in sorted(seg_set):
-                            seg_dir = _os.path.join(self._path, seg)
-                            for fp in sorted(
-                                _glob3.glob(
-                                    _os.path.join(seg_dir, "**", "*.parquet"),
-                                    recursive=True,
-                                )
-                            ):
-                                parts.append(
-                                    CDFPartition(
-                                        kind,
-                                        fp,
-                                        v,
-                                        tuple(sorted(excl.get(fp, ()))),
-                                        parts=self._parts_of_file(entry_of, fp),
-                                    )
-                                )
-                    shared_roots = tuple(
-                        _os.path.join(_os.path.abspath(self._path), s) + _os.sep
-                        for s in (segs & prev)
-                    )
-                    for kind, delta, entry_of in (
-                        ("delete", cur_pos - prev_pos, entries[v]),
-                        ("revive", prev_pos - cur_pos, prev_entry),
-                    ):
-                        per: dict = {}
-                        for fp, ri in delta:
-                            # Removed/added files were fully accounted
-                            # above — only SHARED-segment positions are
-                            # a genuine delta.
-                            if fp.startswith(shared_roots):
-                                per.setdefault(fp, []).append(ri)
-                        for fp in sorted(per):
-                            parts.append(
-                                CDFPartition(
-                                    kind,
-                                    fp,
-                                    v,
-                                    tuple(sorted(per[fp])),
-                                    parts=self._parts_of_file(entry_of, fp),
-                                )
-                            )
-                    prev = segs
-                    prev_dv = entries[v].get("dv")
-                    prev_entry = entries[v]
-                    continue
-                if removed:
+            legs, transitions = table_meta.change_legs(self._path, entries, lo, hi)
+            if self._cdf:
+                return [CDFPartition(*leg) for leg in legs]
+            # Plain tail: only appends stream. Deletes fail loud unless
+            # ignoreDeletes skips them, other rewrites always fail.
+            for v, cls, removed in transitions:
+                if cls in ("cdc", "rewrite"):
                     raise ValueError(
                         f"non-append change at version {v} (segments removed: "
-                        f"{sorted(removed)}); the versioned stream supports "
+                        f"{removed}); the versioned stream supports "
                         "append-only history — every transition (UPDATE/"
                         "MERGE/DELETE/RESTORE) is streamable via "
                         "option('readChangeFeed', 'true')"
                     )
-                if entries[v].get("dv") != prev_dv:
-                    if self._cdf:
-                        # CDF: the DV DELTA becomes delete rows — one
-                        # partition per touched file with its positions.
-                        old = self._dv_positions(prev_dv)
-                        new = self._dv_positions(entries[v].get("dv"))
-                        per_file: dict = {}
-                        for fp, ri in new - old:
-                            per_file.setdefault(fp, []).append(ri)
-                        for fp in sorted(per_file):
-                            parts.append(
-                                CDFPartition(
-                                    "delete",
-                                    fp,
-                                    v,
-                                    tuple(sorted(per_file[fp])),
-                                    parts=self._parts_of_file(entries[v], fp),
-                                )
-                            )
-                        # RESURRECTION (r13): a same-segment-list RESTORE
-                        # past a DELETE retracts tombstones — positions in
-                        # the OLD DV but not the new one re-emit as insert
-                        # legs, bounded to files the new version still
-                        # references (a retention drop's vanished files
-                        # were already emitted as drop legs).
-                        live_roots = tuple(
-                            _os.path.join(_os.path.abspath(self._path), s)
-                            + _os.sep
-                            for s in segs
-                        )
-                        revived: dict = {}
-                        for fp, ri in old - new:
-                            if fp.startswith(live_roots):
-                                revived.setdefault(fp, []).append(ri)
-                        for fp in sorted(revived):
-                            parts.append(
-                                CDFPartition(
-                                    "revive",
-                                    fp,
-                                    v,
-                                    tuple(sorted(revived[fp])),
-                                    parts=self._parts_of_file(entries[v], fp),
-                                )
-                            )
-                    elif not self._ignore_deletes:
-                        raise ValueError(
-                            f"deletion-vector change at version {v}; an "
-                            "insert-tailing subscriber would diverge from the "
-                            "table — pass option('ignoreDeletes', 'true') to "
-                            "skip delete commits deliberately, or "
-                            "option('readChangeFeed', 'true') to consume "
-                            "them as change rows"
-                        )
-                # Lazily-grouped current-DV positions for the CDF insert
-                # mask below: a SUPERSET restore whose DV is carried BY
-                # NAME (pure retention drop, then rollback past it)
-                # re-adds segments whose files still hold tombstones in
-                # the unchanged DV — their insert legs must be masked or
-                # the replica re-inserts dead rows. A plain append's
-                # fresh files can never appear in a pre-existing DV, so
-                # its mask is always empty (and the DV read memoizes).
-                cur_dv_by = None
-                for seg in sorted(segs - prev):
-                    seg_dir = _os.path.join(self._path, seg)
-                    part_cols = entries[v].get("partition_by", {}).get(seg) or ()
-                    ledger = entries[v].get("schemas", {}).get(seg, {})
-                    seg_stats = entries[v].get("stats", {}).get(seg)
-                    if self._prune and not table_meta.stats_may_match(
-                        seg_stats, self._prune
-                    ):
-                        continue  # whole new segment provably excluded
-                    if part_cols:
-                        # Partitioned append: walk the col=value branches
-                        # and attach the decoded values + ledger types to
-                        # each file split (NULL sentinel -> None).
-                        listed = [
-                            (
-                                fp,
-                                tuple(
-                                    (c, raw, ledger.get(c, "string"))
-                                    for c, raw in pp
-                                ),
-                            )
-                            for fp, pp in table_meta.walk_partition_files(seg_dir, part_cols)
-                        ]
-                    else:
-                        listed = [
-                            (_os.path.join(seg_dir, f), ())
-                            for f in sorted(_os.listdir(seg_dir))
-                            if f.endswith(".parquet")
-                        ]
-                    for fp, pp in listed:
-                        if self._prune and pp:
-                            # File-precise partition-value skip.
-                            if not table_meta.stats_may_match(
-                                _tighten_with_parts(seg_stats, pp), self._prune
-                            ):
-                                continue
-                        if not self._cdf:
-                            parts.append(SegmentFilePartition(fp, parts=pp))
-                            continue
-                        excl = ()
-                        if entries[v].get("dv"):
-                            if cur_dv_by is None:
-                                cur_dv_by = {}
-                                for dfp, ri in self._dv_positions(
-                                    entries[v]["dv"]
-                                ):
-                                    cur_dv_by.setdefault(dfp, []).append(ri)
-                            excl = tuple(sorted(cur_dv_by.get(fp, ())))
-                        parts.append(
-                            # 'add' = live rows only (tombstones masked);
-                            # surfaces as _change_type 'insert' either way.
-                            CDFPartition("add", fp, v, excl, parts=pp)
-                            if excl
-                            else CDFPartition("insert", fp, v, parts=pp)
-                        )
-                prev = segs
-                prev_dv = entries[v].get("dv")
-                prev_entry = entries[v]
-            return parts
-
-        def _parts_of_file(self, entry, fp):
-            """((col, raw, type), ...) for a DV-referenced file of
-            ``entry``; () for flat files or no entry."""
-            return table_meta.parts_of_file(self._path, entry, fp) if entry else ()
+                if cls == "retention" and not self._ignore_deletes:
+                    raise ValueError(
+                        f"retention DROP at version {v} (segments "
+                        f"removed: {removed}); pass "
+                        "option('ignoreDeletes', 'true') to skip "
+                        "delete commits deliberately, or "
+                        "option('readChangeFeed', 'true') to consume "
+                        "the dropped rows as change rows"
+                    )
+                if cls == "dv" and not self._ignore_deletes:
+                    raise ValueError(
+                        f"deletion-vector change at version {v}; an "
+                        "insert-tailing subscriber would diverge from the "
+                        "table — pass option('ignoreDeletes', 'true') to "
+                        "skip delete commits deliberately, or "
+                        "option('readChangeFeed', 'true') to consume "
+                        "them as change rows"
+                    )
+            stats = {e["version"]: e.get("stats", {}) for e in entries}
+            return [
+                SegmentFilePartition(fp, pos, parts)
+                for v, kind, fp, pos, parts in legs
+                if kind in ("insert", "add")
+                # Selective subscriber: files whose segment stats or
+                # partition values exclude the predicates never plan.
+                and table_meta.stats_may_match(
+                    _tighten_with_parts(
+                        stats[v].get(table_meta.segment_of(self._path, fp)), parts
+                    ),
+                    self._prune,
+                )
+            ]
 
         def read(self, partition):
-            if not isinstance(partition, CDFPartition):
-                # Same Arrow-batch file reader as the batch path; the
-                # plan-order emit appends partition values for splits
-                # from partitioned segments (no-op for flat files
-                # already in plan order).
-                return VersionedReader(
-                    [], {}, self._prune, {},
-                    col_order=(
-                        self._base_cols
-                        if (self._base_cols or not self._mapping_active)
-                        else None
-                    ),
-                    col_types=self._base_types,
-                    renames=self._renames,
-                    encryption_key=self._enc_key,
-                ).read(partition)
-            return self._read_cdf(partition)
+            kind = getattr(partition, "kind", None)
+            if kind in ("cdc", "delete", "revive"):
+                return self._read_cdf(partition)
+            # Same Arrow-batch file reader as the batch path; the
+            # plan-order emit appends partition values for splits from
+            # partitioned segments (no-op for flat files already in plan
+            # order) and masks the partition's excluded positions.
+            batches = VersionedReader(
+                [], {}, self._prune, {},
+                col_order=(
+                    self._base_cols
+                    if (self._base_cols or not self._mapping_active)
+                    else None
+                ),
+                col_types=self._base_types,
+                renames=self._renames,
+                encryption_key=self._enc_key,
+            ).read(partition)
+            if kind is None:
+                return batches
+            change_type = table_meta.CHANGE_TYPE[kind]
+            return (
+                _with_change_cols(b, change_type, partition.version)
+                for b in batches
+            )
 
         def _read_cdf(self, partition):
             import pyarrow as pa
             import pyarrow.parquet as pq
 
-            def tag(batch):
-                # Partition append + plan ordering BEFORE the CDF tag
-                # columns, so flat and partitioned change rows align.
-                # kind 'drop' (a retention-dropped/restore-removed
-                # file's live rows) surfaces as Delta's 'delete' row
-                # type; 'add' (a restore-readded file's live rows) and
-                # 'revive' (un-tombstoned positions) as 'insert'.
-                ct = {"drop": "delete", "add": "insert", "revive": "insert"}.get(
-                    partition.kind, partition.kind
-                )
-                batch = _emit_batch(
-                    batch, partition.parts, self._base_cols, self._base_types,
-                    self._renames,
-                )
-                n = batch.num_rows
-                cols = list(batch.columns) + [
-                    pa.array([ct] * n, type=pa.string()),
-                    pa.array([partition.version] * n, type=pa.int64()),
-                ]
-                names = list(batch.schema.names) + ["_change_type", "_commit_version"]
-                return pa.RecordBatch.from_arrays(cols, names=names)
-
+            dec = None
             if self._enc_key:
                 dec, _factory = table_meta.decryption_properties(self._enc_key)
-                pf = pq.ParquetFile(partition.path, decryption_properties=dec)
-            else:
-                dec = None
-                pf = pq.ParquetFile(partition.path)
-            target = _us_schema(pf.schema_arrow)
             if partition.kind == "cdc":
                 # Sidecar rows carry their OWN _change_type (a cdc file
                 # mixes preimage/postimage/insert legs); split it off,
                 # align the base columns to plan order, re-attach.
+                pf = pq.ParquetFile(partition.path, decryption_properties=dec)
                 for batch in _cast_batches_to_us(pf):
-                    idx = batch.schema.get_field_index("_change_type")
-                    ct = batch.column(idx)
                     base = batch.select(
                         [n for n in batch.schema.names if n != "_change_type"]
                     )
-                    emitted = _emit_batch(
-                        base, partition.parts, self._base_cols, self._base_types,
-                        self._renames,
-                    )
-                    cols = list(emitted.columns) + [
-                        ct,
-                        pa.array(
-                            [partition.version] * emitted.num_rows, type=pa.int64()
+                    yield _with_change_cols(
+                        _emit_batch(
+                            base, partition.parts, self._base_cols,
+                            self._base_types, self._renames,
                         ),
-                    ]
-                    names = list(emitted.schema.names) + [
-                        "_change_type",
-                        "_commit_version",
-                    ]
-                    yield pa.RecordBatch.from_arrays(cols, names=names)
+                        batch.column("_change_type"),
+                        partition.version,
+                    )
                 return
-            if partition.kind in ("drop", "add"):
-                # Whole-file legs: every LIVE row of a retention-dropped
-                # / restore-removed file ('drop' → delete legs, the
-                # PREVIOUS version's DV positions mask out — they were
-                # already emitted as delete legs by their own commit) or
-                # of a restore-READDED file ('add' → insert legs, the
-                # restored version's own DV masks out).
-                import numpy as np
-
-                excl = np.asarray(partition.positions or (), dtype=np.int64)
-                off = 0
-                for batch in _cast_batches_to_us(pf):
-                    n = batch.num_rows
-                    b = batch
-                    if excl.size:
-                        lo_i = np.searchsorted(excl, off, side="left")
-                        hi_i = np.searchsorted(excl, off + n, side="left")
-                        if hi_i > lo_i:
-                            mask = np.ones(n, dtype=bool)
-                            mask[excl[lo_i:hi_i] - off] = False
-                            b = batch.filter(pa.array(mask)) if mask.any() else None
-                    off += n
-                    if b is not None and b.num_rows:
-                        yield tag(b)
-                return
-            if partition.kind == "insert":
-                for batch in _cast_batches_to_us(pf):
-                    yield tag(batch)
-            else:  # delete/revive: materialize the listed positions
-                t = pq.read_table(
-                    partition.path, decryption_properties=dec
-                ).cast(target, safe=False)
-                t = t.take(pa.array(list(partition.positions), type=pa.int64()))
-                for batch in t.combine_chunks().to_batches():
-                    yield tag(batch)
+            # delete/revive: materialize exactly the listed positions.
+            t = pq.read_table(partition.path, decryption_properties=dec)
+            t = t.cast(_us_schema(t.schema), safe=False)
+            t = t.take(pa.array(list(partition.positions), type=pa.int64()))
+            for batch in t.combine_chunks().to_batches():
+                yield _with_change_cols(
+                    _emit_batch(
+                        batch, partition.parts, self._base_cols,
+                        self._base_types, self._renames,
+                    ),
+                    table_meta.CHANGE_TYPE[partition.kind],
+                    partition.version,
+                )
 
         # NOTE: commit(end) is defined next to latestOffset above — it
         # feeds the rate-clamp floor; offsets themselves live in the
@@ -3842,7 +3507,6 @@ def _cdf_update_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
     from argodb_mapreduce_spark.catalog import fixture_stale, load_table, table_path
     from argodb_mapreduce_spark.sources.versioned import (
         MANIFEST,
-        _read_manifest,
         enable_change_data_feed,
         update_where,
         versioned_write,
@@ -3857,7 +3521,7 @@ def _cdf_update_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
     if (
         not fixture_stale(src, os.path.join(out, MANIFEST))
         and len(versions(out)) == 2
-        and _read_manifest(out)[-1].get("cdc")
+        and os.path.isdir(os.path.join(out, "cdc-1"))
     ):
         return out
     import shutil

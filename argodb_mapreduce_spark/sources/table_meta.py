@@ -12,7 +12,15 @@ ArgodbMapreduceRecordReader.java:172-198).
   :func:`parts_of_file`: directory branch to typed partition value.
 * **Paths and deletion vectors.** :func:`local_path` turns a
   ``_metadata.file_path`` into a filesystem path; :func:`dv_positions`
-  reads a DV sidecar with pyarrow.
+  reads a DV sidecar with pyarrow; :func:`segment_files` lists a
+  segment's files with their partition values.
+* **Versions and the change feed.** :func:`entry_at` resolves a version
+  (or the head) to its manifest entry. :func:`change_legs` is the one
+  change-feed planner: it classifies each version's transition and
+  lists its change legs, which the batch ``versioned.change_feed`` turns
+  into Spark frames and the streaming CDF reader into partitions
+  (ArgodbMapreduceInputFormat.java:104-199 plans, the record reader
+  reads).
 * **Sidecars.** :func:`read_properties`, :func:`column_mapping` and
   :func:`read_keys_sidecar`.
 * **Key kit.** :func:`key_fingerprint`, the HMAC envelope
@@ -56,17 +64,25 @@ _EXCLUDES = {
 PRUNE_OPS = tuple(_EXCLUDES)
 
 
+def _naive_utc(v):
+    if isinstance(v, _dt.datetime) and v.tzinfo is not None:
+        return v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    return v
+
+
 def stat_decode(v):
     """A manifest stat value (tagged dict for dates and timestamps) as a
     Python value; untagged values (and parquet footer stats) pass
-    through unchanged."""
+    through unchanged, except that a tz-aware timestamp (pyarrow's
+    footer stats of a UTC-adjusted column) becomes naive UTC, the form
+    manifest stats and pruning literals take."""
     if isinstance(v, dict):
         if v["t"] == "ts":
             return _dt.datetime.fromisoformat(v["v"])
         if v["t"] == "date":
             return _dt.date.fromisoformat(v["v"])
         raise ValueError(f"unknown stat tag {v['t']!r}")
-    return v
+    return _naive_utc(v)
 
 
 def coerce_literal(lit, stat_sample):
@@ -80,9 +96,7 @@ def coerce_literal(lit, stat_sample):
         lit = _dt.datetime(lit.year, lit.month, lit.day)
     elif type(stat_sample) is _dt.date and isinstance(lit, str):
         lit = _dt.date.fromisoformat(lit)
-    if isinstance(lit, _dt.datetime) and lit.tzinfo is not None:
-        lit = lit.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-    return lit
+    return _naive_utc(lit)
 
 
 def check_ops(predicates) -> None:
@@ -268,6 +282,148 @@ def dv_positions(path: str, dv_name: str) -> dict:
         ):
             per_file.setdefault(local_path(fp), set()).add(ri)
     return {fp: tuple(sorted(s)) for fp, s in per_file.items()}
+
+
+def segment_files(path: str, entry: dict, seg: str) -> list:
+    """[(absolute file path, ((col, raw_or_None, ledger type), ...)),
+    ...] for one segment of ``entry``, sorted: a flat segment's parquet
+    files with (), a Hive-partitioned segment's files with the decoded
+    values of their directory branch."""
+    seg_dir = os.path.join(os.path.abspath(path), seg)
+    cols = entry.get("partition_by", {}).get(seg) or ()
+    if not cols:
+        return [
+            (os.path.join(seg_dir, f), ())
+            for f in sorted(os.listdir(seg_dir))
+            if f.endswith(".parquet")
+        ]
+    types = entry.get("schemas", {}).get(seg, {})
+    return [
+        (fp, tuple((c, raw, types.get(c, "string")) for c, raw in parts))
+        for fp, parts in walk_partition_files(seg_dir, cols)
+    ]
+
+
+def segment_of(path: str, fp: str) -> str:
+    """The segment that holds an absolute file path of the table."""
+    return os.path.relpath(fp, os.path.abspath(path)).split(os.sep)[0]
+
+
+# ---------------------------------------------------------------------------
+# Versions and change legs
+# ---------------------------------------------------------------------------
+
+
+def entry_at(entries, version=None, unknown="unknown version {version}; have {have}"):
+    """The manifest entry of ``version``; None or a negative version is
+    the head. Any other version the manifest does not hold raises
+    ``ValueError`` with ``unknown`` formatted with the version and the
+    retained ones."""
+    if version is None or version < 0:
+        return entries[-1]
+    for e in entries:
+        if e["version"] == version:
+            return e
+    have = sorted(e["version"] for e in entries)
+    raise ValueError(unknown.format(version=version, have=have))
+
+
+#: The ``_change_type`` each leg kind surfaces as (``cdc`` legs carry
+#: their own per row).
+CHANGE_TYPE = {
+    "insert": "insert", "add": "insert", "revive": "insert",
+    "drop": "delete", "delete": "delete",
+}
+
+
+def change_legs(path: str, entries, lo: int, hi: int):
+    """The change feed of versions ``(lo, hi]`` as ``(legs,
+    transitions)``, planned from the manifest and the deletion-vector
+    sidecars alone (each read once, with pyarrow); no data file is
+    opened.
+
+    ``transitions`` holds ``(version, class, removed segments)`` per
+    version, the class one of ``maintenance`` (``data_change: false``:
+    compaction, bin-pack, z-order; no legs, Delta's OPTIMIZE-under-CDF
+    skip — re-emitting a compacted segment would duplicate every row it
+    absorbed), ``cdc`` (UPDATE/MERGE on a CDF table: the commit adds no
+    tombstones, so its sidecar is the whole delta and the rewritten
+    segments are not read), ``retention`` (a DELETE that dropped whole
+    segments), ``rewrite`` (any other removal: overwrite, restore,
+    UPDATE/MERGE without a sidecar), ``dv`` (the deletion vector
+    changed, nothing removed) or ``append``.
+
+    ``legs`` holds ``(version, kind, file, positions, parts)`` with
+    ``parts`` the file's ((col, raw, type), ...) partition values:
+
+    * ``cdc``: one sidecar file; its rows carry their own change type;
+    * ``insert``/``add``: a file of an added segment; ``add`` masks out
+      ``positions``, the tombstones the new version's DV already holds
+      for it (a restore re-adding a segment);
+    * ``drop``: a file of a removed segment; its live rows, the
+      previous version's tombstones masked out, are deletes;
+    * ``delete``/``revive``: the rows at ``positions`` newly tombstoned
+      or un-tombstoned (a restore past a DELETE) in a segment on both
+      sides; added and removed files are accounted whole above.
+
+    This is Delta RESTORE's file-granularity contract for every
+    transition without a sidecar: a row in both a removed and an added
+    file emits a delete and an insert (net zero under replay)."""
+    abs_path = os.path.abspath(path)
+    dvs: dict = {}
+
+    def positions(dv_name):
+        if dv_name not in dvs:
+            dvs[dv_name] = dv_positions(path, dv_name)
+        return dvs[dv_name]
+
+    legs, transitions = [], []
+    for prev, cur in zip([None, *entries], entries):
+        v = cur["version"]
+        if not lo < v <= hi:
+            continue
+        before = set(prev["segments"]) if prev else set()
+        after = set(cur["segments"])
+        removed, added = sorted(before - after), sorted(after - before)
+        dv0, dv1 = (prev or {}).get("dv"), cur.get("dv")
+        if cur.get("data_change") is False:
+            cls = "maintenance"
+        elif removed and cur.get("cdc"):
+            cls = "cdc"
+        elif removed:
+            cls = "retention" if "deleted_where" in cur else "rewrite"
+        else:
+            cls = "dv" if dv1 != dv0 else "append"
+        transitions.append((v, cls, removed))
+        if cls == "maintenance":
+            continue
+        if cls == "cdc":
+            cdc_dir = os.path.join(abs_path, cur["cdc"])
+            legs += [
+                (v, "cdc", os.path.join(cdc_dir, f), (), ())
+                for f in sorted(os.listdir(cdc_dir))
+                if f.endswith(".parquet")
+            ]
+            continue
+        old, new = positions(dv0), positions(dv1)
+        for seg in removed:
+            legs += [
+                (v, "drop", fp, old.get(fp, ()), parts)
+                for fp, parts in segment_files(path, prev, seg)
+            ]
+        for seg in added:
+            for fp, parts in segment_files(path, cur, seg):
+                pos = new.get(fp, ())
+                legs.append((v, "add" if pos else "insert", fp, pos, parts))
+        if dv1 == dv0:
+            continue
+        roots = tuple(os.path.join(abs_path, s) + os.sep for s in before & after)
+        for kind, a, b, entry in (("delete", new, old, cur), ("revive", old, new, prev)):
+            for fp in sorted(a):
+                delta = tuple(sorted(set(a[fp]) - set(b.get(fp, ()))))
+                if delta and fp.startswith(roots):
+                    legs.append((v, kind, fp, delta, parts_of_file(path, entry, fp)))
+    return legs, transitions
 
 
 def _read_json(path: str, name: str):

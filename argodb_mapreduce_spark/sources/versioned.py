@@ -124,7 +124,7 @@ def _stat_encode(v):
     return None
 
 
-def _segment_stats_and_metrics(seg_path: str) -> tuple[dict, dict]:
+def _segment_stats_and_metrics(seg_path: str, exclude=()) -> tuple[dict, dict]:
     """(min/max stats, operationMetrics) in ONE footer pass — a
     many-file segment (the small-file ingest shape) must not pay the
     footer I/O twice per commit.
@@ -133,9 +133,17 @@ def _segment_stats_and_metrics(seg_path: str) -> tuple[dict, dict]:
     binary) are simply absent — absent stats disable pruning for that
     column, never correctness. Mirrors how Iceberg builds its manifest
     ``lower_bounds``/``upper_bounds`` from file metadata at commit time.
-    """
+
+    ``exclude`` is a COLUMN-encrypted segment's encrypted top-level
+    column set (r14). Their chunk metadata is a hard process ABORT in
+    parquet-cpp without the key, so the harvested column indices come
+    from the plaintext footer schema BEFORE any ColumnChunkMetaData is
+    built, matched on the leaf's PATH (a schema ``.name`` is the bare
+    leaf, 'x' for 's.x'). Encrypted columns get no manifest stats by
+    design — their min/max would leak value ranges."""
     import pyarrow.parquet as pq
 
+    exclude = set(exclude)
     lo: dict[str, object] = {}
     hi: dict[str, object] = {}
     dropped: set[str] = set()
@@ -152,14 +160,18 @@ def _segment_stats_and_metrics(seg_path: str) -> tuple[dict, dict]:
         n_files += 1
         n_rows += md.num_rows
         n_bytes += os.path.getsize(f)
+        paths = [md.schema.column(i).path for i in range(md.num_columns)]
+        # Nested leaves (dotted paths) get no stats.
+        cols = [
+            (i, name) for i, name in enumerate(paths)
+            if "." not in name and name not in exclude
+        ]
         for rg in range(md.num_row_groups):
             grp = md.row_group(rg)
-            for ci in range(grp.num_columns):
-                col = grp.column(ci)
-                name = col.path_in_schema
-                if name in dropped or "." in name:  # nested leaves: skip
+            for ci, name in cols:
+                if name in dropped:
                     continue
-                st = col.statistics
+                st = grp.column(ci).statistics
                 mn = _stat_encode(st.min) if st is not None and st.has_min_max else None
                 mx = _stat_encode(st.max) if st is not None and st.has_min_max else None
                 if mn is None or mx is None:
@@ -180,20 +192,12 @@ def _segment_stats_and_metrics(seg_path: str) -> tuple[dict, dict]:
     )
 
 
-def _segment_file_metrics(seg_path: str) -> dict:
-    """Delta ``operationMetrics``-style write accounting for one
-    segment — file count, row count, bytes — footer metadata only,
-    shared single pass with the stats harvest."""
-    return _segment_stats_and_metrics(seg_path)[1]
-
-
 def _segment_file_metrics_keyless(seg_path: str) -> dict:
-    """The metrics subset that is safe on parquet-modular-ENCRYPTED
-    segments: file-level ``num_rows`` and the filesystem size only.
-    ``_segment_stats_and_metrics`` walks row-group COLUMN metadata,
-    which parquet-cpp refuses keyless with a hard process ABORT (not a
-    catchable exception) — this helper never descends below the file
-    footer's plaintext header fields."""
+    """Delta ``operationMetrics``-style accounting for one segment —
+    file count, row count, bytes — from file-level footer fields only,
+    so it is safe on parquet-modular-ENCRYPTED segments: it never
+    descends to row-group COLUMN metadata, which parquet-cpp refuses
+    keyless with a hard process ABORT (not a catchable exception)."""
     import pyarrow.parquet as pq
 
     n_files = n_rows = n_bytes = 0
@@ -204,63 +208,6 @@ def _segment_file_metrics_keyless(seg_path: str) -> dict:
         n_rows += pq.ParquetFile(f).metadata.num_rows
         n_bytes += os.path.getsize(f)
     return {"num_files": n_files, "num_rows": n_rows, "bytes": n_bytes}
-
-
-def _segment_stats_plaintext(seg_path: str, exclude=()) -> dict[str, list]:
-    """Min/max harvest restricted to plaintext columns — the safe
-    subset on a COLUMN-encrypted segment (r14): plaintext columns'
-    chunk metadata is keyless-readable, encrypted columns' is a hard
-    process ABORT in parquet-cpp, so the column INDEX set is decided
-    from the (plaintext) footer schema BEFORE any ColumnChunkMetaData
-    object is constructed. ``exclude`` is the encrypted TOP-LEVEL
-    column set; matching is on the leaf's dotted PATH (schema
-    ``.name`` is the bare leaf — 'x' for 's.x' — which would let a
-    nested encrypted leaf through and abort the process). Encrypted
-    columns get no manifest stats by design — their min/max would
-    leak value ranges."""
-    import pyarrow.parquet as pq
-
-    exclude = set(exclude)
-    lo: dict[str, object] = {}
-    hi: dict[str, object] = {}
-    dropped: set[str] = set()
-    for f in sorted(
-        _glob.glob(os.path.join(seg_path, "**", "*.parquet"), recursive=True)
-    ):
-        md = pq.ParquetFile(f).metadata
-        safe_idx = [
-            (i, md.schema.column(i).path)
-            for i in range(md.num_columns)
-            if md.schema.column(i).path.split(".")[0] not in exclude
-            and "." not in md.schema.column(i).path  # nested leaves: skip
-        ]
-        for rg in range(md.num_row_groups):
-            grp = md.row_group(rg)
-            for ci, name in safe_idx:
-                if name in dropped:
-                    continue
-                st = grp.column(ci).statistics
-                mn = (
-                    _stat_encode(st.min)
-                    if st is not None and st.has_min_max
-                    else None
-                )
-                mx = (
-                    _stat_encode(st.max)
-                    if st is not None and st.has_min_max
-                    else None
-                )
-                if mn is None or mx is None:
-                    dropped.add(name)
-                    lo.pop(name, None)
-                    hi.pop(name, None)
-                    continue
-                dmn, dmx = _stat_decode(mn), _stat_decode(mx)
-                if name not in lo or dmn < _stat_decode(lo[name]):
-                    lo[name] = mn
-                if name not in hi or dmx > _stat_decode(hi[name]):
-                    hi[name] = mx
-    return {name: [lo[name], hi[name]] for name in lo}
 
 
 #: Partition-column types whose directory-name form decodes losslessly
@@ -305,11 +252,10 @@ def _harvest_segment(
     touching an encrypted column's chunk metadata without keys
     hard-aborts parquet-cpp. ``types`` maps the ``partition_by`` columns
     to their ledger types."""
-    if not encrypted:
-        stats, metrics = _segment_stats_and_metrics(seg_path)
+    if encrypted and not enc_cols:
+        stats, metrics = None, _segment_file_metrics_keyless(seg_path)
     else:
-        stats = _segment_stats_plaintext(seg_path, exclude=enc_cols) if enc_cols else None
-        metrics = _segment_file_metrics_keyless(seg_path)
+        stats, metrics = _segment_stats_and_metrics(seg_path, enc_cols or ())
     if stats is not None and partition_by:
         stats.update(_partition_stats(seg_path, partition_by, types))
     return stats, metrics
@@ -583,11 +529,7 @@ def prune_report(
     Min/max is consulted first (cheapest), blooms only for survivors —
     matching the read path's evaluation order. Pure manifest metadata;
     no file listed, no Spark job."""
-    entries = _read_manifest(path)
-    by_version = {e["version"]: e for e in entries}
-    if version is None:
-        version = entries[-1]["version"]
-    entry = by_version[version]
+    entry = table_meta.entry_at(_read_manifest(path), version)
     stats = entry.get("stats", {})
     blooms = entry.get("bloom", {})
 
@@ -2165,16 +2107,12 @@ def snapshot_read(
     the Delta/Iceberg split, safe by construction). Pruning an empty
     file set returns an empty frame with the table's schema.
     """
-    entries = _read_manifest(path)
-    by_version = {e["version"]: e for e in entries}
     if as_of_ts is not None:
         if version is not None:
             raise ValueError("pass version OR as_of_ts, not both")
         version = version_at_timestamp(path, as_of_ts)
-    if version is None:
-        version = entries[-1]["version"]
-    if version not in by_version:
-        raise ValueError(f"unknown version {version}; have {sorted(by_version)}")
+    entry = table_meta.entry_at(_read_manifest(path), version)
+    version = entry["version"]
     # Column mapping: user predicates arrive in LOGICAL names; stats,
     # blooms and footers are keyed PHYSICALLY — translate before
     # pruning, and project the final frame back to logical below.
@@ -2182,7 +2120,6 @@ def snapshot_read(
     # rule: the mapping is table metadata, not per-version).
     cmap = _column_map(path)
     predicates = _physical_predicates(predicates, cmap)
-    entry = by_version[version]
     # ``columns`` — explicit projection. On plaintext tables a plan-time
     # select (Catalyst prunes the scan). On a COLUMN-encrypted table
     # (r14) it is the keyless contract: a projection that avoids every
@@ -2820,35 +2757,6 @@ def _write_segment_keyed(
     }
 
 
-def _read_new_segment(
-    spark: SparkSession, path: str, entry: dict, seg: str,
-    encryption_key: str | None = None,
-) -> DataFrame:
-    """One segment of ``entry`` read with its recorded layout: a
-    Hive-partitioned segment reads with its own basePath so partition
-    columns are recovered from directory names, then pinned to the
-    ledger's types; flat segments read plain. Encrypted versions read
-    keyed (r14) or fail loud."""
-    if entry.get("encrypted") and encryption_key:
-        return _read_files_keyed(
-            spark,
-            entry,
-            _keyed_seg_files(path, entry, [seg]),
-            encryption_key,
-            segs=[seg],
-            path=path,
-        )
-    _assert_not_encrypted(entry)
-    seg_dir = os.path.join(path, seg)
-    cols = entry.get("partition_by", {}).get(seg)
-    if not cols:
-        st = _ledger_struct(entry, [seg])  # skip schema inference (r14)
-        reader = spark.read.schema(st) if st is not None else spark.read
-        return reader.parquet(seg_dir)
-    df = spark.read.option("basePath", seg_dir).parquet(seg_dir)
-    return _cast_partition_cols(df, cols, entry.get("schemas", {}).get(seg, {}))
-
-
 def _read_files_with_layout(
     spark: SparkSession, path: str, entry: dict, files,
     encryption_key: str | None = None,
@@ -2856,24 +2764,22 @@ def _read_files_with_layout(
     """Read specific parquet FILES of a version with row identity
     (``__fp``/``__ri``) AND partition columns recovered — the
     change-feed delete leg's scan. Files are grouped by owning segment
-    (directory ancestry, scheme-stripped); a Hive-partitioned segment's
-    group reads with ``basePath`` = the segment root so Spark re-derives
-    each file's partition values from its branch (NULL sentinel
-    included), then pins them to the ledger's types; flat files read as
-    one plain multi-file scan. Cost stays O(changed files).
+    (directory ancestry); a Hive-partitioned segment's group reads with
+    ``basePath`` = the segment root so Spark re-derives each file's
+    partition values from its branch (NULL sentinel included), then
+    pins them to the ledger's types; flat files read as one plain
+    multi-file scan. Cost stays O(changed files).
 
-    ``files`` are ``_metadata.file_path`` strings: scheme-prefixed and
-    PERCENT-ENCODED (a partition value with a space encodes as %20).
-    They are decoded to plain filesystem paths for grouping and for the
-    reader input; the probe's regenerated ``__fp`` is Spark-encoded
-    again, so the position join against the DV stays exact."""
-    local = [table_meta.local_path(fp) for fp in files]
+    ``files`` are absolute filesystem paths (the change-feed plan's
+    leg files). The probe's ``__fp`` is Spark's scheme-prefixed,
+    PERCENT-ENCODED ``_metadata.file_path`` — the form the DV sidecar
+    recorded — so the position join against the DV stays exact."""
     if entry.get("encrypted") and encryption_key:
         # Keyed file-precise scan (r14): recover each file's partition
         # branch from its owning segment's ledger and read through the
         # keyed pyarrow path — same position synthesis (__fp/__ri), so
         # the DV join downstream is byte-exact.
-        listed = [(lp, table_meta.parts_of_file(path, entry, lp)) for lp in local]
+        listed = [(fp, table_meta.parts_of_file(path, entry, fp)) for fp in files]
         return _read_files_keyed(
             spark, entry, listed, encryption_key, with_pos=True, path=path
         )
@@ -2887,7 +2793,7 @@ def _read_files_with_layout(
     abs_path = os.path.abspath(path)
     groups: dict = {}
     flat_owners = set()
-    for lp in local:
+    for lp in files:
         owner = next(
             (
                 seg for seg in entry["segments"]
@@ -3826,9 +3732,6 @@ def rollback(path: str, to_version: int) -> int:
     would otherwise be erased (lost update)."""
 
     def build(entries):
-        by_version = {e["version"]: e for e in entries}
-        if to_version not in by_version:
-            raise ValueError(f"unknown version {to_version}; have {sorted(by_version)}")
         # Restore every ledger with the segment list — stats and blooms
         # keep the restored version data-skippable, the schema ledger
         # keeps its mergeSchema gate and later appends' type enforcement,
@@ -3836,7 +3739,7 @@ def rollback(path: str, to_version: int) -> int:
         # (and resurrects rows deleted after it), the partition layout
         # keeps basePath reads, and the encryption markers keep every
         # keyless-read gate armed.
-        target = by_version[to_version]
+        target = table_meta.entry_at(entries, to_version)
         entry = {"version": entries[-1]["version"] + 1, "segments": list(target["segments"])}
         _carry_forward(entry, target, target["segments"])
         return entry, {}
@@ -4555,9 +4458,9 @@ def delete_where(
     n_dropped_rows = 0
     if full:
         for seg in full:
-            n_dropped_rows += _segment_file_metrics(os.path.join(path, seg))[
-                "num_rows"
-            ]
+            n_dropped_rows += _segment_file_metrics_keyless(
+                os.path.join(path, seg)
+            )["num_rows"]
         if latest.get("dv"):
             # Anchor on the ABSOLUTE segment root, not a bare "/{seg}/"
             # substring: a parent directory that happens to be named
@@ -4997,17 +4900,11 @@ def _describe_detail_row(path: str) -> dict:
     latest = entries[-1]
     n_files = n_bytes = n_rows = 0
     part_cols: set[str] = set()
-    # Encrypted segments: only the keyless-SAFE footer fields (file
-    # num_rows + fs size) — the full metrics pass reads column-chunk
-    # metadata, which parquet-cpp hard-aborts on without keys.
-    metrics_of = (
-        _segment_file_metrics_keyless
-        if latest.get("encrypted")
-        else _segment_file_metrics
-    )
     for seg in latest["segments"]:
         seg_dir = seg if os.path.isabs(seg) else os.path.join(path, seg)
-        m = metrics_of(seg_dir)
+        # File-level footer fields only: keyless-safe on encrypted
+        # segments, where column-chunk metadata hard-aborts parquet-cpp.
+        m = _segment_file_metrics_keyless(seg_dir)
         n_files += m["num_files"]
         n_bytes += m["bytes"]
         n_rows += m["num_rows"]
@@ -5768,105 +5665,6 @@ def snapshot_scan_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _synthesize_restore_legs(
-    spark: SparkSession, path: str, prev: dict, cur: dict,
-    encryption_key: str | None = None,
-) -> list[DataFrame]:
-    """File-level change legs for an OVERWRITE / RESTORE (rollback)
-    transition — the one transition class the feed raised on through
-    r12. Semantics are Delta RESTORE's CDF contract (file granularity):
-
-    * segments LEAVING the list emit their LIVE rows (read through the
-      PREVIOUS version's deletion vector) as ``delete`` legs;
-    * segments JOINING the list emit their live rows (through the NEW
-      version's DV — a restore republishes the target's DV, which can
-      reference the re-added files) as ``insert`` legs;
-    * segments on BOTH sides contribute only their DV DELTA — newly
-      tombstoned positions become ``delete`` legs, positions the
-      restore UN-tombstoned (resurrection: rolling back past a DELETE)
-      become ``insert`` legs. Both deltas are position-joined against
-      ONLY the touched files, the same O(changed files) scan the DV
-      delete path uses.
-
-    A row whose bytes live in both a removed and an added file emits a
-    delete AND an insert leg (net zero) — exactly Delta's
-    file-granularity over-report on RESTORE; consumers replay deletes
-    before inserts (MERGE by key) and converge. Cost: O(changed files
-    + DV delta); the unchanged segments are never read."""
-    prev_segs, cur_segs = set(prev["segments"]), set(cur["segments"])
-    frames: list[DataFrame] = []
-
-    def _live(entry: dict, segs) -> DataFrame:
-        return _read_live(
-            spark, path, entry, sorted(segs), encryption_key=encryption_key
-        )
-
-    removed, added = prev_segs - cur_segs, cur_segs - prev_segs
-    if removed:
-        frames.append(
-            _live(prev, removed).withColumn("_change_type", F.lit("delete"))
-        )
-    if added:
-        frames.append(
-            _live(cur, added).withColumn("_change_type", F.lit("insert"))
-        )
-    shared = prev_segs & cur_segs
-    if shared and prev.get("dv") != cur.get("dv"):
-        roots = tuple(
-            os.path.join(os.path.abspath(path), s) + os.sep for s in shared
-        )
-
-        def _dv(entry: dict):
-            if not entry.get("dv"):
-                return None
-            return _read_dv(spark, path, entry["dv"]).select(
-                "file_path", "row_index"
-            )
-
-        dv_prev, dv_cur = _dv(prev), _dv(cur)
-
-        def _delta(a, b):
-            """Positions in ``a`` but not ``b`` (None = empty side)."""
-            if a is None:
-                return None
-            if b is None:
-                return a
-            return a.join(b, ["file_path", "row_index"], "left_anti")
-
-        for delta, layout_entry, tag in (
-            (_delta(dv_cur, dv_prev), cur, "delete"),  # newly tombstoned
-            (_delta(dv_prev, dv_cur), prev, "insert"),  # resurrected
-        ):
-            if delta is None:
-                continue
-            # metadata-collect: O(changed files) distinct paths — the
-            # bound of the positional scan below. Restricted to SHARED
-            # segments: removed/added files were fully accounted above.
-            files = [
-                fp
-                for fp in sorted(
-                    r.file_path
-                    for r in delta.select("file_path").distinct().collect()
-                )
-                if table_meta.local_path(fp).startswith(roots)
-            ]
-            if not files:
-                continue
-            probe = _read_files_with_layout(
-                spark, path, layout_entry, files,
-                encryption_key=encryption_key,
-            )
-            cond = (probe["__fp"] == delta["file_path"]) & (
-                probe["__ri"] == delta["row_index"]
-            )
-            frames.append(
-                probe.join(F.broadcast(delta), cond, "left_semi")
-                .drop("__fp", "__ri")
-                .withColumn("_change_type", F.lit(tag))
-            )
-    return frames
-
-
 def change_feed(
     spark: SparkSession,
     path: str,
@@ -5878,28 +5676,32 @@ def change_feed(
     ``_change_type`` column — Delta's CHANGE DATA FEED re-expressed over
     the manifest.
 
-    Unlike :func:`snapshot_diff` (a general O(table) anti-join), this
-    reads O(changes): an append's inserts are the NEW SEGMENT's rows
-    (scanned directly, no join against the base), a deletion-vector
-    commit's deletes are recovered by reading ONLY the files the DV
-    delta references, position-joined against the (broadcast) delta,
-    and an UPDATE / MERGE on a :func:`enable_change_data_feed` table
-    reads the ``cdc-{version}`` sidecar the commit wrote (with Delta's
-    ``update_preimage`` / ``update_postimage`` / ``insert`` row types).
-    Maintenance commits tagged ``data_change: false`` (compact /
-    bin-pack / z-order / purge's rewrite) are SKIPPED — zero legs,
-    Delta's OPTIMIZE-under-CDF contract — so table maintenance never
-    breaks an incremental consumer. OVERWRITE / RESTORE (rollback)
-    transitions synthesize FILE-LEVEL legs from the manifest's own
-    segment diff (:func:`_synthesize_restore_legs`, r13) — Delta
-    RESTORE's CDF granularity — so a live CDC replica survives a
-    ``RESTORE`` too. UPDATE/MERGE without CDF enabled synthesizes the
-    SAME file-level legs from its rewritten-segment diff (r14): a
-    coarser feed than the sidecar's row-level pre/postimages —
-    unchanged rows in rewritten segments emit a net-zero delete+insert
-    pair — but sound under keyed replay and signed aggregation, where
-    Delta still refuses the span outright. Every manifest transition
-    now feeds.
+    :func:`table_meta.change_legs` plans the span, the same plan the
+    streaming CDF reader consumes; this function turns its legs into
+    Spark frames on the native parquet path. Unlike
+    :func:`snapshot_diff` (a general O(table) anti-join), the feed
+    reads O(changes):
+
+    * an UPDATE / MERGE on a :func:`enable_change_data_feed` table reads
+      the ``cdc-{version}`` sidecar the commit wrote (Delta's
+      ``update_preimage`` / ``update_postimage`` / ``insert`` row
+      types), with the entry's ``cdc_schema`` instead of schema
+      inference;
+    * added segments' rows are inserts and removed segments' live rows
+      (the previous version's DV masked out) deletes, read whole. A
+      segment read through a deletion vector only when the plan found
+      tombstones in it (a restore re-adding a segment);
+    * a deletion-vector change reads ONLY the files its positional
+      delta touches, semi-joined with the broadcast DV delta: new
+      tombstones are deletes, retracted ones (a restore past a DELETE)
+      inserts.
+
+    Maintenance commits (``data_change: false``: compact, bin-pack,
+    z-order, purge's rewrite) emit nothing, Delta's OPTIMIZE-under-CDF
+    contract. OVERWRITE, RESTORE and UPDATE/MERGE without CDF get
+    Delta RESTORE's file granularity: an unchanged row in a rewritten
+    segment emits a net-zero delete and insert pair, sound under keyed
+    replay and signed aggregation, where Delta refuses the span.
 
     At 100 TB: a day that appends 100 GB and tombstones 0.1% yields a
     change feed costing ~100 GB of reads, independent of table size —
@@ -5907,170 +5709,83 @@ def change_feed(
     audit) actually need.
     """
     entries = _read_manifest(path)
-    by_version = {e["version"]: e for e in entries}
-    if from_version not in by_version or to_version not in by_version:
-        raise ValueError(f"unknown versions; have {sorted(by_version)}")
-    if from_version >= to_version:
+    unknown = "unknown versions; have {have}"
+    lo = table_meta.entry_at(entries, from_version, unknown)["version"]
+    last = table_meta.entry_at(entries, to_version, unknown)
+    if lo >= last["version"]:
         raise ValueError("from_version must be < to_version")
-    span = [e for e in entries if from_version <= e["version"] <= to_version]
+    legs, _transitions = table_meta.change_legs(path, entries, lo, last["version"])
+    by_version = {e["version"]: e for e in entries}
+    prev_of = {b["version"]: a for a, b in zip(entries, entries[1:])}
+    groups: dict = {}
+    for v, kind, fp, pos, _parts in legs:
+        # An added segment is read once, masked when any file has
+        # tombstones: its "add" and "insert" legs share one read.
+        kind = "insert" if kind == "add" else kind
+        groups.setdefault((v, kind), []).append((fp, pos))
+
+    def _dv(a: dict, b: dict) -> DataFrame:
+        """Positions in ``a``'s deletion vector but not in ``b``'s."""
+        delta = _read_dv(spark, path, a["dv"]).select("file_path", "row_index")
+        if b.get("dv"):
+            old = _read_dv(spark, path, b["dv"]).select("file_path", "row_index")
+            delta = delta.join(old, ["file_path", "row_index"], "left_anti")
+        return delta
+
     frames = []
-    for prev, cur in zip(span, span[1:]):
-        if cur.get("data_change") is False:
-            # Maintenance rewrite (compact / bin-pack / z-order /
-            # purge's compaction): bytes moved, live rows identical —
-            # zero legs, exactly how Delta CDF skips dataChange=false
-            # OPTIMIZE commits. The next pair diffs against THIS
-            # entry's segments, so the skip is seamless.
+    for (v, kind), files in groups.items():
+        cur, prev = by_version[v], prev_of[v]
+        entry = prev if kind in ("drop", "revive") else cur
+        if kind == "cdc":
+            st = _ddl_struct(cur.get("cdc_schema"))
+            reader = spark.read.schema(st) if st is not None else spark.read
+            frames.append(reader.parquet(os.path.join(path, cur["cdc"])))
             continue
-        pure_append = (
-            cur["segments"][: len(prev["segments"])] == prev["segments"]
-            and len(cur["segments"]) == len(prev["segments"]) + 1
-            and cur.get("dv") == prev.get("dv")
-        )
-        is_delete = "deleted_where" in cur and set(cur["segments"]) <= set(
-            prev["segments"]
-        )
-        if pure_append:
-            seg = cur["segments"][-1]
-            # A "pure append" whose segment is actually RE-ADDED by a
-            # superset restore (rollback past a pure retention drop —
-            # the DV is carried BY NAME, so the dv-equality test above
-            # cannot tell) can hold tombstones in the current DV; its
-            # insert leg must emit LIVE rows only or a replica
-            # re-inserts dead rows (ADVICE r13). The DV is prefiltered
-            # to the new segment's root, so a genuinely fresh append
-            # (whose files can never appear in a pre-existing DV)
-            # anti-joins against an empty broadcast — ~free.
-            dv_hits = 0
-            if cur.get("dv"):
-                seg_root = os.path.join(os.path.abspath(path), seg) + "/"
-                dv_hits = (
-                    _read_dv(spark, path, cur["dv"])
-                    .filter(
-                        F.col("file_path").contains(seg_root)
-                        | F.try_url_decode(F.col("file_path")).contains(
-                            seg_root
-                        )
-                    )
-                    .limit(1)
-                    .count()
-                )
-            if dv_hits:
-                ins = _read_live(
-                    spark, path, cur, [seg], encryption_key=encryption_key
-                ).withColumn("_change_type", F.lit("insert"))
-            else:
-                # Layout-aware segment read: a Hive-partitioned new
-                # segment recovers its partition columns with basePath
-                # and pins them to the ledger's types (plain
-                # spark.read.parquet would type-infer digit-like string
-                # values to int/date, diverging from flat reads of the
-                # same table).
-                ins = _read_new_segment(
-                    spark, path, cur, seg, encryption_key=encryption_key
-                ).withColumn("_change_type", F.lit("insert"))
-            frames.append(ins)
-        elif is_delete:
-            # Retention DROP legs first (r12): segments the DELETE
-            # removed wholesale emit their LIVE rows (read through the
-            # PREVIOUS version's DV) as deletes — O(dropped data),
-            # scanned once, never position-joined.
-            dropped = cur.get("dropped_segments") or [
-                s for s in prev["segments"] if s not in cur["segments"]
-            ]
-            if dropped:
-                gone = _read_live(
-                    spark, path, prev, dropped, encryption_key=encryption_key
-                )
-                frames.append(gone.withColumn("_change_type", F.lit("delete")))
-            if not cur.get("dv"):
-                continue  # pure drop: no positional delta to recover
-            dv_cur = _read_dv(spark, path, cur["dv"]).select(
-                "file_path", "row_index"
-            )
-            if prev.get("dv"):
-                if cur["dv"] == prev["dv"]:
-                    continue  # carried-by-reference DV: no delta
-                dv_prev = _read_dv(spark, path, prev["dv"]).select(
-                    "file_path", "row_index"
-                )
-                delta = dv_cur.join(
-                    dv_prev, ["file_path", "row_index"], "left_anti"
-                )
-            else:
-                delta = dv_cur
-            # metadata-collect: O(changed files) distinct paths — the
-            # file list the delete scan is then bounded to.
-            files = sorted(
-                r.file_path for r in delta.select("file_path").distinct().collect()
-            )
-            if not files:
-                continue
-            # Layout-aware file scan (r11, closes the partitioned CDF
-            # gap): files group by owning segment; partitioned groups
-            # recover their partition columns via per-segment basePath.
+        if kind in ("delete", "revive"):
+            # Position join on Spark's own _metadata.file_path strings
+            # (percent-encoded on both sides), bounded to the planned
+            # files; the DV delta is tiny, so it is broadcast.
+            delta = _dv(cur, prev) if kind == "delete" else _dv(prev, cur)
             probe = _read_files_with_layout(
-                spark, path, cur, files, encryption_key=encryption_key
+                spark, path, entry, [fp for fp, _pos in files],
+                encryption_key=encryption_key,
             )
             cond = (probe["__fp"] == delta["file_path"]) & (
                 probe["__ri"] == delta["row_index"]
             )
-            dels = (
-                probe.join(F.broadcast(delta), cond, "left_semi")
-                .drop("__fp", "__ri")
-                .withColumn("_change_type", F.lit("delete"))
+            df = probe.join(F.broadcast(delta), cond, "left_semi").drop(
+                "__fp", "__ri"
             )
-            frames.append(dels)
-        elif cur.get("cdc"):
-            # UPDATE / MERGE with CHANGE DATA FEED enabled: the commit
-            # recorded its row-level changes in a ``cdc-{version}``
-            # sidecar at write time (update_preimage / update_postimage
-            # / insert legs, Delta's CDF row types), so the feed reads
-            # O(changed rows) — never a diff of the rewritten segments.
-            # The entry's ``cdc_schema`` skips the schema-inference job;
-            # entries written before it was recorded keep inference.
-            st = _ddl_struct(cur.get("cdc_schema"))
-            reader = spark.read.schema(st) if st is not None else spark.read
-            frames.append(reader.parquet(os.path.join(path, cur["cdc"])))
         else:
-            # OVERWRITE / RESTORE (r13) and — r14, the last feed-killing
-            # transition class — UPDATE/MERGE committed WITHOUT a CDC
-            # sidecar: synthesize file-level legs instead of raising.
-            # Removed segments' live rows become delete legs, added
-            # segments' live rows insert legs, and shared-segment DV
-            # deltas positional delete/insert legs (resurrection
-            # included). For an un-CDC UPDATE this is the same
-            # file-granularity over-report as Delta RESTORE's CDF: an
-            # unchanged row in a rewritten segment emits a delete AND an
-            # identical insert (net zero under deletes-before-inserts
-            # replay by key; net zero in signed-partial aggregation),
-            # an updated row emits (-old, +new) — exactly the update's
-            # delta, recovered from the manifest alone, O(rewritten
-            # segments) instead of undefined. Delta itself still
-            # refuses this span; enabling CDF beforehand remains the
-            # O(changed rows) fast path via the sidecar branch above.
-            frames.extend(
-                _synthesize_restore_legs(
-                    spark, path, prev, cur, encryption_key=encryption_key
+            segs = sorted({table_meta.segment_of(path, fp) for fp, _pos in files})
+            if any(pos for _fp, pos in files):
+                df = _read_live(
+                    spark, path, entry, segs, encryption_key=encryption_key
                 )
-            )
+            else:
+                df = _read_segment_dirs(
+                    spark, path, segs, entry,
+                    evolved=_schemas_diverge(entry, segs),
+                    encryption_key=encryption_key,
+                )
+        frames.append(
+            df.withColumn("_change_type", F.lit(table_meta.CHANGE_TYPE[kind]))
+        )
     # Column mapping: every leg above reads physical bytes (segments,
     # DV-probed files, CDC sidecars all store physical names); one
     # logical projection at the boundary keeps feed consumers in the
     # table's current logical schema, dropped columns excluded.
     cmap = _column_map(path)
     if not frames:
-        base = _read_new_segment(
-            spark, path, by_version[to_version],
-            by_version[to_version]["segments"][0],
+        base = _read_segment_dirs(
+            spark, path, last["segments"][:1], last, evolved=False,
             encryption_key=encryption_key,
         ).limit(0)
         return _to_logical_frame(base.withColumn("_change_type", F.lit("")), cmap)
     out = frames[0]
     for f in frames[1:]:
         # allowMissingColumns: a feed spanning a schema-evolving append
-        # (a transition class this function supports) NULL-backfills the
-        # added columns instead of failing the union.
+        # NULL-backfills the added columns instead of failing the union.
         out = out.unionByName(f, allowMissingColumns=True)
     return _to_logical_frame(out, cmap)
 
@@ -7885,13 +7600,7 @@ def clone_table(src_path: str, dst_path: str, version: int | None = None) -> int
     experiment-branch primitive (try a risky UPDATE/MERGE on a clone,
     validate, then replay on the source) that costs nothing at any
     table size."""
-    entries = _read_manifest(src_path)
-    by_version = {e["version"]: e for e in entries}
-    if version is None:
-        version = entries[-1]["version"]
-    if version not in by_version:
-        raise ValueError(f"unknown version {version}; have {sorted(by_version)}")
-    e = by_version[version]
+    e = table_meta.entry_at(_read_manifest(src_path), version)
     src_abs = os.path.abspath(src_path)
 
     def _abs(name: str) -> str:
@@ -7903,7 +7612,7 @@ def clone_table(src_path: str, dst_path: str, version: int | None = None) -> int
         "segments": segments,
         "stats": {_abs(s): v for s, v in e.get("stats", {}).items() if s in e["segments"]},
         "schemas": {_abs(s): v for s, v in e.get("schemas", {}).items() if s in e["segments"]},
-        "cloned_from": {"path": src_abs, "version": version},
+        "cloned_from": {"path": src_abs, "version": e["version"]},
     }
     if e.get("bloom"):
         entry["bloom"] = {_abs(s): v for s, v in e["bloom"].items() if s in e["segments"]}

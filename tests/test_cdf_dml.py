@@ -254,7 +254,7 @@ def test_dml_iteration_job_budget(spark, tmp_path):
         "delete_keys": 4,
         "update_where": 4,
         "merge_upsert": 10,
-        "change_feed": 4,
+        "change_feed": 2,
         "compact": 2,
     }
     # The budget holds with the results unchanged.

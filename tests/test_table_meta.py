@@ -37,7 +37,35 @@ _DELETED = {
     "_check_key_fingerprint",
     # inline path-localizers
     "local", "_local",
+    # the second change-feed planner and its helpers, the footer-walk
+    # copies (one change-feed plan, one footer harvest)
+    "_synthesize_restore_legs", "_dv_positions", "_parts_of_file",
+    "_segment_stats_plaintext", "_segment_file_metrics",
 }
+#: Manifest entry keys that classify a change-feed transition: only
+#: table_meta's planner reads them, the pyds module does not.
+_PLANNER_KEYS = {"deleted_where", "cdc", "data_change"}
+
+
+def _entry_key_reads(tree) -> set:
+    """String keys read with ``x[key]``, ``x.get(key)`` or ``key in x``."""
+    keys = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Subscript):
+            cands = [n.slice]
+        elif isinstance(n, ast.Call) and getattr(n.func, "attr", None) == "get":
+            cands = n.args[:1]
+        elif isinstance(n, ast.Compare) and any(
+            isinstance(op, (ast.In, ast.NotIn)) for op in n.ops
+        ):
+            cands = [n.left]
+        else:
+            continue
+        keys.update(
+            c.value for c in cands
+            if isinstance(c, ast.Constant) and isinstance(c.value, str)
+        )
+    return keys
 
 
 def _bound_names(tree) -> set:
@@ -71,8 +99,8 @@ def test_no_metadata_twins_in_versioned_or_pyds():
     for name in ("versioned.py", "python_datasource.py"):
         src = (SOURCES / name).read_text()
         tree = ast.parse(src)
-        # ``local`` is a plain list in _read_files_with_layout; only a
-        # function of that name would be a localizer.
+        # A plain variable named ``local`` is fine; only a function of
+        # that name would be a localizer.
         funcs = {
             n.name for n in ast.walk(tree)
             if isinstance(n, (ast.FunctionDef, ast.ClassDef))
@@ -86,6 +114,8 @@ def test_no_metadata_twins_in_versioned_or_pyds():
         }
         assert "unquote" not in imported, name
         assert "__HIVE_DEFAULT_PARTITION__" not in src, name
+    pyds = ast.parse((SOURCES / "python_datasource.py").read_text())
+    assert not _entry_key_reads(pyds) & _PLANNER_KEYS
 
 
 @pytest.mark.parametrize(
@@ -231,3 +261,42 @@ def test_pyds_prune_refuses_unsupported_ops(spark, tmp_path):
         spark.read.format(FORMAT_NAME).option(
             "prune", json.dumps([["k", "!=", 3]])
         ).load(path).collect()
+
+
+def test_row_groups_skip_on_utc_timestamp_stats(spark, tmp_path):
+    """pyarrow reads a UTC-adjusted timestamp column's row-group stats as
+    tz-aware datetimes, while pruning literals are naive UTC: both
+    compare as naive UTC, so a timestamp predicate skips row groups, and
+    the pruned pyds read returns the rows of the unpruned one."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from argodb_mapreduce_spark.sources.python_datasource import read_versioned
+    from argodb_mapreduce_spark.sources.versioned import versioned_write
+
+    path = str(tmp_path / "rg")
+    df = spark.range(0, 20000, numPartitions=1).select(
+        F.col("id").alias("k"),
+        F.timestamp_seconds(F.col("id") * 60 + 1_600_000_000).alias("ts"),
+        F.sha2(F.col("id").cast("string"), 256).alias("pad"),
+    )
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    block = conf.get("parquet.block.size")
+    conf.set("parquet.block.size", str(64 * 1024))
+    try:
+        versioned_write(df, path)
+    finally:
+        if block is None:
+            conf.unset("parquet.block.size")
+        else:
+            conf.set("parquet.block.size", block)
+    [fp] = glob.glob(os.path.join(path, "data-0", "*.parquet"))
+    pf = pq.ParquetFile(fp)
+    cut = dt.datetime(2020, 9, 16)
+    preds = [("ts", "<", cut)]
+    kept, _offsets = table_meta.select_row_groups(pf, preds)
+    assert 0 < len(kept) < pf.metadata.num_row_groups
+    pruned = read_versioned(spark, path, predicates=preds).collect()
+    full = read_versioned(spark, path).filter(F.col("ts") < cut).collect()
+    assert len(pruned) > 0
+    assert sorted(pruned) == sorted(full)
