@@ -2233,7 +2233,7 @@ def _read_segment_dirs(
         return _read_files_keyed(
             spark,
             entry,
-            _keyed_seg_files(path, entry, segs),
+            [f for s in segs for f in table_meta.segment_files(path, entry, s)],
             encryption_key,
             with_pos=with_pos,
             segs=segs,
@@ -2454,31 +2454,6 @@ def rotate_encryption_key(
         "rotations": rotations,
         "files_rewritten": 0,
     }
-
-
-def _keyed_seg_files(path: str, entry: dict, segs) -> list:
-    """Driver-side file listing for a keyed read — [(abs_file_path,
-    ((col, raw_or_None, type_str), ...)), ...]: flat segments list
-    plainly; Hive-partitioned segments decode each file's ``col=value``
-    branch (NULL sentinel → None) with types pinned to the schema
-    ledger. O(files) filesystem metadata."""
-    parts_of = _segment_partition_cols(entry, segs)
-    ledger = entry.get("schemas", {})
-    out = []
-    for seg in segs:
-        seg_dir = os.path.abspath(os.path.join(path, seg))
-        cols = parts_of.get(seg)
-        if not cols:
-            for f in sorted(os.listdir(seg_dir)):
-                if f.endswith(".parquet"):
-                    out.append((os.path.join(seg_dir, f), ()))
-            continue
-        types = ledger.get(seg, {})
-        for fp, pairs in table_meta.walk_partition_files(seg_dir, cols):
-            out.append(
-                (fp, tuple((c, v, types.get(c, "string")) for c, v in pairs))
-            )
-    return out
 
 
 def _keyed_target_schema(entry: dict, segs):

@@ -300,3 +300,37 @@ def test_row_groups_skip_on_utc_timestamp_stats(spark, tmp_path):
     full = read_versioned(spark, path).filter(F.col("ts") < cut).collect()
     assert len(pruned) > 0
     assert sorted(pruned) == sorted(full)
+
+
+def test_plain_tail_masks_tombstones_of_readded_segments(spark, tmp_path):
+    """A rollback that re-adds a dropped segment republishes the
+    deletion vector that tombstones some of its rows: a plain
+    ``ignoreDeletes`` tail streams only the re-added segment's live
+    rows, as the change feed does."""
+    from argodb_mapreduce_spark.sources.python_datasource import (
+        make_versioned_datasource,
+    )
+    from argodb_mapreduce_spark.sources.versioned import (
+        delete_keys,
+        delete_where,
+        rollback,
+        versioned_write,
+    )
+
+    p = str(tmp_path / "t")
+    versioned_write(spark.range(0, 20).withColumnRenamed("id", "k"), p)  # v0
+    versioned_write(
+        spark.range(20, 40).withColumnRenamed("id", "k"), p, mode="append"
+    )  # v1: data-1
+    delete_keys(spark, p, spark.createDataFrame([(25,)], "k long"), "k")  # v2
+    delete_where(spark, p, [("k", ">=", 20)])  # v3: drops data-1
+    rollback(p, 2)  # v4: re-adds data-1 under v2's deletion vector
+    ds = make_versioned_datasource()({"path": p, "ignoreDeletes": "true"})
+    reader = ds.streamReader(ds.schema())
+    streamed = sorted(
+        k
+        for part in reader.partitions({"version": 3}, {"version": 4})
+        for batch in reader.read(part)
+        for k in batch.to_pydict()["k"]
+    )
+    assert streamed == [k for k in range(20, 40) if k != 25]
