@@ -1873,7 +1873,13 @@ def make_versioned_datasource():
                         "option('readChangeFeed', 'true') to consume "
                         "them as change rows"
                     )
-            stats = {e["version"]: e.get("stats", {}) for e in entries}
+            by_version = {e["version"]: e for e in entries}
+
+            def seg_stats(v, fp):
+                e = by_version[v]
+                seg = table_meta.segment_of(self._path, e, fp)
+                return e.get("stats", {}).get(seg)
+
             return [
                 SegmentFilePartition(fp, pos, parts)
                 for v, kind, fp, pos, parts in legs
@@ -1881,10 +1887,7 @@ def make_versioned_datasource():
                 # Selective subscriber: files whose segment stats or
                 # partition values exclude the predicates never plan.
                 and table_meta.stats_may_match(
-                    _tighten_with_parts(
-                        stats[v].get(table_meta.segment_of(self._path, fp)), parts
-                    ),
-                    self._prune,
+                    _tighten_with_parts(seg_stats(v, fp), parts), self._prune
                 )
             ]
 

@@ -9,7 +9,8 @@ ArgodbMapreduceRecordReader.java:172-198).
   (:func:`select_row_groups`).
 * **Hive branches.** :data:`HIVE_NULL`, :func:`decode_branch`,
   :func:`decode_part_value`, :func:`walk_partition_files` and
-  :func:`parts_of_file`: directory branch to typed partition value.
+  :func:`parts_of_file`: directory branch to typed partition value;
+  :func:`segment_of` finds the segment that holds a file.
 * **Paths and deletion vectors.** :func:`local_path` turns a
   ``_metadata.file_path`` into a filesystem path; :func:`dv_positions`
   reads a DV sidecar with pyarrow; :func:`segment_files` lists a
@@ -234,22 +235,30 @@ def walk_partition_files(seg_dir: str, part_cols) -> list:
     return sorted(out)
 
 
-def parts_of_file(path: str, entry: dict, fp: str) -> tuple:
-    """((col, raw_or_None, ledger type), ...) for a local file path of
-    ``entry``: its owning segment is found by directory ancestry (the
-    table path may be relative, file paths are absolute), then the
-    branch between segment root and file is decoded. Flat or unowned
-    files give ()."""
+def segment_of(path: str, entry: dict, fp: str):
+    """The segment of ``entry`` that holds a local file path, found by
+    directory ancestry: the table path may be relative, file paths are
+    absolute, and a clone's segments are absolute paths outside the
+    table. None for a file no segment holds."""
     root = os.path.abspath(path)
     for seg in entry["segments"]:
-        seg_root = os.path.join(root, seg)
-        if not fp.startswith(seg_root + os.sep):
-            continue
-        cols = entry.get("partition_by", {}).get(seg) or ()
-        types = entry.get("schemas", {}).get(seg, {})
-        pairs = decode_branch(os.path.relpath(os.path.dirname(fp), seg_root))
-        return tuple((c, pairs.get(c), types.get(c, "string")) for c in cols)
-    return ()
+        if fp.startswith(os.path.join(root, seg) + os.sep):
+            return seg
+    return None
+
+
+def parts_of_file(path: str, entry: dict, fp: str) -> tuple:
+    """((col, raw_or_None, ledger type), ...) for a local file path of
+    ``entry``: the branch between its segment's root and the file,
+    decoded. Flat or unowned files give ()."""
+    seg = segment_of(path, entry, fp)
+    if seg is None:
+        return ()
+    seg_root = os.path.join(os.path.abspath(path), seg)
+    cols = entry.get("partition_by", {}).get(seg) or ()
+    types = entry.get("schemas", {}).get(seg, {})
+    pairs = decode_branch(os.path.relpath(os.path.dirname(fp), seg_root))
+    return tuple((c, pairs.get(c), types.get(c, "string")) for c in cols)
 
 
 # ---------------------------------------------------------------------------
@@ -302,11 +311,6 @@ def segment_files(path: str, entry: dict, seg: str) -> list:
         (fp, tuple((c, raw, types.get(c, "string")) for c, raw in parts))
         for fp, parts in walk_partition_files(seg_dir, cols)
     ]
-
-
-def segment_of(path: str, fp: str) -> str:
-    """The segment that holds an absolute file path of the table."""
-    return os.path.relpath(fp, os.path.abspath(path)).split(os.sep)[0]
 
 
 # ---------------------------------------------------------------------------

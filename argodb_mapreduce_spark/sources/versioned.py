@@ -5732,7 +5732,9 @@ def change_feed(
                 "__fp", "__ri"
             )
         else:
-            segs = sorted({table_meta.segment_of(path, fp) for fp, _pos in files})
+            segs = sorted(
+                {table_meta.segment_of(path, entry, fp) for fp, _pos in files}
+            )
             if any(pos for _fp, pos in files):
                 df = _read_live(
                     spark, path, entry, segs, encryption_key=encryption_key
