@@ -631,9 +631,10 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # Spread the bigram explode (r15, guide §2.2): serialized on the
     # fixture's one scan partition (x10 ladder ratio 0.95).
-    # Row-group-gated — a real corpus skips the exchange.
+    # Row-group-gated — a real corpus skips the exchange. Hashed on
+    # doc_id, the key of the per-doc steps.
     bg = (
-        cpu_repartition(docs, sf_dir, "documents")
+        cpu_repartition(docs, sf_dir, "documents", "doc_id")
         .select("doc_id", F.split("text", " ").alias("tk"))
         .filter(F.size("tk") >= 2)
         .select(

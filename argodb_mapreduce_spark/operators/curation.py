@@ -206,8 +206,8 @@ def text_boilerplate_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # k-gram transform runs on the scan's partitions — ONE task on the
     # single-row-group fixture (x10 ladder: 6.5 s at 8c vs 6.8 s at
     # 32c, ratio 0.96). Row-group-gated: a real corpus skips the
-    # exchange.
-    grams = _doc_grams(cpu_repartition(d, sf_dir, "documents"))
+    # exchange. Hashed on doc_id, the key of the per-doc steps.
+    grams = _doc_grams(cpu_repartition(d, sf_dir, "documents", "doc_id"))
     phrase_df = grams.groupBy("gram").agg(F.count_distinct("doc_id").alias("df"))
     nd = F.broadcast(d.agg(F.count(F.lit(1)).alias("n_docs")))
     boiler = (

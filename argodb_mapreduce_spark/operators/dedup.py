@@ -87,9 +87,12 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The fixture file is one unsplittable row group, so without this
     # the split+slice+explode below runs as ONE task (guide §2.2; r14
     # A/B: dedup_minhash_verified 2.81→2.08 s, dedup_containment
-    # 3.21→2.42 s, paired same-window min-of-3).
+    # 3.21→2.42 s, paired same-window min-of-3). The spread hashes on
+    # doc_id, so the (doc_id, shingle) distinct below and the per-doc
+    # signature and size aggregates downstream reuse its partitioning
+    # and plan no exchange of their own.
     docs = cpu_repartition(
-        load_table(spark, sf_dir, "documents"), sf_dir, "documents"
+        load_table(spark, sf_dir, "documents"), sf_dir, "documents", "doc_id"
     )
     return (
         docs.select("doc_id", F.split("text", " ").alias("tk"))
@@ -935,10 +938,10 @@ def dedup_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     # EXPANSION and the per-pair Levenshtein DP run on the probe side's
     # scan partitions — ONE task on the single-row-group fixture at any
     # core count (x10 ladder: 112.6 s at 8c vs 114.2 s at 32c, ratio
-    # 0.99). The row-group-gated RoundRobin gives the probe side the
-    # session width; a real multi-row-group corpus skips it.
+    # 0.99). The row-group-gated doc_id-hashed spread gives the probe
+    # side the session width; a real multi-row-group corpus skips it.
     b = cpu_repartition(
-        load_table(spark, sf_dir, "documents"), sf_dir, "documents"
+        load_table(spark, sf_dir, "documents"), sf_dir, "documents", "doc_id"
     ).select(
         "doc_id",
         "lang",
@@ -1053,14 +1056,14 @@ def _cdc_chunks_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, chunk): the Spark twin of the _SQL_CDC_CHUNKS CTEs —
     per-row boundary detection over the precomputed code array, then
     one explode. The only shuffle is the cpu_repartition spread of the
-    raw text: the per-CHAR polynomial hash below is the package's
+    raw text (hashed on doc_id): the per-CHAR polynomial hash below is the package's
     heaviest codegen expression and the unsplittable single-row-group
     fixture otherwise runs it as one task (r14 A/B: dedup_cdc_chunks
     2.16→1.14 s, paired same-window min-of-3; guide §2.2)."""
     from argodb_mapreduce_spark.catalog import cpu_repartition
 
     d = cpu_repartition(
-        load_table(spark, sf_dir, "documents"), sf_dir, "documents"
+        load_table(spark, sf_dir, "documents"), sf_dir, "documents", "doc_id"
     ).filter(F.length("text") >= 1)
     h = _cdc_codes_hash("i")
     seg = d.select(

@@ -47,7 +47,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from argodb_mapreduce_spark.catalog import fixture_stale, load_table, table_path
+from argodb_mapreduce_spark.catalog import fixture_stale, load_table, read_parquet, table_path
 from argodb_mapreduce_spark.registry import register
 from argodb_mapreduce_spark.sources.versioned import (
     MANIFEST,
@@ -183,8 +183,8 @@ def mv_refresh(spark: SparkSession, mv_path: str) -> dict:
     group_cols, sum_cols = meta["group_cols"], meta["sum_cols"]
     measures = ["n_rows"] + [f"sum_{c}" for c in sum_cols]
     if new_segments is not None:
-        delta = spark.read.parquet(
-            *[os.path.join(base_path, s) for s in new_segments]
+        delta = read_parquet(
+            spark, *[os.path.join(base_path, s) for s in new_segments]
         )
         partial = delta.groupBy(*group_cols).agg(*_agg_columns(sum_cols))
         agg = _merge_partials(

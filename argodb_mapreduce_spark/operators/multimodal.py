@@ -67,12 +67,13 @@ def _codec_parallel(
     files get adequate byte-based splits anyway, and the clamp stops a
     huge corpus from over-partitioning the shuffle. Per-row transforms
     are partitioning-independent, so results are unchanged. Delegates
-    to catalog.cpu_repartition, which additionally gates the spread on
-    the table's row-group count (r15: a multi-row-group corpus already
-    scans in parallel, so the exchange is skipped entirely)."""
+    to catalog.cpu_repartition, which hashes the spread on doc_id and
+    gates it on the table's row-group count (r15: a multi-row-group
+    corpus already scans in parallel, so the exchange is skipped
+    entirely)."""
     from argodb_mapreduce_spark.catalog import cpu_repartition
 
-    return cpu_repartition(m, sf_dir, "documents", rows_per_partition)
+    return cpu_repartition(m, sf_dir, "documents", "doc_id", rows_per_partition)
 
 
 # -- stubbed real decoders (no media libs in this container) ---------------
@@ -500,9 +501,9 @@ def multimodal_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Work-derived spread (r15): the single-row-group fixture plans ONE
     # scan partition, so both codec stages ran on one core (the r14
     # JPEG/GIF finding — the x10 core-scaling ladder caught the PNG
-    # pipeline at 2 of 32 cores). _codec_parallel round-robins the
-    # small raw bytes once; its row-group gate makes it a structural
-    # no-op on any real multi-row-group corpus.
+    # pipeline at 2 of 32 cores). _codec_parallel spreads the small raw
+    # bytes once, hashed on doc_id; its row-group gate makes it a
+    # structural no-op on any real multi-row-group corpus.
     m = _codec_parallel(
         media_table(spark, sf_dir).select("doc_id", "content"), sf_dir
     )

@@ -220,8 +220,11 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # Spread the n-gram md5 explode (r15, guide §2.2) — one md5 per
     # token position, serialized on the single-row-group fixture's one
-    # scan partition (x10 ladder ratio 0.89). Row-group-gated.
-    tok = cpu_repartition(d, sf_dir, "documents").select(
+    # scan partition (x10 ladder ratio 0.89). Row-group-gated. Hashed
+    # on doc_id, so the (doc_id, ng) distinct and the per-doc n-gram
+    # count below keep the spread's partitioning: no exchange of their
+    # own.
+    tok = cpu_repartition(d, sf_dir, "documents", "doc_id").select(
         "doc_id", F.split("text", " ").alias("tk")
     ).filter(
         F.size("tk") >= DECONTAM_N
@@ -595,11 +598,11 @@ def bpe_encode_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     (similarity_index_build pattern) instead of a lazy recompute."""
     d = load_table(spark, sf_dir, "documents")
     # NO work-derived spread here (r15 negative result, measured): a
-    # row-group-gated RoundRobin of the docs scan read 16.3 s vs 7.6 s
-    # at x10 and flat at sf0.1 — the encode's cost lives in the
-    # distinct-vocab replace chain and the broadcast probe, not the
-    # explode, and the spread only added a full-text shuffle (confirms
-    # the r14 rejection for the BPE family).
+    # row-group-gated (then round-robin) spread of the docs scan read
+    # 16.3 s vs 7.6 s at x10 and flat at sf0.1 — the encode's cost
+    # lives in the distinct-vocab replace chain and the broadcast probe,
+    # not the explode, and the spread only added a full-text shuffle
+    # (confirms the r14 rejection for the BPE family).
     toks = (
         d.select("doc_id", F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok"))
         .filter(F.col("tok") != "")

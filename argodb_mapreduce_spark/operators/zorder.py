@@ -26,7 +26,7 @@ import tempfile
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from argodb_mapreduce_spark.catalog import fixture_stale, load_table, table_path
+from argodb_mapreduce_spark.catalog import fixture_stale, load_table, read_parquet, table_path
 from argodb_mapreduce_spark.registry import register
 
 Z_BITS = 8  # bits per dimension -> 16-bit Morton code, 256x256 grid
@@ -133,7 +133,7 @@ def linear_layout(spark: SparkSession, sf_dir: str) -> str:
 )
 def sink_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = zorder_layout(spark, sf_dir)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     return (
         df.filter((F.col("o_totalprice") >= 150000) & (F.col("o_totalprice") < 250000))
         .agg(

@@ -23,6 +23,7 @@ from argodb_mapreduce_spark.catalog import (
     HIVE_DEFAULT_PARTITION,
     fixture_stale,
     load_table,
+    read_parquet,
     scan,
     table_path,
 )
@@ -68,7 +69,7 @@ def sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert any(
         d.startswith(f"seg={HIVE_DEFAULT_PARTITION}") for d in os.listdir(out) if os.path.isdir(os.path.join(out, d))
     ), "expected a __HIVE_DEFAULT_PARTITION__ directory"
-    df = spark.read.parquet(out)
+    df = read_parquet(spark, out)
     return df.select("c_custkey", "c_name", "c_acctbal", F.col("seg").cast("string").alias("seg"))
 
 
@@ -170,7 +171,7 @@ def sink_partitioned_multilevel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderstatus",
         )
         o.write.mode("overwrite").partitionBy("o_year", "o_orderstatus").parquet(out)
-    df = spark.read.parquet(out)
+    df = read_parquet(spark, out)
     return df.filter((F.col("o_year") == 1995) & (F.col("o_orderstatus") == "F")).select(
         "o_orderkey", "o_totalprice", "o_year", "o_orderstatus"
     )
@@ -210,7 +211,7 @@ def scan_partition_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     marker = os.path.join(out, "_SUCCESS")
     if fixture_stale(table_path(sf_dir, "orders"), marker):
         sink_partitioned_multilevel(spark, sf_dir)
-    fact = spark.read.parquet(out)
+    fact = read_parquet(spark, out)
     dim = (
         load_table(spark, sf_dir, "orders")
         .select(F.year("o_orderdate").alias("y"))

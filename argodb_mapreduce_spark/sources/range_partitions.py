@@ -34,6 +34,7 @@ from argodb_mapreduce_spark.catalog import (
     RANGE_PARTITION_MARKER,
     fixture_stale,
     load_table,
+    read_parquet,
     table_path,
 )
 from argodb_mapreduce_spark.registry import register
@@ -91,7 +92,7 @@ def range_scan(
     with open(os.path.join(path, RANGE_PARTITION_MARKER)) as f:
         meta = json.load(f)
     col, bounds = meta["column"], meta["bounds"]
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     lo_bucket = bisect.bisect_right(bounds, lo) if lo is not None else 0
     hi_bucket = bisect.bisect_right(bounds, hi) if hi is not None else len(bounds)
     df = df.filter(F.col("range_id").between(lo_bucket, hi_bucket))
@@ -133,7 +134,7 @@ def _orders_range_path(spark: SparkSession, sf_dir: str) -> str:
 )
 def sink_range_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _orders_range_path(spark, sf_dir)
-    df = spark.read.parquet(out)
+    df = read_parquet(spark, out)
     return df.groupBy(F.col("range_id").cast("long").alias("range_id")).agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.min("o_orderkey").cast("long").alias("min_key"),

@@ -3372,9 +3372,7 @@ def diff_keys(
         def _dv_df(entry):
             if not entry.get("dv"):
                 return None
-            return spark.read.parquet(
-                os.path.join(path, entry["dv"])
-            ).select("file_path")
+            return _read_dv(spark, path, entry["dv"]).select("file_path")
 
         da, db = _dv_df(ea), _dv_df(eb)
         if da is None:

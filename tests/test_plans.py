@@ -764,7 +764,7 @@ def test_median_and_cleaning_rank_inputs_are_histograms(spark, sf_dir):
 
 def test_png_decode_pipeline_is_shuffle_free(spark, sf_dir):
     """Both Arrow stages of the PNG round trip chain onto the scan with
-    at most the ONE RoundRobin spread of the raw input (r15,
+    at most the ONE doc_id-hashed spread of the raw input (r15,
     multimodal._codec_parallel — same gate shape as the JPEG/CDC
     pipelines): at 100 TB the PNG containers and pixel volume never
     cross the network, and the row-group gate drops even the raw-bytes
@@ -798,7 +798,7 @@ def test_png_histogram_shuffles_only_bin_partials(spark, sf_dir):
 def test_cdc_single_shuffle(spark, sf_dir):
     """Boundary detection + segmentation are per-row array expressions;
     only the chunk-hash aggregate (and its top-k) may exchange — plus
-    the ONE RoundRobin spread of the raw input (r14 opt,
+    the ONE doc_id-hashed spread of the raw input (r14 opt,
     catalog.cpu_repartition: the single-row-group fixture is
     unsplittable, so without it the per-char boundary hash runs as one
     task). Any further exchange is a regression."""

@@ -178,6 +178,56 @@ def test_footer_schema_matches_inference_all_tables(spark):
             assert built == inferred, (p, built, inferred)
 
 
+def test_footer_reader_matches_inference_on_partitioned_layouts(spark, sf_dir):
+    """catalog.read_parquet on a Hive-layout directory: data columns
+    from the leaf footers, partition columns (and their types) from the
+    directory names — the same schema, names, types and order, and the
+    same rows as Spark's inference, with no job."""
+    from argodb_mapreduce_spark.catalog import _footer_spark_schema, read_parquet
+    from argodb_mapreduce_spark.operators.scans import partitioned_lineitem
+    from argodb_mapreduce_spark.sources.hive_partitions import _scratch, sink_partitioned_multilevel
+    from argodb_mapreduce_spark.sources.range_partitions import _orders_range_path
+    from tests.conftest import jobs_of
+
+    sink_partitioned_multilevel(spark, sf_dir)
+    layouts = [
+        partitioned_lineitem(spark, sf_dir),
+        _scratch(sf_dir, "orders_2level"),
+        _orders_range_path(spark, sf_dir),
+    ]
+    for path in layouts:
+        assert _footer_spark_schema(path) is not None, path
+        ours, jobs = jobs_of(spark, lambda: read_parquet(spark, path))
+        inferred = spark.read.parquet(path)
+        assert jobs == 0, path
+        assert ours.schema == inferred.schema, (path, ours.schema, inferred.schema)
+        assert sorted(map(repr, ours.collect())) == sorted(map(repr, inferred.collect())), path
+
+
+def test_footer_reader_falls_back_to_inference(spark, tmp_path):
+    """Divergent leaf footers, a data column named like a partition
+    column, or more leaves than the sweep bound: no footer schema, and
+    catalog.read_parquet reads through Spark's inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from argodb_mapreduce_spark.catalog import _FOOTER_SWEEP_MAX, _footer_spark_schema, read_parquet
+
+    def write(path, **cols):
+        path.parent.mkdir(parents=True, exist_ok=True)
+        pq.write_table(pa.table(cols), str(path))
+
+    write(tmp_path / "div" / "k=1" / "a.parquet", x=[1])
+    write(tmp_path / "div" / "k=2" / "b.parquet", x=[2], y=["b"])
+    write(tmp_path / "dup" / "k=1" / "a.parquet", x=[1], k=[1])
+    for i in range(_FOOTER_SWEEP_MAX + 1):
+        write(tmp_path / "many" / f"p{i:02d}.parquet", x=[i])
+    for name in ("div", "dup", "many"):
+        path = str(tmp_path / name)
+        assert _footer_spark_schema(path) is None, name
+        assert read_parquet(spark, path).schema == spark.read.parquet(path).schema, name
+
+
 def test_delete_keys_literal_path_matches_broadcast(spark, tmp_path):
     """The under-cap literal IN-list discovery (r14) must produce the
     identical DV and survivors as the over-cap broadcast semi-join,

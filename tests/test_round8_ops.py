@@ -120,7 +120,7 @@ def test_assign_blocked_equals_sql_assign(spark):
 
 def test_jpeg_pipeline_has_no_exchange(spark):
     """Both JPEG mapInPandas stages must chain onto the scan with at most
-    the ONE RoundRobin spread of the raw input (r14 opt,
+    the ONE doc_id-hashed spread of the raw input (r14 opt,
     multimodal._codec_parallel: the single-row-group fixture is
     unsplittable, so without it the pure-Python codec runs as one task —
     mirrors the CDC gate in test_plans.py). Any further exchange is a
