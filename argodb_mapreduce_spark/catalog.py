@@ -216,12 +216,13 @@ def _footer_spark_schema(*paths: str, nanos_as_long: bool = True):
     Spark discovers them and their types from the directory names with
     or without a given schema, and appends them after the data columns
     exactly as inference does. Returns ``None`` whenever anything is
-    unusual (no parts, more than 32 leaf files, divergent leaf schemas,
-    a non-``k=v`` subdirectory, a data column named like a partition
-    column, an arrow type with no direct Spark mapping) so the caller
-    falls back to Spark's own inference. NANOS timestamps map to LONG,
-    matching the ``nanosAsLong`` read; with ``nanos_as_long`` false they
-    return ``None``, since inference then refuses them too."""
+    unusual (no parts, over ``_FOOTER_SWEEP_MAX`` leaf files, divergent
+    leaf schemas, a non-``k=v`` subdirectory, a data column named like
+    a partition column, an arrow type with no direct Spark mapping) so
+    the caller falls back to Spark's own inference. NANOS timestamps
+    map to LONG, matching the ``nanosAsLong`` read; with
+    ``nanos_as_long`` false they return ``None``, since inference then
+    refuses them too."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
