@@ -3372,7 +3372,7 @@ def diff_keys(
         def _dv_df(entry):
             if not entry.get("dv"):
                 return None
-            return _read_dv(spark, path, entry["dv"]).select("file_path")
+            return _read_dv(spark, path, entry["dv"])
 
         da, db = _dv_df(ea), _dv_df(eb)
         if da is None:
@@ -3380,8 +3380,9 @@ def diff_keys(
         elif db is None:
             delta = da
         else:
-            delta = da.join(db, "file_path", "left_anti").unionAll(
-                db.join(da, "file_path", "left_anti")
+            pos = ["file_path", "row_index"]
+            delta = da.join(db, pos, "left_anti").unionAll(
+                db.join(da, pos, "left_anti")
             )
         # metadata-collect: O(changed files) distinct DV'd paths — the
         # prune's own bound (annotated; never O(rows)).

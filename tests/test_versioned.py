@@ -1727,3 +1727,20 @@ def test_manifest_appends_only_in_commit_entry():
         elif isinstance(node, ast.Attribute):
             names.add(node.attr)
     assert not names & {"_commit_lock", "_verify_lock"}
+
+
+def test_diff_keys_sees_a_second_delete_in_one_file(spark, tmp_path):
+    """Two deletion vectors on the same file differ by position, not by
+    file: the diff between them must report the key the second delete
+    removed (comparing DV file paths alone pruned the segment)."""
+    from argodb_mapreduce_spark.sources.versioned import delete_keys, diff_keys
+
+    p = str(tmp_path / "dk")
+    versioned_write(spark.range(0, 100).selectExpr("id AS k"), p)
+    delete_keys(spark, p, spark.createDataFrame([(5,)], "k long"), "k")
+    delete_keys(spark, p, spark.createDataFrame([(7,)], "k long"), "k")
+    out, meta = diff_keys(spark, p, "k", 1, 2)
+    assert sorted(tuple(r) for r in out.collect()) == [("removed", 7)]
+    assert meta["segments_compared"] == 2
+    out, _ = diff_keys(spark, p, "k", 0, 2)
+    assert sorted(tuple(r) for r in out.collect()) == [("removed", 5), ("removed", 7)]
