@@ -80,33 +80,42 @@ def dedup_exact_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # C2 — MinHash + LSH near-dedup.
 # ---------------------------------------------------------------------------
 
-def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, shingle) with distinct word-k-gram shingles per doc."""
+#: A document's word-k-gram shingles, in order, from its token array ``tk``.
+_SHINGLES = f"transform(sequence(0, size(tk) - {SHINGLE_K}), i -> concat_ws(' ', slice(tk, i + 1, {SHINGLE_K})))"
+
+
+def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, tk): token arrays of the documents long enough for one shingle."""
     from argodb_mapreduce_spark.catalog import cpu_repartition
 
     # The fixture file is one unsplittable row group, so without this
     # the split+slice+explode below runs as ONE task (guide §2.2; r14
     # A/B: dedup_minhash_verified 2.81→2.08 s, dedup_containment
     # 3.21→2.42 s, paired same-window min-of-3). The spread hashes on
-    # doc_id, so the (doc_id, shingle) distinct below and the per-doc
-    # signature and size aggregates downstream reuse its partitioning
-    # and plan no exchange of their own.
+    # doc_id, so the per-document steps downstream (the (doc_id,
+    # shingle) distinct, the signature and size aggregates) reuse its
+    # partitioning and plan no exchange of their own.
     docs = cpu_repartition(
         load_table(spark, sf_dir, "documents"), sf_dir, "documents", "doc_id"
     )
+    return docs.select("doc_id", F.split("text", " ").alias("tk")).filter(F.size("tk") >= SHINGLE_K)
+
+
+def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, shingle) with distinct word-k-gram shingles per doc."""
     return (
-        docs.select("doc_id", F.split("text", " ").alias("tk"))
-        .filter(F.size("tk") >= SHINGLE_K)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, size(tk) - {SHINGLE_K}), i -> concat_ws(' ', slice(tk, i + 1, {SHINGLE_K})))"
-                )
-            ).alias("shingle"),
-        )
+        _doc_tokens(spark, sf_dir)
+        .select("doc_id", F.explode(F.expr(_SHINGLES)).alias("shingle"))
         .distinct()
     )
+
+
+def _doc_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, shingles): each document's distinct shingles as one
+    array — ``_doc_shingles`` grouped per document, built per row with
+    no explode and no aggregate. One row per document: doc_id is the
+    documents key (``gen_scale_corpus`` writes ``range(n)``)."""
+    return _doc_tokens(spark, sf_dir).select("doc_id", F.array_distinct(F.expr(_SHINGLES)).alias("shingles"))
 
 
 # DuckDB list slices are INCLUSIVE: tk[i:i+K-1] is K tokens; the range
@@ -131,15 +140,38 @@ _MINHASH_AB = [((2654435761 * (j + 1)) % _MINHASH_P or 1, (40503 * (j + 7)) % _M
 _H30 = 1 << 30
 
 
+def _h30(shingle):
+    """The 30-bit base hash of a shingle: its md5's first 15 hex digits mod 2^30."""
+    return F.conv(F.substring(F.md5(shingle), 1, 15), 16, 10).cast("long") % _H30
+
+
+def _universal_hash(a: int, b: int):
+    """mh_j of one base hash ``h``: (a·h + b) mod P."""
+    return lambda h: (F.lit(a) * h + F.lit(b)) % _MINHASH_P
+
+
 def _minhash_signature(shingles: DataFrame) -> DataFrame:
     """doc_id + mh0..mh{N-1}: integer minhash signature."""
-    h30 = (F.conv(F.expr("substring(md5(shingle), 1, 15)"), 16, 10).cast("long") % _H30).alias("h30")
-    based = shingles.select("doc_id", h30)
+    based = shingles.select("doc_id", _h30(F.col("shingle")).alias("h30"))
     aggs = [
-        F.min((F.lit(a) * F.col("h30") + F.lit(b)) % _MINHASH_P).alias(f"mh{j}")
+        F.min(_universal_hash(a, b)(F.col("h30"))).alias(f"mh{j}")
         for j, (a, b) in enumerate(_MINHASH_AB)
     ]
     return based.groupBy("doc_id").agg(*aggs)
+
+
+def _set_signature(sets: DataFrame) -> DataFrame:
+    """``_minhash_signature`` of ``_doc_shingle_sets``, per row: mh_j is
+    the ``array_min`` of the universal hash over the set's base hashes,
+    the same values with no explode and no aggregate."""
+    based = sets.select("doc_id", F.transform("shingles", _h30).alias("h30"))
+    return based.select(
+        "doc_id",
+        *[
+            F.array_min(F.transform("h30", _universal_hash(a, b))).alias(f"mh{j}")
+            for j, (a, b) in enumerate(_MINHASH_AB)
+        ],
+    )
 
 
 _SQL_SIGNATURE = (
@@ -180,10 +212,9 @@ def _sql_band_table() -> str:
     return " UNION ALL ".join(parts)
 
 
-def _candidate_pairs(spark: SparkSession, sf_dir: str, shingles: DataFrame | None = None) -> DataFrame:
+def _candidate_pairs(spark: SparkSession, sf_dir: str, sig: DataFrame | None = None) -> DataFrame:
     """LSH candidates: distinct (a_id < b_id) sharing any band bucket."""
-    sig = _minhash_signature(shingles if shingles is not None else _doc_shingles(spark, sf_dir))
-    bt = _band_table(sig)
+    bt = _band_table(sig if sig is not None else _minhash_signature(_doc_shingles(spark, sf_dir)))
     a = bt.alias("a")
     b = bt.alias("b")
     return (
@@ -243,30 +274,26 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The shingle table feeds three branches (signature, sizes, verify
-    # join). All three consume the output of the same distinct() exchange,
-    # which Spark deduplicates (ReusedExchange / AQE stage reuse): one
-    # shuffle write, three shuffle reads. No persist() — an explicit cache
-    # here would outlive the query in a long-lived session (VERDICT r3 #1),
-    # and exchange reuse gives the same single-computation guarantee with
-    # lineage intact (executor loss recomputes; a localCheckpoint would not).
-    sh = _doc_shingles(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    cand = _candidate_pairs(spark, sf_dir, shingles=sh)
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        cand.join(a, F.col("a.doc_id") == F.col("a_id"))
-        .join(b, (F.col("b.doc_id") == F.col("b_id")) & (F.col("b.shingle") == F.col("a.shingle")))
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    jac = F.col("n_inter").cast("double") / (F.col("sa.n") + F.col("sb.n") - F.col("n_inter"))
+    # Every branch reads per-document shingle SETS, one array per doc:
+    # the signature is an array_min per row, |A| is size(), and |A ∩ B|
+    # is size(array_intersect) per candidate pair (a pair sharing no
+    # shingle scores 0 and is dropped, as the oracle's inner join drops
+    # it). The doc_id-hashed spread is the only shuffle. Without the
+    # sets, the spread leaves no exchange after the shingle explode to
+    # reuse, so each branch (both sides of the band self-join, both
+    # verify sides, the sizes) re-ran the explode and its distinct
+    # aggregate, and the op's CPU time grew by half and spread twice as
+    # wide. No persist() — an explicit cache would outlive the query in
+    # a long-lived session (VERDICT r3 #1).
+    sets = _doc_shingle_sets(spark, sf_dir)
+    cand = _candidate_pairs(spark, sf_dir, sig=_set_signature(sets))
+    a = sets.alias("a")
+    b = sets.alias("b")
+    n_inter = F.size(F.array_intersect("a.shingles", "b.shingles"))
+    jac = n_inter.cast("double") / (F.size("a.shingles") + F.size("b.shingles") - n_inter)
     return (
-        inter.join(sa, F.col("sa.doc_id") == F.col("a_id"))
-        .join(sb, F.col("sb.doc_id") == F.col("b_id"))
+        cand.join(a, F.col("a.doc_id") == F.col("a_id"))
+        .join(b, F.col("b.doc_id") == F.col("b_id"))
         .select("a_id", "b_id", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )

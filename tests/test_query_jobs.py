@@ -25,11 +25,13 @@ def _executed_plan(df) -> str:
 
 def test_query_job_budget(spark, sf_dir):
     """The doc_id-hashed spread takes the per-document exchanges out of
-    MinHash dedup and n-gram decontamination; footer schemas take the
-    inference job out of ``catalog.scan`` and the Hive-layout reads; q18
-    scans lineitem once."""
+    MinHash dedup and n-gram decontamination, and MinHash verification
+    reads per-document shingle sets, so the sizes and the verify sides
+    share one broadcast; footer schemas take the inference job out of
+    ``catalog.scan`` and the Hive-layout reads; q18 scans lineitem
+    once."""
     budget = {
-        "dedup_minhash_verified": 6,
+        "dedup_minhash_verified": 4,
         "decontam_ngram_overlap": 5,
         "scan_projection": 1,
         "scan_partition_dynamic": 4,
