@@ -278,13 +278,12 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the signature is an array_min per row, |A| is size(), and |A ∩ B|
     # is size(array_intersect) per candidate pair (a pair sharing no
     # shingle scores 0 and is dropped, as the oracle's inner join drops
-    # it). The doc_id-hashed spread is the only shuffle. Without the
-    # sets, the spread leaves no exchange after the shingle explode to
-    # reuse, so each branch (both sides of the band self-join, both
-    # verify sides, the sizes) re-ran the explode and its distinct
-    # aggregate, and the op's CPU time grew by half and spread twice as
-    # wide. No persist() — an explicit cache would outlive the query in
-    # a long-lived session (VERDICT r3 #1).
+    # it). The doc_id-hashed spread is the only shuffle, so there is no
+    # exchange above it for the branches to reuse: each branch Spark
+    # runs separately (both sides of the band self-join, the verify
+    # broadcast) repeats only per-row array work, never an explode and
+    # its distinct aggregate. No persist() — an explicit cache would
+    # outlive the query in a long-lived session (VERDICT r3 #1).
     sets = _doc_shingle_sets(spark, sf_dir)
     cand = _candidate_pairs(spark, sf_dir, sig=_set_signature(sets))
     a = sets.alias("a")
