@@ -12,8 +12,9 @@ ArgodbMapreduceRecordReader.java:172-198).
   :func:`parts_of_file`: directory branch to typed partition value;
   :func:`segment_of` finds the segment that holds a file.
 * **Paths and deletion vectors.** :func:`local_path` turns a
-  ``_metadata.file_path`` into a filesystem path; :func:`dv_positions`
-  reads a DV sidecar with pyarrow; :func:`segment_files` lists a
+  ``_metadata.file_path`` into a filesystem path; :func:`dv_rows`
+  reads a DV sidecar with pyarrow and :func:`dv_positions` keys it by
+  local path; :func:`segment_files` lists a
   segment's files with their partition values.
 * **Versions and the change feed.** :func:`entry_at` resolves a version
   (or the head) to its manifest entry. :func:`change_legs` is the one
@@ -275,9 +276,10 @@ def local_path(fp: str) -> str:
     return unquote(fp)
 
 
-def dv_positions(path: str, dv_name: str) -> dict:
-    """{local file path -> sorted tuple of deleted row positions} for
-    one deletion-vector sidecar, read with pyarrow (DVs are O(deleted
+def dv_rows(path: str, dv_name: str) -> dict:
+    """{``_metadata.file_path`` as the sidecar recorded it (scheme-prefixed,
+    percent-encoded) -> sorted tuple of deleted row positions} for one
+    deletion-vector sidecar, read with pyarrow (DVs are O(deleted
     rows)); {} for no DV."""
     import pyarrow.parquet as pq
 
@@ -289,7 +291,15 @@ def dv_positions(path: str, dv_name: str) -> dict:
         for fp, ri in zip(
             t.column("file_path").to_pylist(), t.column("row_index").to_pylist()
         ):
-            per_file.setdefault(local_path(fp), set()).add(ri)
+            per_file.setdefault(fp, set()).add(ri)
+    return {fp: tuple(sorted(s)) for fp, s in per_file.items()}
+
+
+def dv_positions(path: str, dv_name: str) -> dict:
+    """:func:`dv_rows` keyed by local file path."""
+    per_file: dict = {}
+    for fp, pos in dv_rows(path, dv_name).items():
+        per_file.setdefault(local_path(fp), set()).update(pos)
     return {fp: tuple(sorted(s)) for fp, s in per_file.items()}
 
 

@@ -69,7 +69,12 @@ from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from argodb_mapreduce_spark.catalog import fixture_stale, load_table, table_path
+from argodb_mapreduce_spark.catalog import (
+    fixture_stale,
+    load_table,
+    read_parquet,
+    table_path,
+)
 from argodb_mapreduce_spark.sources import manifest_log, table_meta
 from argodb_mapreduce_spark.sources.table_meta import (
     KEYS_SIDECAR,
@@ -355,7 +360,8 @@ def build_segment_bloom(spark: SparkSession, seg_path: str, columns) -> dict:
 
     import numpy as np
 
-    seg = spark.read.parquet(seg_path)
+    # Footer schema: the segment was just written, no inference job.
+    seg = read_parquet(spark, seg_path)
     out: dict[str, dict] = {}
     # Canonical-form guard: the build hashes Spark's cast-to-string form
     # and the probe hashes Python str(value); these agree for integers
@@ -437,7 +443,7 @@ def build_grouped_blooms(
 
     import numpy as np
 
-    seg = spark.read.parquet(staged_root)
+    seg = read_parquet(spark, staged_root)
     allowed = ("tinyint", "smallint", "int", "bigint", "string")
     types = {f.name: f.dataType.simpleString() for f in seg.schema.fields}
     if types.get(col) not in allowed:
@@ -2189,7 +2195,7 @@ def snapshot_read(
             columns=read_cols,
         )
         if dv_name:
-            df = _anti_join_dv(spark, path, dv_name, df).drop("__fp", "__ri")
+            df = _dv_filter(spark, path, dv_name, df).drop("__fp", "__ri")
     out = _to_logical_frame(_apply_predicates(df, predicates), cmap)
     if columns is not None:
         out = out.select(*columns)
@@ -2881,19 +2887,54 @@ def _read_dv(spark: SparkSession, path: str, dv_name: str) -> DataFrame:
     )
 
 
-def _anti_join_dv(
-    spark: SparkSession, path: str, dv_name: str, probe: DataFrame
+#: The largest deletion vector, by its footer row count, that a read
+#: applies as a literal row mask: read on the driver with pyarrow and
+#: tested in the scan's own filter, it adds no job. A larger one is
+#: broadcast, which is one job. The crossover run that sets it, on a
+#: 200k-row, 40-file scan, is in CHANGES.md.
+_DV_MASK_ROWS = 200
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _dv_filter(
+    spark: SparkSession, path: str, dv_name: str, probe: DataFrame,
+    keep: bool = False, less: str | None = None,
 ) -> DataFrame:
-    """Merge-on-read: anti-join a position-carrying scan (``__fp``/
-    ``__ri`` from :func:`_read_segment_dirs` ``with_pos``) against the
-    version's deletion vector on (file, row position). The DV is tiny
-    relative to the data (it lists deleted positions only), so it is
-    broadcast — the same asymmetry Delta's DV reader exploits; no
-    shuffle of the fact side. Keeps ``__fp``/``__ri`` on the result for
-    callers that need them (DELETE's matched-position harvest)."""
-    dv = _read_dv(spark, path, dv_name).select("file_path", "row_index")
+    """Merge-on-read: the rows of a position-carrying scan (``__fp``/
+    ``__ri`` from :func:`_read_segment_dirs` ``with_pos``) whose (file,
+    row position) is not in the deletion vector ``dv_name``, or with
+    ``keep`` only those that are. ``less`` names a DV whose positions
+    are taken out of ``dv_name``'s first: the change feed's DV delta.
+    Positions match on Spark's own ``_metadata.file_path`` strings, the
+    raw form the sidecar recorded.
+
+    A DV of at most :data:`_DV_MASK_ROWS` rows (footer count) is read on
+    the driver and becomes one ``named_struct(__fp, __ri) IN (...)``
+    filter over literals, which Spark evaluates as a set lookup: no job,
+    and a per-row cost that does not grow with the number of DV'd
+    files. A larger DV is broadcast, the asymmetry Delta's DV reader
+    exploits: no shuffle of the fact side. Keeps ``__fp``/``__ri`` on
+    the result for callers that need them (DELETE's position harvest)."""
+    if _dir_num_rows(os.path.join(path, dv_name)) <= _DV_MASK_ROWS:
+        gone = table_meta.dv_rows(path, less)
+        lits = [
+            f"named_struct('f', {_sql_str(fp)}, 'r', {ri}L)"
+            for fp, pos in sorted(table_meta.dv_rows(path, dv_name).items())
+            for ri in sorted(set(pos) - set(gone.get(fp, ())))
+        ]
+        if not lits:
+            return probe.filter(F.lit(False)) if keep else probe
+        hit = F.expr(f"named_struct('f', `__fp`, 'r', `__ri`) IN ({', '.join(lits)})")
+        return probe.filter(hit if keep else ~hit)
+    dv = _read_dv(spark, path, dv_name)
+    if less:
+        dv = dv.join(_read_dv(spark, path, less), ["file_path", "row_index"], "left_anti")
     cond = (probe["__fp"] == dv["file_path"]) & (probe["__ri"] == dv["row_index"])
-    return probe.join(F.broadcast(dv), cond, "left_anti")
+    return probe.join(F.broadcast(dv), cond, "left_semi" if keep else "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -2926,7 +2967,7 @@ def _read_live(
         predicates=predicates,
     )
     if dv_name:
-        df = _anti_join_dv(spark, path, dv_name, df)
+        df = _dv_filter(spark, path, dv_name, df)
         if not keep_pos:
             df = df.drop("__fp", "__ri")
     return df
@@ -3366,33 +3407,15 @@ def diff_keys(
     shared = set(sa) & set(sb)
     touched: set = set()
     if shared and ea.get("dv") != eb.get("dv"):
-        # DV symmetric difference → owning shared segments. Positions
-        # in one DV but not the other mean the segment's live set
-        # changed (delete or resurrection) — it must be compared.
-        def _dv_df(entry):
-            if not entry.get("dv"):
-                return None
-            return _read_dv(spark, path, entry["dv"])
-
-        da, db = _dv_df(ea), _dv_df(eb)
-        if da is None:
-            delta = db
-        elif db is None:
-            delta = da
-        else:
-            pos = ["file_path", "row_index"]
-            delta = da.join(db, pos, "left_anti").unionAll(
-                db.join(da, pos, "left_anti")
-            )
-        # metadata-collect: O(changed files) distinct DV'd paths — the
-        # prune's own bound (annotated; never O(rows)).
-        abs_root = os.path.abspath(path)
-        for r in delta.select("file_path").distinct().collect():
-            fp = table_meta.local_path(r[0])
-            for seg in shared:
-                if fp.startswith(os.path.join(abs_root, seg) + os.sep):
-                    touched.add(seg)
-                    break
+        # DV symmetric difference → owning shared segments, per file on
+        # the driver (DVs are O(deleted rows)). A file whose positions
+        # differ between the DVs had its live set changed (delete or
+        # resurrection): its segment must be compared.
+        da, db = (table_meta.dv_positions(path, e.get("dv")) for e in (ea, eb))
+        for fp in da.keys() | db.keys():
+            seg = table_meta.segment_of(path, eb, fp)
+            if seg in shared and da.get(fp) != db.get(fp):
+                touched.add(seg)
     changed_a = [s for s in sa if s not in shared or s in touched]
     changed_b = [s for s in sb if s not in shared or s in touched]
 
@@ -4428,43 +4451,20 @@ def delete_where(
         return latest["version"], 0
     # Rows erased by the drop: footer row counts of the dropped
     # segments minus their already-tombstoned rows (footer + sidecar
-    # metadata only — the drop never scans data).
-    n_dropped_rows = 0
+    # metadata only — the drop never scans data). DV paths are
+    # localized and owned by directory ancestry, so a table path with
+    # URI-encodable characters, or a parent directory named like a
+    # segment, counts exactly.
+    n_dropped_rows = sum(
+        _segment_file_metrics_keyless(os.path.join(path, seg))["num_rows"]
+        for seg in full
+    )
     if full:
-        for seg in full:
-            n_dropped_rows += _segment_file_metrics_keyless(
-                os.path.join(path, seg)
-            )["num_rows"]
-        if latest.get("dv"):
-            # Anchor on the ABSOLUTE segment root, not a bare "/{seg}/"
-            # substring: a parent directory that happens to be named
-            # like a segment (e.g. a table living under .../data-0/...)
-            # would otherwise match EVERY DV row and skew rows_deleted.
-            # DV file_path values are Spark's _metadata.file_path —
-            # scheme-prefixed AND percent-encoded (a space is %20) —
-            # so decode JVM-side before the prefix match or any table
-            # path with URI-encodable characters silently never matches.
-            abs_root = os.path.abspath(path)
-            # try_url_decode, not url_decode: a literal '%' not followed
-            # by valid hex is LEGAL in a filename; url_decode would throw
-            # at runtime and fail the whole DELETE — and the raw-path OR
-            # branch below never helps because both sides of an OR are
-            # evaluated. try_ returns NULL on malformed input, so the
-            # raw branch remains a real fallback.
-            decoded = F.try_url_decode(F.col("file_path"))
-            in_dropped = None
-            for seg in full:
-                root = os.path.join(abs_root, seg) + "/"
-                # Raw OR decoded: url_decode handles %XX paths; the raw
-                # form covers a literal '+' (URLDecoder would turn it
-                # into a space, Python's unquote would not).
-                c = F.col("file_path").contains(root) | decoded.contains(root)
-                in_dropped = c if in_dropped is None else (in_dropped | c)
-            n_dropped_rows -= (
-                _read_dv(spark, path, latest["dv"])
-                .filter(in_dropped)
-                .count()
-            )
+        n_dropped_rows -= sum(
+            len(pos)
+            for fp, pos in table_meta.dv_positions(path, latest.get("dv")).items()
+            if table_meta.segment_of(path, latest, fp) in full
+        )
     surviving = [seg for seg in latest["segments"] if seg not in full]
     entry = {
         "version": version,
@@ -5437,7 +5437,8 @@ def _build_delete_fixture(spark: SparkSession, sf_dir: str) -> str:
 def snapshot_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: the DELETE itself reads only min/max-surviving segments
     and writes O(matched rows) sidecar bytes; every subsequent read
-    broadcasts the DV (no fact-side shuffle). Deleting 0.1% of a 100 TB
+    masks the DV (a literal filter when small, a broadcast when large;
+    never a fact-side shuffle). Deleting 0.1% of a 100 TB
     table costs megabytes, not a terabyte rewrite."""
     out = _build_delete_fixture(spark, sf_dir)
     entries = _read_manifest(out)
@@ -5666,9 +5667,10 @@ def change_feed(
       segment read through a deletion vector only when the plan found
       tombstones in it (a restore re-adding a segment);
     * a deletion-vector change reads ONLY the files its positional
-      delta touches, semi-joined with the broadcast DV delta: new
-      tombstones are deletes, retracted ones (a restore past a DELETE)
-      inserts.
+      delta touches, filtered to the delta's positions by
+      :func:`_dv_filter` (a literal mask for a small DV, a broadcast
+      semi-join for a large one): new tombstones are deletes, retracted
+      ones (a restore past a DELETE) inserts.
 
     Maintenance commits (``data_change: false``: compact, bin-pack,
     z-order, purge's rewrite) emit nothing, Delta's OPTIMIZE-under-CDF
@@ -5698,14 +5700,6 @@ def change_feed(
         kind = "insert" if kind == "add" else kind
         groups.setdefault((v, kind), []).append((fp, pos))
 
-    def _dv(a: dict, b: dict) -> DataFrame:
-        """Positions in ``a``'s deletion vector but not in ``b``'s."""
-        delta = _read_dv(spark, path, a["dv"]).select("file_path", "row_index")
-        if b.get("dv"):
-            old = _read_dv(spark, path, b["dv"]).select("file_path", "row_index")
-            delta = delta.join(old, ["file_path", "row_index"], "left_anti")
-        return delta
-
     frames = []
     for (v, kind), files in groups.items():
         cur, prev = by_version[v], prev_of[v]
@@ -5716,20 +5710,16 @@ def change_feed(
             frames.append(reader.parquet(os.path.join(path, cur["cdc"])))
             continue
         if kind in ("delete", "revive"):
-            # Position join on Spark's own _metadata.file_path strings
-            # (percent-encoded on both sides), bounded to the planned
-            # files; the DV delta is tiny, so it is broadcast.
-            delta = _dv(cur, prev) if kind == "delete" else _dv(prev, cur)
+            # The planned files' rows at the DV delta's positions: new
+            # tombstones, or retracted ones for a revive.
+            a, b = (cur, prev) if kind == "delete" else (prev, cur)
             probe = _read_files_with_layout(
                 spark, path, entry, [fp for fp, _pos in files],
                 encryption_key=encryption_key,
             )
-            cond = (probe["__fp"] == delta["file_path"]) & (
-                probe["__ri"] == delta["row_index"]
-            )
-            df = probe.join(F.broadcast(delta), cond, "left_semi").drop(
-                "__fp", "__ri"
-            )
+            df = _dv_filter(
+                spark, path, a["dv"], probe, keep=True, less=b.get("dv")
+            ).drop("__fp", "__ri")
         else:
             segs = sorted(
                 {table_meta.segment_of(path, entry, fp) for fp, _pos in files}
@@ -5874,8 +5864,8 @@ def _build_cdf_fixture(spark: SparkSession, sf_dir: str) -> str:
         "range), the feed emits the three appended segments' rows as "
         "inserts by scanning ONLY those segments (no join against the "
         "base) and recovers the deleted rows by reading ONLY the files "
-        "the DV delta references, position-joined against the "
-        "broadcast delta — proven segment-bounded by the oracle-pinned "
+        "the DV delta references, position-filtered by the delta — "
+        "proven segment-bounded by the oracle-pinned "
         "flag (every file the delete scan touched lives in the one "
         "segment containing the deleted date range). Overwrite/rollback "
         "transitions synthesize file-level legs since r13 (see "
@@ -6759,7 +6749,7 @@ def _merge_upsert_on(
             encryption_key=encryption_key,
         )
         if dv_name:
-            tgt = _anti_join_dv(spark, path, dv_name, tgt)
+            tgt = _dv_filter(spark, path, dv_name, tgt)
         probe = tgt.select(F.col(key_col), F.col("__fp").alias("fp"))
         if key_vals is not None:
             hit = probe.filter(
@@ -7422,8 +7412,8 @@ def _build_dml_on_dv_fixture(spark: SparkSession, sf_dir: str) -> str:
 )
 def snapshot_update_on_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: same costs as the composing parts — the UPDATE rewrite
-    reads only stat-surviving segments through the broadcast DV
-    anti-join; nothing new materializes beyond the COW rewrite."""
+    reads only stat-surviving segments through the DV mask; nothing
+    new materializes beyond the COW rewrite."""
     out = _build_dml_on_dv_fixture(spark, sf_dir)
     df = snapshot_read(spark, out)
     return df.agg(

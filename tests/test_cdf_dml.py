@@ -221,8 +221,9 @@ def test_dml_iteration_job_budget(spark, tmp_path):
     pass. Metadata the store already holds costs no job: MERGE takes
     its touched files and matched keys from one collect, the change
     feed reads CDC sidecars and DV-probed files with recorded schemas,
-    and OPTIMIZE sizes its write from the scan without running the DV
-    broadcast. A verb that starts launching a job more fails here."""
+    and a DV this small is read on the driver and masked in the scan's
+    own filter, so no read through it broadcasts. A verb that starts
+    launching a job more fails here."""
     schema = "k long, g long, v long"
 
     def rows(keys):
@@ -241,8 +242,15 @@ def test_dml_iteration_job_budget(spark, tmp_path):
         "delete_keys": lambda: delete_keys(spark, p, delete_df, "k"),
         "update_where": lambda: update_where(spark, p, window, {"v": F.col("v") + 1}),
         "merge_upsert": lambda: merge_upsert(spark, p, merge_df, "k"),
+        "snapshot_read_point": lambda: snapshot_read(
+            spark, p, predicates=[("k", "=", 150)]
+        ).collect(),
+        "snapshot_read_full": lambda: snapshot_read(spark, p)
+        .agg(F.count("*"), F.sum("k"))
+        .collect(),
     }
     jobs = {verb: jobs_of(spark, run)[1] for verb, run in verbs.items()}
+    assert _read_manifest(p)[-1]["dv"]  # the reads went through a DV
     head = _read_manifest(p)[-1]["version"]
     feed, jobs["change_feed"] = jobs_of(
         spark,
@@ -252,10 +260,12 @@ def test_dml_iteration_job_budget(spark, tmp_path):
     assert jobs == {
         "append": 1,
         "delete_keys": 4,
-        "update_where": 4,
-        "merge_upsert": 10,
-        "change_feed": 2,
-        "compact": 2,
+        "update_where": 2,
+        "merge_upsert": 7,
+        "snapshot_read_point": 1,
+        "snapshot_read_full": 2,
+        "change_feed": 1,
+        "compact": 1,
     }
     # The budget holds with the results unchanged.
     assert Counter(change for change, _k in feed) == {

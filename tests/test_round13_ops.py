@@ -480,12 +480,14 @@ def test_restore_preserves_encryption_marker(spark, tmp_path):
     assert got.count() == 20
 
 
-def test_restore_synthesis_plan_broadcasts_dv_delta(spark, tmp_path):
+def test_restore_synthesis_plan_broadcasts_dv_delta(spark, tmp_path, monkeypatch):
     """Plan gate: the resurrection leg position-joins the touched files
     against a BROADCAST DV delta (left-semi) — never a shuffle of the
     fact side; and the feed plan scans only the touched files, not the
-    unchanged segments."""
+    unchanged segments. A DV this small is a literal mask with no join
+    at all, so the broadcast is forced by setting the mask size to 0."""
     from argodb_mapreduce_spark.plans.checks import explain_str, has_broadcast_join
+    from argodb_mapreduce_spark.sources import versioned as V
 
     p = _base(spark, tmp_path)  # v0: one segment
     versioned_write(
@@ -501,6 +503,10 @@ def test_restore_synthesis_plan_broadcasts_dv_delta(spark, tmp_path):
         spark, p, spark.range(0, 10).select(F.col("id").alias("k")), "k"
     )  # v2: DV touching segment 0 only
     rollback(p, 1)  # v3: resurrection (shared segments, DV retracted)
+    plan = explain_str(change_feed(spark, p, 2, 3))
+    assert "Join" not in plan and "Exchange" not in plan
+    assert "data-1" not in plan
+    monkeypatch.setattr(V, "_DV_MASK_ROWS", 0)
     feed = change_feed(spark, p, 2, 3)
     assert has_broadcast_join(feed)
     plan = explain_str(feed)
